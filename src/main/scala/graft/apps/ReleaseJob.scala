@@ -171,71 +171,96 @@ object ReleaseJob {
     * Every artifact's CONTENT comes out of a distributed plan; the
     * single-file names are the coalesce(1) publish step (release
     * artifacts are panel/clinical-scale, orders smaller than the input).
+    *
+    * The data artifacts and the id collects are independent (each
+    * writes its own path or returns its own ids, none prints), so they
+    * run as overlapped Spark actions ([[graft.core.Fan.overlap]]). The
+    * fixed five case lists, the meta files, the manifest walk and the
+    * data guide then run on the caller thread in a fixed order, after
+    * every overlapped write has landed. File contents do not depend on
+    * which action finishes first.
     */
   def writeFullRelease(in: FullReleaseInputs, baseDir: String, studyId: String,
                        genieVersion: String, public: Boolean = false): Seq[String] = {
     import graft.sources.Tsv
     val (releaseDir, caseListsDir) = CbioSinks.releaseFolderLayout(baseDir, genieVersion)
+    def ids(df: DataFrame): Seq[String] = df.collect().map(_.getString(0)).toSeq
+    def write(df: => DataFrame, name: String): () => Seq[String] =
+      () => { Tsv.writeSingle(df, s"$releaseDir/$name"); Nil }
+    def clinicalFile(df: DataFrame, headers: Map[String, CbioSinks.ClinicalHeader],
+                     name: String): () => Seq[String] =
+      () => { CbioSinks.writeClinical(df, headers, s"$releaseDir/$name"); Nil }
 
-    // ---- clinical trio (database_to_staging.py:1358-1392) ----
-    CbioSinks.writeClinical(in.clinicalSample,
-      Map("SAMPLE_ID" -> CbioSinks.ClinicalHeader("Sample Identifier", "A unique sample identifier", "STRING"),
-        "PATIENT_ID" -> CbioSinks.ClinicalHeader("Patient Identifier", "A unique patient identifier", "STRING")),
-      s"$releaseDir/data_clinical_sample.txt")
-    CbioSinks.writeClinical(in.clinicalPatient,
-      Map("PATIENT_ID" -> CbioSinks.ClinicalHeader("Patient Identifier", "A unique patient identifier", "STRING")),
-      s"$releaseDir/data_clinical_patient.txt")
-    if (!public)
-      Tsv.writeSingle(
-        in.clinicalSample.join(in.clinicalPatient, Seq("PATIENT_ID"), "left"),
-        s"$releaseDir/data_clinical.txt")
+    // ---- the ids of the fixed case lists; the CNA thunk also writes
+    // data_CNA.txt, whose matrix columns are the cna ids (panel-scale) ----
+    val idThunks = Seq[() => Seq[String]](
+      () => {
+        val cnaSampleIds = ids(in.cnaLong.select("SAMPLE_ID").distinct().orderBy("SAMPLE_ID"))
+        Tsv.writeSingle(graft.formats.CnaFormat.toWide(in.cnaLong, cnaSampleIds),
+          s"$releaseDir/data_CNA.txt", naToken = "NA")
+        cnaSampleIds
+      },
+      () => ids(in.clinicalSample.select("SAMPLE_ID").distinct()),
+      () => ids(in.maf.select(col("TUMOR_SAMPLE_BARCODE").as("SAMPLE_ID")).distinct()
+        .join(broadcast(in.clinicalSample.select("SAMPLE_ID").distinct()), Seq("SAMPLE_ID"), "left_semi")),
+      () => ids(in.sv.select("SAMPLE_ID").distinct()))
 
-    // ---- genomic artifacts ----
-    Tsv.writeSingle(in.maf, s"$releaseDir/data_mutations_extended.txt")
-    val cnaSampleIds = in.cnaLong.select("SAMPLE_ID").distinct()
-      .orderBy("SAMPLE_ID").collect().map(_.getString(0)).toSeq // matrix columns: panel-scale
-    Tsv.writeSingle(graft.formats.CnaFormat.toWide(in.cnaLong, cnaSampleIds),
-      s"$releaseDir/data_CNA.txt", naToken = "NA")
-    Tsv.writeSingle(in.seg, s"$releaseDir/data_cna_hg19.seg")
-    Tsv.writeSingle(in.sv, s"$releaseDir/data_sv.txt")
-    val gm = geneMatrix(in.clinicalSample,
-      in.cnaLong.select("SAMPLE_ID"), in.sv.select("SAMPLE_ID"))
-    Tsv.writeSingle(gm, s"$releaseDir/data_gene_matrix.txt")
-    Tsv.writeSingle(in.assayInfo, s"$releaseDir/assay_information.txt")
-    Tsv.writeSingle(in.bed, s"$releaseDir/genomic_information.txt")
+    val writes = Seq[() => Seq[String]](
+      // ---- clinical trio (database_to_staging.py:1358-1392) ----
+      clinicalFile(in.clinicalSample,
+        Map("SAMPLE_ID" -> CbioSinks.ClinicalHeader("Sample Identifier", "A unique sample identifier", "STRING"),
+          "PATIENT_ID" -> CbioSinks.ClinicalHeader("Patient Identifier", "A unique patient identifier", "STRING")),
+        "data_clinical_sample.txt"),
+      clinicalFile(in.clinicalPatient,
+        Map("PATIENT_ID" -> CbioSinks.ClinicalHeader("Patient Identifier", "A unique patient identifier", "STRING")),
+        "data_clinical_patient.txt")) ++
+      (if (public) Nil
+       else Seq(write(in.clinicalSample.join(in.clinicalPatient, Seq("PATIENT_ID"), "left"),
+         "data_clinical.txt"))) ++
+      Seq(
+        // ---- genomic artifacts ----
+        write(in.maf, "data_mutations_extended.txt"),
+        write(in.seg, "data_cna_hg19.seg"),
+        write(in.sv, "data_sv.txt"),
+        write(geneMatrix(in.clinicalSample,
+          in.cnaLong.select("SAMPLE_ID"), in.sv.select("SAMPLE_ID")), "data_gene_matrix.txt"),
+        write(in.assayInfo, "assay_information.txt"),
+        write(in.bed, "genomic_information.txt"),
+        // ---- case lists per cancer type ----
+        () => {
+          CbioSinks.writeCaseLists(in.clinicalSample, "CANCER_TYPE", "SAMPLE_ID",
+            studyId, caseListsDir)
+          Nil
+        },
+        // ---- per-assay gene panels (store_gene_panel_files,
+        // database_to_staging.py:809-845): one groupBy pass, tiny output ----
+        () => {
+          in.bed
+            .groupBy("SEQ_ASSAY_ID")
+            .agg(sort_array(collect_set(graft.sources.Bed.cleanSymbol(col("HUGO_SYMBOL")))).as("genes"))
+            .collect()
+            .foreach { r =>
+              val assay = r.getString(0)
+              val genes = r.getAs[scala.collection.Seq[String]]("genes")
+              val content = s"stable_id: $assay\ndescription: ${genes.length} genes\n" +
+                s"gene_list: ${genes.mkString("\t")}\n"
+              java.nio.file.Files.write(
+                java.nio.file.Paths.get(s"$releaseDir/data_gene_panel_$assay.txt"),
+                content.getBytes("UTF-8"))
+            }
+          Nil
+        })
 
-    // ---- case lists: per cancer type + the fixed five ----
-    CbioSinks.writeCaseLists(in.clinicalSample, "CANCER_TYPE", "SAMPLE_ID",
-      studyId, caseListsDir)
-    val allIds = in.clinicalSample.select("SAMPLE_ID").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val seqIds = in.maf.select(col("TUMOR_SAMPLE_BARCODE").as("SAMPLE_ID")).distinct()
-      .join(broadcast(in.clinicalSample.select("SAMPLE_ID").distinct()), Seq("SAMPLE_ID"), "left_semi")
-      .collect().map(_.getString(0)).toSeq
-    val cnaIds = cnaSampleIds
-    val svIds = in.sv.select("SAMPLE_ID").distinct().collect().map(_.getString(0)).toSeq
+    val Seq(cnaIds, allIds, seqIds, svIds) =
+      graft.core.Fan.overlap(idThunks ++ writes).take(idThunks.size)
+
+    // ---- the fixed five case lists (create_case_lists.py:144-247) ----
     CbioSinks.writeCaseList(allIds, "all", "All samples", studyId, caseListsDir)
     CbioSinks.writeCaseList(seqIds, "sequenced", "Sequenced Tumors", studyId, caseListsDir)
     CbioSinks.writeCaseList(cnaIds, "cna", "Samples with CNA data", studyId, caseListsDir)
     CbioSinks.writeCaseList(svIds, "sv", "Samples with SV data", studyId, caseListsDir)
     CbioSinks.writeCaseList(cnaIds.intersect(seqIds), "cnaseq",
       "Samples with CNA and mutation data", studyId, caseListsDir)
-
-    // ---- per-assay gene panels (store_gene_panel_files,
-    // database_to_staging.py:809-845): one groupBy pass, tiny output ----
-    val panelRows = in.bed
-      .groupBy("SEQ_ASSAY_ID")
-      .agg(sort_array(collect_set(graft.sources.Bed.cleanSymbol(col("HUGO_SYMBOL")))).as("genes"))
-      .collect()
-    panelRows.foreach { r =>
-      val assay = r.getString(0)
-      val genes = r.getAs[scala.collection.Seq[String]]("genes")
-      val content = s"stable_id: $assay\ndescription: ${genes.length} genes\n" +
-        s"gene_list: ${genes.mkString("\t")}\n"
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$releaseDir/data_gene_panel_$assay.txt"),
-        content.getBytes("UTF-8"))
-    }
 
     // ---- meta files (database_to_staging.py:1960-2006) ----
     CbioSinks.writeMetaStudy(studyId, "GENIE-like", "Test cohort", genieVersion, releaseDir)

@@ -57,91 +57,79 @@ object ValidateCli {
   /** Validate every recognized file in `inputDir`; returns whether any
     * error-severity finding fired (the CLI's exit-code source). Split
     * from main() so specs can drive the full dispatch without sys.exit.
+    *
+    * Each check (the clinical sample/patient pair, then one per
+    * recognized file) is independent of the others, so they run as
+    * overlapped Spark actions ([[graft.core.Fan.overlap]]). A check
+    * does not print: it returns its finding lines, and this method
+    * prints them afterwards in a fixed order — clinical first, then
+    * the files in sorted-name order — so stdout does not depend on
+    * which check finishes first.
     */
   def run(spark: SparkSession, center: String, inputDir: String): Boolean = {
     val files = Files.list(Paths.get(inputDir)).iterator().asScala
       .map(_.toString).toSeq.sorted
-    var anyError = false
 
     val samplePath  = files.find(f => fileType(Paths.get(f).getFileName.toString) == "clinical_sample")
     val patientPath = files.find(f => fileType(Paths.get(f).getFileName.toString) == "clinical_patient")
-    (samplePath, patientPath) match {
-      case (Some(sp), Some(pp)) =>
-        val res = ClinicalFormat.validate(
-          Tsv.readAllString(spark, sp), Tsv.readAllString(spark, pp), center)
-        res.findings.filter(_.count > 0).foreach { f =>
-          println(s"clinical ${f.severity} ${f.rule}: ${f.message}")
-        }
-        anyError ||= !res.isValid
-      case (Some(_), None) =>
-        println("clinical error missing_patient_file: sample file has no matching patient file")
-        anyError = true
-      case _ => ()
+    val clinical: Option[Check] = (samplePath, patientPath) match {
+      case (Some(sp), Some(pp)) => Some(() => report("clinical", ClinicalFormat.validate(
+        Tsv.readAllString(spark, sp), Tsv.readAllString(spark, pp), center)))
+      case (Some(_), None) => Some(() => (Seq(
+        "clinical error missing_patient_file: sample file has no matching patient file"), true))
+      case _ => None
     }
 
-    files.foreach { f =>
-      val name = Paths.get(f).getFileName.toString
-      fileType(name, center) match {
-        case "maf" =>
-          val res = MafFormat.validate(Maf.read(spark, f), center)
-          res.findings.filter(_.count > 0).foreach(x =>
-            println(s"$name ${x.severity} ${x.rule}: ${x.message}"))
-          anyError ||= !res.isValid
-        case "vcf" =>
-          try {
-            val res = Vcf.validate(Vcf.read(spark, f), center)
-            res.findings.filter(_.count > 0).foreach(x =>
-              println(s"$name ${x.severity} ${x.rule}: ${x.message}"))
-            anyError ||= !res.isValid
-          } catch {
-            case e: IllegalArgumentException =>
-              println(s"$name error not_vcf: ${e.getMessage}"); anyError = true
-          }
-        case "bed" =>
-          try Bed.read(spark, f).count()
-          catch {
-            case e: IllegalArgumentException =>
-              println(s"$name error bed_header: ${e.getMessage}"); anyError = true
-          }
-        case "seg" =>
-          val res = graft.formats.SegFormat.validate(Tsv.readAllString(spark, f), center)
-          res.findings.filter(_.count > 0).foreach(x =>
-            println(s"$name ${x.severity} ${x.rule}: ${x.message}"))
-          anyError ||= !res.isValid
-        case "assay" =>
-          val yamlText = new String(Files.readAllBytes(Paths.get(f)), "UTF-8")
-          val res = graft.formats.AssayFormat.validate(
-            graft.sources.Assay.parse(spark, yamlText), center)
-          res.findings.filter(_.count > 0).foreach(x =>
-            println(s"$name ${x.severity} ${x.rule}: ${x.message}"))
-          anyError ||= !res.isValid
-        case "cna" =>
-          val res = graft.formats.CnaFormat.validate(Tsv.readAllString(spark, f), center)
-          res.findings.filter(_.count > 0).foreach(x =>
-            println(s"$name ${x.severity} ${x.rule}: ${x.message}"))
-          anyError ||= !res.isValid
-        case "sv" =>
-          val res = graft.formats.SvFormat.validate(Tsv.readAllString(spark, f), center)
-          res.findings.filter(_.count > 0).foreach(x =>
-            println(s"$name ${x.severity} ${x.rule}: ${x.message}"))
-          anyError ||= !res.isValid
-        case "mutationsInCis" =>
-          // csv with '#' comment lines (mutationsInCis.py:24-29)
-          val df = spark.read.option("header", "true").option("comment", "#").csv(f)
-          val res = graft.formats.MutationsInCisFormat.validate(df, center)
-          res.findings.filter(_.count > 0).foreach(x =>
-            println(s"$name ${x.severity} ${x.rule}: ${x.message}"))
-          anyError ||= !res.isValid
-        case "sampleRetraction" | "patientRetraction" =>
-          // headerless single-column id list (S8); filename already
-          // carries the semantics, nothing else to validate
-          val n = spark.read.option("header", "false").csv(f).count()
-          println(s"$name info retraction_ids: $n ids to retract")
-        case "workflow" =>
-          println(s"$name info workflow: md passthrough")
-        case _ => ()
+    val results = graft.core.Fan.overlap(clinical.toSeq ++ files.flatMap(fileCheck(spark, center, _)))
+    results.foreach(_._1.foreach(println))
+    results.exists(_._2)
+  }
+
+  /** One independent check: its output lines and whether an error fired. */
+  private type Check = () => (Seq[String], Boolean)
+
+  private def report(label: String, res: graft.rules.ValidationResult): (Seq[String], Boolean) =
+    (res.findings.filter(_.count > 0).map(x => s"$label ${x.severity} ${x.rule}: ${x.message}"),
+      !res.isValid)
+
+  /** The check for one file, or None when its type has no validator. */
+  private def fileCheck(spark: SparkSession, center: String, f: String): Option[Check] = {
+    val name = Paths.get(f).getFileName.toString
+    def battery(res: => graft.rules.ValidationResult): Option[Check] = Some(() => report(name, res))
+    fileType(name, center) match {
+      case "maf" => battery(MafFormat.validate(Maf.read(spark, f), center))
+      case "vcf" => Some { () =>
+        try report(name, Vcf.validate(Vcf.read(spark, f), center))
+        catch {
+          case e: IllegalArgumentException => (Seq(s"$name error not_vcf: ${e.getMessage}"), true)
+        }
       }
+      case "bed" => Some { () =>
+        try { Bed.read(spark, f).count(); (Nil, false) }
+        catch {
+          case e: IllegalArgumentException => (Seq(s"$name error bed_header: ${e.getMessage}"), true)
+        }
+      }
+      case "seg" => battery(graft.formats.SegFormat.validate(Tsv.readAllString(spark, f), center))
+      case "assay" => battery {
+        val yamlText = new String(Files.readAllBytes(Paths.get(f)), "UTF-8")
+        graft.formats.AssayFormat.validate(graft.sources.Assay.parse(spark, yamlText), center)
+      }
+      case "cna" => battery(graft.formats.CnaFormat.validate(Tsv.readAllString(spark, f), center))
+      case "sv" => battery(graft.formats.SvFormat.validate(Tsv.readAllString(spark, f), center))
+      case "mutationsInCis" => battery {
+        // csv with '#' comment lines (mutationsInCis.py:24-29)
+        val df = spark.read.option("header", "true").option("comment", "#").csv(f)
+        graft.formats.MutationsInCisFormat.validate(df, center)
+      }
+      case "sampleRetraction" | "patientRetraction" => Some { () =>
+        // headerless single-column id list (S8); filename already
+        // carries the semantics, nothing else to validate
+        val n = spark.read.option("header", "false").csv(f).count()
+        (Seq(s"$name info retraction_ids: $n ids to retract"), false)
+      }
+      case "workflow" => Some(() => (Seq(s"$name info workflow: md passthrough"), false))
+      case _ => None
     }
-    anyError
   }
 }

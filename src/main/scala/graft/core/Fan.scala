@@ -78,11 +78,20 @@ object Fan {
   /** Overlap INDEPENDENT driver-side Spark actions (guide §2.6): Spark's
     * scheduler happily runs several jobs at once inside one application —
     * actions are only sequential because driver code calls them
-    * sequentially. For a set of builds/retracts over DISTINCT output
-    * paths (no shared mutable state, each action deterministic on its
-    * own inputs), submitting them from a small thread pool lets the next
-    * job's tasks back-fill executors freed by the current job's tail.
-    * Results are unchanged — only the wall clock moves.
+    * sequentially. For a set of builds/retracts/collects over DISTINCT
+    * output paths (no shared mutable state, each action deterministic on
+    * its own inputs), submitting them from a small thread pool lets the
+    * next job's planning and tasks back-fill the driver and executors
+    * freed by the current job's tail. Results are unchanged — only the
+    * wall clock moves.
+    *
+    * Contract: thunks write only their own outputs and do not print;
+    * anything order-sensitive (stdout lines, a manifest) is returned and
+    * emitted by the caller. Results come back in INPUT order whatever
+    * order the thunks finish in. A single thunk runs inline on the
+    * caller thread. Pool threads are created per call from the caller
+    * thread, so they inherit its inheritable thread-locals: the Spark
+    * local properties set on the caller and `Console.out`.
     *
     * Observability + failure semantics (guide §1.5 — job groups and
     * descriptions are thread-local): every thunk runs under a shared
@@ -93,8 +102,8 @@ object Fan {
     * the first failure is rethrown with later ones attached as
     * suppressed.
     */
-  def overlap(thunks: Seq[() => Unit], parallelism: Int = 4): Unit =
-    if (thunks.size <= 1) thunks.foreach(_.apply())
+  def overlap[T](thunks: Seq[() => T], parallelism: Int = 4): Seq[T] =
+    if (thunks.size <= 1) thunks.map(_.apply())
     else {
       val sc = org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
@@ -104,8 +113,8 @@ object Fan {
         math.min(parallelism, thunks.size))
       try {
         val futs = thunks.zipWithIndex.map { case (t, i) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = {
+          pool.submit(new java.util.concurrent.Callable[T] {
+            def call(): T = {
               sc.foreach(_.setJobGroup(group,
                 s"overlap ${i + 1}/${thunks.size}", interruptOnCancel = false))
               try t() finally sc.foreach(_.clearJobGroup())
@@ -113,8 +122,8 @@ object Fan {
           })
         }
         var firstFailure: Option[Throwable] = None
-        futs.foreach { f =>
-          try f.get()
+        val results = futs.map { f =>
+          try Some(f.get())
           catch {
             case e: Throwable =>
               val cause = e match {
@@ -131,9 +140,11 @@ object Fan {
                 case Some(ff) if ff ne cause => ff.addSuppressed(cause)
                 case _ => ()
               }
+              None
           }
         }
         firstFailure.foreach(throw _)
+        results.flatten
       } finally pool.shutdown()
     }
 }

@@ -61,9 +61,11 @@ object SegFormat {
         s"Your seg file is missing these headers: ${missing.mkString(", ")}."))
     if (missing.nonEmpty) ValidationResult(schemaFindings.toSeq)
     else {
-      val battery = Rules.Battery.run(seg, rowRules(center))
+      // the row count rides the battery's single aggregation
+      val (battery, extras) = Rules.Battery.runWithExtras(seg, rowRules(center),
+        Seq(count(lit(1)).as("n_rows")))
       // P14: exact duplicate rows
-      val dups = seg.count() - seg.dropDuplicates().count()
+      val dups = extras("n_rows").asInstanceOf[Long] - seg.dropDuplicates().count()
       ValidationResult(battery.findings :+
         Finding("duplicate_rows", "warning", dups, None, s"Seg: $dups duplicated rows"))
     }
@@ -82,11 +84,13 @@ object SvFormat {
     if (!sv.columns.map(_.toUpperCase).contains(idCol))
       return ValidationResult(Seq(Finding("missing_col_SAMPLE_ID", "error", 1, None,
         "SV: missing required column SAMPLE_ID")))
-    val battery = Rules.Battery.run(sv, Seq(
+    // the row count rides the battery's single aggregation
+    val (battery, extras) = Rules.Battery.runWithExtras(sv, Seq(
       RowRule("sample_id_prefix", "error",
         Rules.badIdentifier(col(idCol), s"GENIE-$center"), col(idCol),
-        s"SV: SAMPLE_ID must start with GENIE-$center ({count} rows, e.g. {example})")))
-    val dups = sv.count() - sv.dropDuplicates().count()
+        s"SV: SAMPLE_ID must start with GENIE-$center ({count} rows, e.g. {example})")),
+      Seq(count(lit(1)).as("n_rows")))
+    val dups = extras("n_rows").asInstanceOf[Long] - sv.dropDuplicates().count()
     ValidationResult(battery.findings :+
       Finding("duplicate_rows", "error", dups, None, s"SV: $dups duplicated rows"))
   }

@@ -141,11 +141,30 @@ class ReleaseJobSpec extends SparkSpec {
     assert(manifest.toSet == expectedFixed,
       s"manifest mismatch:\n missing=${expectedFixed -- manifest.toSet}\n extra=${manifest.toSet -- expectedFixed}")
     assert(manifest.distinct == manifest, "manifest must not repeat entries")
+    val releaseDir = s"$base/Release 15/15.1-consortium"
+    def snapshot(): Map[String, Seq[Byte]] = manifest.map { f =>
+      f -> java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$releaseDir/$f")).toSeq
+    }.toMap
+    val firstRun = snapshot()
     // re-release over the existing dir (a data-fix re-run) is
     // idempotent: the previous run's data_guide.md must not surface as
-    // a duplicate manifest entry
+    // a duplicate manifest entry, and every artifact is rewritten with
+    // the same bytes
     val manifest2 = ReleaseJob.writeFullRelease(full, base, "genie_test", "15.1-consortium")
     assert(manifest2 == manifest)
+    val secondRun = snapshot()
+    manifest.foreach(f => assert(secondRun(f) == firstRun(f), s"$f differs between runs"))
+
+    // the fixed case lists carry exactly the expected ids; cnaseq is
+    // the intersection of the cna and sequenced ids
+    def caseIds(slug: String): Seq[String] = new String(firstRun(s"case_lists/cases_$slug.txt").toArray, "UTF-8")
+      .linesIterator.collectFirst { case l if l.startsWith("case_list_ids: ") =>
+        l.stripPrefix("case_list_ids: ").split("\t").toSeq.filter(_.nonEmpty) }.get
+    assert(caseIds("all") == Seq("GENIE-C-p1-s1", "GENIE-C-p2-s2", "GENIE-C-p5-s5"))
+    assert(caseIds("sequenced") == Seq("GENIE-C-p1-s1", "GENIE-C-p2-s2"))
+    assert(caseIds("cna") == Seq("GENIE-C-p1-s1"))
+    assert(caseIds("sv") == Seq("GENIE-C-p2-s2"))
+    assert(caseIds("cnaseq") == Seq("GENIE-C-p1-s1"))
     // versioned layout: Release <major>/<version> (database_to_staging.py:2034-2125)
     assert(new java.io.File(s"$base/Release 15/15.1-consortium/data_clinical.txt").exists())
 

@@ -34,10 +34,13 @@ class ValidateCliSpec extends SparkSpec {
     assert(ValidateCli.fileType("random.bin", "C") == "unknown")
   }
 
-  test("run: full registry directory end-to-end, error files flagged") {
+  private def write(dir: String, name: String, text: String): Unit =
+    Files.writeString(Paths.get(dir, name), text)
+
+  /** One file of every registry type; the CNA file is deliberately broken. */
+  private def registryDir(): String = {
     val dir = tmpDir("validate-cli")
-    def write(name: String, text: String): Unit =
-      Files.writeString(Paths.get(dir, name), text)
+    def write(name: String, text: String): Unit = this.write(dir, name, text)
 
     write("data_clinical_supp_sample_C.txt",
       "SAMPLE_ID\tPATIENT_ID\tAGE_AT_SEQ_REPORT\tONCOTREE_CODE\tSAMPLE_TYPE\tSEQ_ASSAY_ID\n" +
@@ -87,13 +90,43 @@ class ValidateCliSpec extends SparkSpec {
     write("sampleRetraction.csv", "GENIE-C-p9-s9\n")
     write("patientRetraction.csv", "GENIE-C-p9\n")
     write("C_workflow.md", "# workflow\n")
+    dir
+  }
 
+  test("run: full registry directory end-to-end, error files flagged") {
+    val dir = registryDir()
     // the deliberately-broken CNA file must surface as an error
     assert(ValidateCli.run(spark, "C", dir))
 
     // with the CNA file fixed the directory passes clean
-    write("data_CNA_C.txt",
+    write(dir, "data_CNA_C.txt",
       "Hugo_Symbol\tGENIE-C-p1-s1\n" + "TP53\t1.0\n")
     assert(!ValidateCli.run(spark, "C", dir))
+  }
+
+  test("run: stdout is clinical first, then files in name order, byte-stable") {
+    val dir = registryDir()
+    // a clinical defect too, so the clinical lines lead the output
+    write(dir, "data_clinical_supp_sample_C.txt",
+      "SAMPLE_ID\tPATIENT_ID\tAGE_AT_SEQ_REPORT\tONCOTREE_CODE\tSAMPLE_TYPE\tSEQ_ASSAY_ID\n" +
+        "GENIE-C-p1-s1\tGENIE-C-p1\tabc\tLUAD\tPrimary\tC-A1\n")
+    def captured(): (Boolean, String) = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val anyError = Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+        ValidateCli.run(spark, "C", dir)
+      }
+      (anyError, buf.toString("UTF-8"))
+    }
+    val (anyError, out) = captured()
+    assert(anyError)
+    assert(out.linesIterator.toSeq == Seq(
+      "clinical error age_at_seq_report: Sample Clinical File: Please double check your " +
+        "AGE_AT_SEQ_REPORT. It must be an integer, 'Unknown', '>32485', '<6570'.",
+      "C_workflow.md info workflow: md passthrough",
+      "data_CNA_C.txt error first_column: Your cnv file's first column must be Hugo_Symbol",
+      "data_CNA_C.txt error sample_columns: cnv: samples must start with GENIE-C",
+      "patientRetraction.csv info retraction_ids: 1 ids to retract",
+      "sampleRetraction.csv info retraction_ids: 1 ids to retract"))
+    assert(captured() == ((anyError, out)), "two runs printed different bytes")
   }
 }
