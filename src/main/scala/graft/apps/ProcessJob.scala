@@ -1,7 +1,8 @@
 package graft.apps
 
+import java.io.OutputStream
 import java.nio.file.{Files, Paths}
-import java.security.MessageDigest
+import java.security.{DigestInputStream, MessageDigest}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -30,9 +31,12 @@ object ProcessJob {
 
   final case class FileStatus(name: String, md5: String, status: String)
 
+  /** Hex md5 of the file, streamed: uploads of 2 GiB and more hash too. */
   def md5Of(path: String): String = {
-    val d = MessageDigest.getInstance("MD5").digest(Files.readAllBytes(Paths.get(path)))
-    d.map("%02x".format(_)).mkString
+    val in = new DigestInputStream(Files.newInputStream(Paths.get(path)),
+      MessageDigest.getInstance("MD5"))
+    try in.transferTo(OutputStream.nullOutputStream()) finally in.close()
+    in.getMessageDigest.digest().map("%02x".format(_)).mkString
   }
 
   /** P30: duplicate-filename detection. */

@@ -10,9 +10,11 @@ import graft.sources.CbioSinks
 /** Consortium-release pipeline (SURVEY §3.3; reference
   * bin/database_to_staging.py → database_to_staging.py:1713-1956).
   *
-  * Every stage is a pure DataFrame transform; the reference's two R
+  * The filter stages are DataFrame transforms; the reference's two R
   * subprocesses (MAFinBED, mergeCheck) become a broadcast range-join
-  * and a window pass. Stage order matches run_genie_filters
+  * and a window pass. [[run]] then materializes the filtered clinical
+  * and MAF once, so every sink reads the result instead of re-running
+  * the chain. Stage order matches run_genie_filters
   * (database_to_staging.py:1074-1154):
   *
   *   1. MAFinBED (F3): variants must overlap their assay's padded BED
@@ -91,6 +93,20 @@ object ReleaseJob {
 
   /** Full release: returns filtered clinical + maf + the dropped-sample
     * audit table.
+    *
+    * Runs the chain eagerly, in two actions: the released clinical and
+    * then the final MAF (its F10 semi-join reads the clinical result)
+    * are each computed once with `localCheckpoint(eager = true)`. Every consumer (the
+    * release sinks, the dashboard, the public conversion) then scans a
+    * lineage-truncated result instead of re-planning and re-running
+    * F1-F10. `droppedSamples` stays lazy over the checkpointed clinical.
+    *
+    * A local checkpoint, not `persist()`: a cached plan keeps the
+    * chain's broadcast relations reachable, a checkpoint drops the plan.
+    * Its blocks are registered with the ContextCleaner and freed once
+    * the outputs are unreachable. They live on the executors only and
+    * cannot be recomputed if an executor is lost; every app runs
+    * `local[N]`, where the executor is the driver JVM.
     */
   def run(in: ReleaseInputs): ReleaseOutputs = {
     // 1-2. variant-level filters
@@ -111,10 +127,12 @@ object ReleaseJob {
       .filter(col("CANCER_TYPE").isNotNull) // F6: deprecated codes drop
       .withColumn("AGE_AT_SEQ_REPORT", Filters.daysToYears(col("AGE_AT_SEQ_REPORT")))
       .withColumn("BIRTH_YEAR", Filters.redactAge(col("BIRTH_YEAR")))
+      .localCheckpoint(eager = true)
 
     // F10: propagate the final keep list back to the MAF
     val keep = released.select(col("SAMPLE_ID").as("TUMOR_SAMPLE_BARCODE"))
     val mafFinal = mafClean.join(broadcast(keep), Seq("TUMOR_SAMPLE_BARCODE"), "left_semi")
+      .localCheckpoint(eager = true)
 
     val dropped = in.clinical.select("SAMPLE_ID")
       .except(released.select("SAMPLE_ID"))

@@ -37,17 +37,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * vanishing, or a second one appearing, both fail.
   */
 class ExecutedPlanLintSpec extends SparkSpec {
+  import ExecutedPlanLintSpec.allNodes
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val expanded = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a) ++ allNodes(a.executedPlan)
-      case s: QueryStageExec => Seq(s) ++ allNodes(s.plan)
-      case other => Seq(other)
-    }
-    expanded ++ p.children.flatMap(allNodes) ++ p.subqueries.flatMap(allNodes)
-  }
 
   private def leaves(p: SparkPlan): Seq[SparkPlan] =
     allNodes(p).filter(n => n.children.isEmpty &&
@@ -139,5 +131,18 @@ class ExecutedPlanLintSpec extends SparkSpec {
           s"(got ${captured.size} plans for ${SparkEntry.queries.size} queries)")
     } finally s.listenerManager.unregister(listener)
     assert(failures.isEmpty, "executed-plan lint violations:\n" + failures.mkString("\n"))
+  }
+}
+
+object ExecutedPlanLintSpec {
+  /** Every node of an executed plan: AQE final plans, query stages and
+    * subqueries included. */
+  def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val expanded = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a) ++ allNodes(a.executedPlan)
+      case s: QueryStageExec => Seq(s) ++ allNodes(s.plan)
+      case other => Seq(other)
+    }
+    expanded ++ p.children.flatMap(allNodes) ++ p.subqueries.flatMap(allNodes)
   }
 }

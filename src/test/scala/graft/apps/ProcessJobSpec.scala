@@ -237,6 +237,19 @@ class ProcessJobSpec extends SparkSpec {
     assert(ValidateCli.fileType("OTHER_workflow.md", "CTR") == "unknown")
   }
 
+  test("md5Of streams a multi-MB upload to the digest of its bytes") {
+    // 5 MiB + 17 bytes: not a multiple of any read buffer size
+    val bytes = new Array[Byte]((5 << 20) + 17)
+    new scala.util.Random(42).nextBytes(bytes)
+    val p = Paths.get(tmpDir("md5"), "data_mutations_extended_CTR.maf")
+    Files.write(p, bytes)
+    val expected = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+      .map("%02x".format(_)).mkString
+    assert(ProcessJob.md5Of(p.toString) == expected)
+    val empty = Files.write(p.resolveSibling("empty.txt"), Array.emptyByteArray)
+    assert(ProcessJob.md5Of(empty.toString) == "d41d8cd98f00b204e9800998ecf8427e")
+  }
+
   test("invalid upload does not reach the tables") {
     val dir = tmpDir("process-bad")
     Files.write(Paths.get(dir, "data_mutations_extended_CTR.maf"),

@@ -1,14 +1,24 @@
 package graft.apps
 
-import org.apache.spark.sql.functions._
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.graftbus.BusFlush
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.ExecutedPlanLintSpec.allNodes
 import graft.SparkSpec
 import graft.sources.Oncotree
 
 class ReleaseJobSpec extends SparkSpec {
   import spark.implicits._
 
-  private def inputs = {
+  private def inputs(s: SparkSession = spark) = {
+    import s.implicits._
     val clinical = Seq(
       // sample, patient, age days, oncotree, assay, birth year
       ("GENIE-C-p1-s1", "GENIE-C-p1", "12000", "LUAD", "C-A1", "1950"),
@@ -35,7 +45,7 @@ class ReleaseJobSpec extends SparkSpec {
 
     val padding = Seq(("C-A1", 10)).toDF("SEQ_ASSAY_ID", "GENE_PADDING")
 
-    val oncotree = Oncotree.toDataFrame(spark, Seq(
+    val oncotree = Oncotree.toDataFrame(s, Seq(
       Oncotree.Node("LUAD", "LUNG", "NSCLC", "Non-Small Cell Lung Cancer", "Lung Adenocarcinoma"),
       Oncotree.Node("NSCLC", "LUNG", "", "Non-Small Cell Lung Cancer", "NSCLC")))
 
@@ -45,8 +55,61 @@ class ReleaseJobSpec extends SparkSpec {
     ReleaseJob.ReleaseInputs(clinical, maf, bed, padding, oncotree, whitelist)
   }
 
+  /** Complete-release inputs over `out`, the genomic extras built in `s`. */
+  private def fullInputs(out: ReleaseJob.ReleaseOutputs,
+                         s: SparkSession = spark): ReleaseJob.FullReleaseInputs = {
+    import s.implicits._
+    val clinicalSample = out.clinical
+      .select("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "AGE_AT_SEQ_REPORT", "SEQ_ASSAY_ID")
+    val clinicalPatient = out.clinical
+      .select("PATIENT_ID", "BIRTH_YEAR").dropDuplicates("PATIENT_ID")
+    val cna = Seq(("TP53", "GENIE-C-p1-s1", 2.0), ("EGFR", "GENIE-C-p1-s1", -1.0))
+      .toDF("HUGO_SYMBOL", "SAMPLE_ID", "VALUE")
+    val seg = Seq(("GENIE-C-p1-s1", "1", 100L, 200L, 5, 0.25))
+      .toDF("ID", "CHROM", "LOC.START", "LOC.END", "NUM.MARK", "SEG.MEAN")
+    val sv = Seq(("GENIE-C-p2-s2", "SOMATIC")).toDF("SAMPLE_ID", "SV_STATUS")
+    val bedWithGenes = Seq(
+      ("C-A1", "1", 100L, 300L, "TP53"), ("C-A1", "2", 100L, 1000L, "EGFR"))
+      .toDF("SEQ_ASSAY_ID", "CHROMOSOME", "START_POSITION", "END_POSITION", "HUGO_SYMBOL")
+    val assayInfo = Seq(("C-A1", "Illumina")).toDF("SEQ_ASSAY_ID", "PLATFORM")
+    ReleaseJob.FullReleaseInputs(clinicalSample, clinicalPatient,
+      out.maf, cna, seg, sv, bedWithGenes, assayInfo)
+  }
+
+  test("F1-F10 run once: the sinks and the dashboard scan the materialized release") {
+    // isolated session: the listener sees only the plans this test runs
+    val s = spark.newSession()
+    val out = ReleaseJob.run(inputs(s))
+    Seq("clinical" -> out.clinical, "maf" -> out.maf).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.isInstanceOf[LogicalRDD], s"$name is not a single LogicalRDD leaf:\n$plan")
+    }
+
+    val executed = new AtomicInteger()
+    val withWindow = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        executed.incrementAndGet()
+        if (allNodes(qe.executedPlan).exists(_.isInstanceOf[WindowExec]))
+          withWindow.add(qe.executedPlan.treeString)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      ReleaseJob.writeFullRelease(fullInputs(out, s), tmpDir("once-release"),
+        "genie_test", "15.1-consortium")
+      ReleaseJob.writeDashboardWiki(out, tmpDir("once-wiki"), "15.1-consortium")
+      BusFlush.flush(s.sparkContext)
+    } finally s.listenerManager.unregister(listener)
+    assert(executed.get > 0, "the listener saw no executed plan")
+    // the fixture has no race/ethnicity/sex columns, so the dashboard
+    // adds no window of its own: any WindowExec is F4's cis window re-run
+    assert(withWindow.isEmpty, s"a sink re-ran the cis window:\n${withWindow.peek()}")
+  }
+
   test("release pipeline applies F1-F10 in reference order") {
-    val out = ReleaseJob.run(inputs)
+    val out = ReleaseJob.run(inputs())
 
     val samples = out.clinical.select("SAMPLE_ID").as[String].collect().toSet
     assert(samples == Set("GENIE-C-p1-s1", "GENIE-C-p2-s2", "GENIE-C-p5-s5"))
@@ -72,7 +135,7 @@ class ReleaseJobSpec extends SparkSpec {
 
   test("artifacts: cBioPortal layout written end-to-end") {
     val dir = tmpDir("release")
-    val out = ReleaseJob.run(inputs)
+    val out = ReleaseJob.run(inputs())
     ReleaseJob.writeArtifacts(out, dir, "genie_test")
     val clinical = scala.io.Source.fromFile(s"$dir/data_clinical_sample.txt").getLines().toSeq
     assert(clinical.take(4).forall(_.startsWith("#")))
@@ -82,7 +145,7 @@ class ReleaseJobSpec extends SparkSpec {
 
   test("dashboard wiki: rendered from the release outputs with derived centers") {
     val dir = tmpDir("release-wiki")
-    val out = ReleaseJob.run(inputs)
+    val out = ReleaseJob.run(inputs())
     val md = ReleaseJob.writeDashboardWiki(out, dir, "15.1-consortium")
     assert(md.startsWith("---\ntitle: '15.1-consortium'\n---"))
     // template sections present and ordered
@@ -101,23 +164,8 @@ class ReleaseJobSpec extends SparkSpec {
 
   test("full consortium→public release: complete folder manifest parity") {
     val base = tmpDir("full-release")
-    val out = ReleaseJob.run(inputs)
-
-    val clinicalSample = out.clinical
-      .select("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "AGE_AT_SEQ_REPORT", "SEQ_ASSAY_ID")
-    val clinicalPatient = out.clinical
-      .select("PATIENT_ID", "BIRTH_YEAR").dropDuplicates("PATIENT_ID")
-    val cna = Seq(("TP53", "GENIE-C-p1-s1", 2.0), ("EGFR", "GENIE-C-p1-s1", -1.0))
-      .toDF("HUGO_SYMBOL", "SAMPLE_ID", "VALUE")
-    val seg = Seq(("GENIE-C-p1-s1", "1", 100L, 200L, 5, 0.25))
-      .toDF("ID", "CHROM", "LOC.START", "LOC.END", "NUM.MARK", "SEG.MEAN")
-    val sv = Seq(("GENIE-C-p2-s2", "SOMATIC")).toDF("SAMPLE_ID", "SV_STATUS")
-    val bedWithGenes = Seq(
-      ("C-A1", "1", 100L, 300L, "TP53"), ("C-A1", "2", 100L, 1000L, "EGFR"))
-      .toDF("SEQ_ASSAY_ID", "CHROMOSOME", "START_POSITION", "END_POSITION", "HUGO_SYMBOL")
-    val assayInfo = Seq(("C-A1", "Illumina")).toDF("SEQ_ASSAY_ID", "PLATFORM")
-    val full = ReleaseJob.FullReleaseInputs(clinicalSample, clinicalPatient,
-      out.maf, cna, seg, sv, bedWithGenes, assayInfo)
+    val out = ReleaseJob.run(inputs())
+    val full = fullInputs(out)
 
     // ---- consortium: the reference's complete artifact set ----
     val manifest = ReleaseJob.writeFullRelease(full, base, "genie_test", "15.1-consortium")
@@ -188,7 +236,7 @@ class ReleaseJobSpec extends SparkSpec {
       out.clinical, out.maf, scope)
     val pubManifest = ReleaseJob.writeFullRelease(
       full.copy(clinicalSample = pubClin
-        .join(clinicalSample.select("SAMPLE_ID", "AGE_AT_SEQ_REPORT"), Seq("SAMPLE_ID"), "left")
+        .join(full.clinicalSample.select("SAMPLE_ID", "AGE_AT_SEQ_REPORT"), Seq("SAMPLE_ID"), "left")
         .select("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "AGE_AT_SEQ_REPORT", "SEQ_ASSAY_ID"),
         maf = pubMaf),
       pubBase, "genie_public", "15.1-public", public = true)
