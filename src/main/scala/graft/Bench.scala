@@ -20,9 +20,20 @@ object Bench {
     graft.SparkEntry.resetSharedIntermediates()
   }
 
+  /** Run one step of query `name`; a failure ends the run with a
+    * non-zero exit that names the query. A query that threw must never
+    * be timed: one that breaks fast would read as a speedup.
+    */
+  private def orFail[T](name: String)(body: => T): T =
+    try body
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: $e")
+      e.printStackTrace()
+      sys.exit(1)
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // local iteration: SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those
     // queries (warmup still runs them so codegen cost stays amortized)
     val only: Option[Set[String]] =
@@ -40,20 +51,7 @@ object Bench {
     }
     def selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // bucketed-staging tables land in tmp, not a cwd spark-warehouse/
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // warmup (untimed): touch every table, then run EVERY query once so
@@ -64,8 +62,8 @@ object Bench {
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => () }
     }
-    selected.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    selected.foreach { case (name, fn) =>
+      orFail(name)(fn(spark, sfDir).count())
       dropCaches(spark)
     }
 
@@ -81,11 +79,11 @@ object Bench {
         // run the query's OWN plan (df.count() would execute a derived
         // count plan that can skip column materialization — and leaves
         // the shuffle metrics unpopulated)
-        val shuffleMb = try {
+        val shuffleMb = orFail(name) {
           val df = fn(spark, sfDir)
           graft.tools.PlanMetrics.runAndCount(df)
           graft.tools.PlanMetrics.shuffleBytesWritten(df) / 1e6
-        } catch { case _: Throwable => -1.0 }
+        }
         val elapsed = (System.nanoTime() - t0) / 1e9
         // index-lifecycle queries report their eager build/merge phases;
         // the remainder is the operational query path — the number that
@@ -140,8 +138,7 @@ object Bench {
         quiesce()
         graft.tools.PhaseTimer.drain()
         val t0 = System.nanoTime()
-        try graft.tools.PlanMetrics.runAndCount(fn(spark, sfDir))
-        catch { case _: Throwable => () }
+        orFail(name)(graft.tools.PlanMetrics.runAndCount(fn(spark, sfDir)))
         val elapsed = (System.nanoTime() - t0) / 1e9
         val ph = graft.tools.PhaseTimer.drain()
         (elapsed,

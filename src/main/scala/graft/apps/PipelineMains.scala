@@ -4,11 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.GraftSession
 
-/** CLI mains for the two batch entry points beyond validation —
-  * parity with the reference's bin/ scripts (§3.2 input_to_database,
-  * §3.3 database_to_staging/consortium_to_public). The logic lives in
-  * [[ProcessJob]] / [[ReleaseJob]] (spec-covered); these wrappers add
-  * the file-backed state a standalone run needs.
+/** CLI main for the processing step — parity with the reference's
+  * bin/ input_to_database script (§3.2). The logic lives in
+  * [[ProcessJob]] (spec-covered); this wrapper adds the file-backed
+  * state a standalone run needs.
   */
 object ProcessMain {
 
@@ -19,11 +18,12 @@ object ProcessMain {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ProcessMain <center> <inputDir> <stateDir>")
     val Array(center, inputDir, stateDir) = args
-    // stop only a session this main created (specs drive main() inside
-    // a shared-session JVM)
-    val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = GraftSession.builder(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]").getOrCreate()
+    // run on the caller's session when there is one (specs and the
+    // benchmark drive main() inside a shared-session JVM): building
+    // again would rewrite its runtime confs, shuffle partitions
+    // included. Stop only a session this main created.
+    val preExisting = SparkSession.getDefaultSession
+    val spark = preExisting.getOrElse(GraftSession.builder().getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
     val statusPath = s"$stateDir/file_status.parquet"
@@ -61,34 +61,6 @@ object ProcessMain {
     result.errors.foreach { case (n, errs) =>
       errs.foreach(e => println(s"ERROR $n: $e"))
     }
-    if (!preExisting) spark.stop()
-  }
-}
-
-object ReleaseMain {
-
-  /** Reads the processed tables from `tableDir` (parquet dirs named
-    * clinical_sample, clinical_patient, maf, cna_long, seg, sv, bed,
-    * assay) and writes the full versioned release folder. Pass "public"
-    * as the 5th arg for the consortium→public variant.
-    */
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 4,
-      "usage: ReleaseMain <tableDir> <outDir> <studyId> <genieVersion> [public]")
-    val tableDir = args(0)
-    val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = GraftSession.builder(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def t(name: String): DataFrame = spark.read.parquet(s"$tableDir/$name")
-    val manifest = ReleaseJob.writeFullRelease(
-      ReleaseJob.FullReleaseInputs(
-        clinicalSample = t("clinical_sample"), clinicalPatient = t("clinical_patient"),
-        maf = t("maf"), cnaLong = t("cna_long"), seg = t("seg"), sv = t("sv"),
-        bed = t("bed"), assayInfo = t("assay")),
-      baseDir = args(1), studyId = args(2), genieVersion = args(3),
-      public = args.lift(4).contains("public"))
-    manifest.foreach(p => println(s"ARTIFACT $p"))
-    if (!preExisting) spark.stop()
+    if (preExisting.isEmpty) spark.stop()
   }
 }

@@ -345,15 +345,4 @@ object ReleaseJob {
     DashboardWiki.write(md, s"$outDir/dashboard.md")
     md
   }
-
-  /** Write release artifacts in cBioPortal layout. */
-  def writeArtifacts(out: ReleaseOutputs, outDir: String, studyId: String): Unit = {
-    CbioSinks.writeClinical(
-      out.clinical.select("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "AGE_AT_SEQ_REPORT", "SEQ_ASSAY_ID"),
-      Map("SAMPLE_ID" -> CbioSinks.ClinicalHeader("Sample Identifier", "A unique sample identifier", "STRING"),
-        "CANCER_TYPE" -> CbioSinks.ClinicalHeader("Cancer Type", "Oncotree-mapped cancer type", "STRING")),
-      s"$outDir/data_clinical_sample.txt")
-    graft.sources.Tsv.write(out.maf, s"$outDir/data_mutations_extended", naToken = "")
-    CbioSinks.writeCaseLists(out.clinical, "CANCER_TYPE", "SAMPLE_ID", studyId, s"$outDir/case_lists")
-  }
 }

@@ -45,8 +45,7 @@ object ValidateCli {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ValidateCli <center> <inputDir>")
     val Array(center, inputDir) = args
-    val spark = GraftSession.builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val anyError = run(spark, center, inputDir)
     println(if (anyError) "RESULT: INVALID" else "RESULT: VALID")

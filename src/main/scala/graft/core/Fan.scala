@@ -36,26 +36,23 @@ import org.apache.spark.sql.DataFrame
   */
 object Fan {
 
-  /** Measurement kill-switch (session conf, default off): disables the
-    * widen/widenBy pins so A/B runs can time the exact same plan with
-    * and without them — the WidenScale scaling probe and the
-    * shuffle-ceiling generator use it. Results are identical either
-    * way (that is the point of widen); only the plan shape moves.
+  /** defaultParallelism, when the optimizer's size estimate says `df`
+    * is too small for the scan/AQE to reach it by bytes; None otherwise.
     */
-  private def disabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("graft.fan.widen.off", "false") == "true"
-
-  /** Repartition `df` to defaultParallelism iff its estimated size is
-    * too small for the scan/AQE to reach that parallelism by bytes.
-    */
-  def widen(df: DataFrame): DataFrame = {
+  private def starvedParallelism(df: DataFrame): Option[Int] = {
     val spark = df.sparkSession
     val p = spark.sparkContext.defaultParallelism
     val threshold =
       BigInt(spark.sessionState.conf.filesMaxPartitionBytes) * p
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < threshold && !disabled(df)) df.repartition(p) else df
+    if (est < threshold) Some(p) else None
   }
+
+  /** Repartition `df` to defaultParallelism iff its estimated size is
+    * too small for the scan/AQE to reach that parallelism by bytes.
+    */
+  def widen(df: DataFrame): DataFrame =
+    starvedParallelism(df).fold(df)(df.repartition(_))
 
   /** Keyed sibling of [[widen]] for row-multiplying equi-joins (LSH
     * band / pigeonhole-block self-joins): hash-partition on the join
@@ -66,14 +63,8 @@ object Fan {
     * Identity once the input is byte-big, where AQE's own sizing (and
     * its skew handling) take over.
     */
-  def widenBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.sparkContext.defaultParallelism
-    val threshold =
-      BigInt(spark.sessionState.conf.filesMaxPartitionBytes) * p
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < threshold && !disabled(df)) df.repartition(p, keys: _*) else df
-  }
+  def widenBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
+    starvedParallelism(df).fold(df)(df.repartition(_, keys: _*))
 
   /** Overlap INDEPENDENT driver-side Spark actions (guide §2.6): Spark's
     * scheduler happily runs several jobs at once inside one application —

@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session + table helpers shared by every entry point.
+/** Session + table helpers shared by every entry point. [[builder]] is
+  * the only place a SparkSession is configured: the apps, Bench,
+  * Verify, the tools and the test suite all start from it.
   *
   * Scale notes: shuffle partitions default to the local core count here,
   * but on a real cluster the caller sets `spark.sql.shuffle.partitions`
@@ -12,9 +14,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  def builder(master: String = "local[*]", cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
-    SparkSession
-      .builder()
+  /** Local core count: `SPARK_GRAFT_CPUS` if set, else every core the
+    * JVM sees. The default master and shuffle partitions both use it.
+    */
+  private lazy val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  // managed tables (bucketed staging) land in tmp, never the cwd — a
+  // library must not scatter spark-warehouse/ dirs into user repos.
+  // One dir per JVM: Upsert.stageBucketed clears a table's location
+  // before it writes, so a dir shared between JVMs would let one run
+  // delete another's staged table. Created once, not per builder call:
+  // a builder that meets a live session never uses its warehouse.
+  private lazy val warehouse: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wh").toFile
+    sys.addShutdownHook(org.apache.spark.network.util.JavaUtils.deleteQuietly(dir))
+    dir.toString
+  }
+
+  def builder(master: String = s"local[$cores]", cpus: Int = cores): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -33,17 +52,8 @@ object GraftSession {
       // harness `events` table carries parquet TIMESTAMP(NANOS) which
       // Spark cannot model; read as long nanoseconds instead
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (bucketed staging) land in tmp, never the cwd —
-      // a library must not scatter spark-warehouse/ dirs into user repos
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
+      .config("spark.sql.warehouse.dir", warehouse)
       .config("spark.ui.enabled", "false")
-
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** Read one of the harness parquet tables from a scale-factor dir. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 /** Engine Catalyst extensions (SURVEY §7.3 "custom Catalyst only if
   * desired"). Install at build time:
   *
-  *   SparkSession.builder()
+  *   GraftSession.builder()
   *     .withExtensions(new GraftExtensions)          // or
   *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   *

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dump every SparkEntry query's shuffle-bytes-written at a given scale
   * factor — the generator for the committed per-query shuffle ceilings
@@ -28,14 +28,9 @@ object ShuffleBaseline {
     // a full-suite re-measure)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-shuffle-baseline")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed at 4 partitions whatever the box: the committed ceilings
+    // were measured there, and ShuffleBudgetSpec gates at local[4]
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val measured = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -133,16 +133,6 @@ class ReleaseJobSpec extends SparkSpec {
     assert(byId("GENIE-C-p2-s2") == ((">89", "cannotReleaseHIPAA")))
   }
 
-  test("artifacts: cBioPortal layout written end-to-end") {
-    val dir = tmpDir("release")
-    val out = ReleaseJob.run(inputs())
-    ReleaseJob.writeArtifacts(out, dir, "genie_test")
-    val clinical = scala.io.Source.fromFile(s"$dir/data_clinical_sample.txt").getLines().toSeq
-    assert(clinical.take(4).forall(_.startsWith("#")))
-    assert(clinical.exists(_.contains("Non-Small Cell Lung Cancer")))
-    assert(new java.io.File(s"$dir/case_lists").listFiles().nonEmpty)
-  }
-
   test("dashboard wiki: rendered from the release outputs with derived centers") {
     val dir = tmpDir("release-wiki")
     val out = ReleaseJob.run(inputs())
@@ -194,6 +184,13 @@ class ReleaseJobSpec extends SparkSpec {
       f -> java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$releaseDir/$f")).toSeq
     }.toMap
     val firstRun = snapshot()
+    // cBioPortal layout: `#` header lines lead the clinical file, the
+    // mapped cancer type is released, the case-list dir is populated
+    val clinicalSample = new String(firstRun("data_clinical_sample.txt").toArray, "UTF-8")
+      .linesIterator.toSeq
+    assert(clinicalSample.take(4).forall(_.startsWith("#")))
+    assert(clinicalSample.exists(_.contains("Non-Small Cell Lung Cancer")))
+    assert(new java.io.File(s"$releaseDir/case_lists").listFiles().nonEmpty)
     // re-release over the existing dir (a data-fix re-run) is
     // idempotent: the previous run's data_guide.md must not surface as
     // a duplicate manifest entry, and every artifact is rewritten with
