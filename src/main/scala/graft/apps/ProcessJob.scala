@@ -80,9 +80,13 @@ object ProcessJob {
     def recordErrors(name: String, res: graft.rules.ValidationResult): Unit =
       if (!res.isValid) errors += name -> res.errors.map(_.message)
 
+    // one filename → type decision, shared with the validator
+    def typeOf(p: String): String =
+      ValidateCli.fileType(Paths.get(p).getFileName.toString, center)
+
     // clinical pair handled jointly (S2)
-    val samplePath  = paths.find(p => Paths.get(p).getFileName.toString.startsWith("data_clinical_supp_sample"))
-    val patientPath = paths.find(p => Paths.get(p).getFileName.toString.startsWith("data_clinical_supp_patient"))
+    val samplePath  = paths.find(typeOf(_) == "clinical_sample")
+    val patientPath = paths.find(typeOf(_) == "clinical_patient")
 
     (samplePath, patientPath) match {
       case (Some(sp), Some(pp)) if !dups(Paths.get(sp).getFileName.toString) =>
@@ -112,7 +116,8 @@ object ProcessJob {
 
     paths.foreach { p =>
       val name = Paths.get(p).getFileName.toString
-      if (name.endsWith(".maf") || name.startsWith("data_mutations")) {
+      val kind = typeOf(p)
+      if (kind == "maf") {
         val m = md5Of(p)
         if (prior.get((name, m)).contains("VALIDATED")) {
           skipped :+= name; record(name, m, "VALIDATED")
@@ -137,7 +142,7 @@ object ProcessJob {
             tables += "maf" -> merged
           }
         }
-      } else if (name.startsWith(center) && name.endsWith(".md")) {
+      } else if (kind == "workflow") {
         // workflow md passthrough (genie_registry/workflow.py:11-23):
         // filename pattern IS the validation; file is stored as-is
         record(name, md5Of(p), "VALIDATED")
@@ -157,11 +162,11 @@ object ProcessJob {
           lit(Files.getLastModifiedTime(Paths.get(p)).toMillis))
         .withColumn("center", lit(center))
 
-    paths.find(p => Paths.get(p).getFileName.toString == "sampleRetraction.csv").foreach { p =>
+    paths.find(typeOf(_) == "sampleRetraction").foreach { p =>
       record("sampleRetraction.csv", md5Of(p), "VALIDATED")
       tables += "sampleRetraction" -> readRetraction(p, "genieSampleId")
     }
-    paths.find(p => Paths.get(p).getFileName.toString == "patientRetraction.csv").foreach { p =>
+    paths.find(typeOf(_) == "patientRetraction").foreach { p =>
       record("patientRetraction.csv", md5Of(p), "VALIDATED")
       tables += "patientRetraction" -> readRetraction(p, "geniePatientId")
     }

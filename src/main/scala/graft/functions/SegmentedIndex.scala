@@ -264,6 +264,18 @@ object SegmentedIndex {
       .foreach(s => copy(s.getPath, new Path(s"$destPath/${s.getPath.getName}")))
   }
 
+  /** The empty tombstone table of a new segment, built from `ids`'
+    * schema alone. Writing `ids.limit(0)` in a thunk overlapped with
+    * the write of the frame `ids` comes from would plan that frame twice
+    * at once; when it is driver-local, both optimizer passes evaluate
+    * its projection on the driver and share the lambda variables of its
+    * higher-order functions, so rows of the other write come out mixed
+    * (seen as PQ codes computed from another row's vector).
+    */
+  def noTombstones(ids: DataFrame): DataFrame =
+    ids.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), ids.schema)
+
   /** Full (re)build of a single-subtable index: drop any prior tree,
     * write `rows` (which must carry an `id` column) as segment 00000
     * with empty tombstones. The shared build path of the digest/band/
@@ -277,7 +289,7 @@ object SegmentedIndex {
       // independent writes over distinct dirs — overlap (§2.6)
       graft.core.Fan.overlap(Seq(
         () => rows.write.mode("overwrite").parquet(s"$tmp/$sub"),
-        () => rows.select("id").limit(0)
+        () => noTombstones(rows.select("id"))
           .write.mode("overwrite").parquet(s"$tmp/tombstones")))
     }
   }

@@ -968,7 +968,7 @@ object VectorFunctions {
           () => kmeansAssign(df, idCol, vecCol, cents)
             .select(col(idCol).as("id"), col("cid"))
             .write.mode("overwrite").parquet(s"$tmp/cells"),
-          () => df.select(col(idCol).as("id")).limit(0)
+          () => SegmentedIndex.noTombstones(df.select(col(idCol).as("id")))
             .write.mode("overwrite").parquet(s"$tmp/tombstones")))
       }))
   }
@@ -1341,7 +1341,7 @@ object VectorFunctions {
           () => pqEncodePacked(df, idCol, vecCol, books, m, dim)
             .select(col(idCol).as("id"), col("codes"))
             .write.mode("overwrite").parquet(s"$tmp/codes"),
-          () => df.select(col(idCol).as("id")).limit(0)
+          () => SegmentedIndex.noTombstones(df.select(col(idCol).as("id")))
             .write.mode("overwrite").parquet(s"$tmp/tombstones")))
       }))
   }

@@ -10,7 +10,7 @@ import graft.core.GraftSession
 /** Dump every SparkEntry query's shuffle-bytes-written at a given scale
   * factor — the generator for the committed per-query shuffle ceilings
   * (src/test/resources/shuffle_ceilings_sf0.001.tsv) that
-  * ShuffleBudgetSpec gates against. Regenerate after INTENTIONAL plan
+  * QuerySweepSpec gates against. Regenerate after INTENTIONAL plan
   * changes:
   *
   *   sbt "runMain graft.tools.ShuffleBaseline /root/testdata/sf0.001 \
@@ -29,7 +29,7 @@ object ShuffleBaseline {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     // fixed at 4 partitions whatever the box: the committed ceilings
-    // were measured there, and ShuffleBudgetSpec gates at local[4]
+    // were measured there, and QuerySweepSpec gates at local[4]
     val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val measured = graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -14,7 +14,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   lazy val session: SparkSession = {
     // fixed at 4 cores whatever the box: the committed shuffle ceilings
-    // (ShuffleBudgetSpec) were measured at 4 partitions
+    // (QuerySweepSpec) were measured at 4 partitions
     val s = graft.core.GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.ExecutedPlanLintSpec.allNodes
+import graft.QuerySweepSpec.allNodes
 import graft.SparkSpec
 import graft.sources.Oncotree
 
