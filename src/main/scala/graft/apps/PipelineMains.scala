@@ -1,5 +1,6 @@
 package graft.apps
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.GraftSession
@@ -26,31 +27,40 @@ object ProcessMain {
     val spark = preExisting.getOrElse(GraftSession.builder().getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
+    // state goes through the Hadoop FileSystem API, so `stateDir` may
+    // live on any filesystem Spark can write (a URI with a scheme)
+    val fs = new Path(stateDir).getFileSystem(spark.sessionState.newHadoopConf())
     val statusPath = s"$stateDir/file_status.parquet"
     val prior: Seq[ProcessJob.FileStatus] =
-      if (new java.io.File(statusPath).exists()) {
+      if (fs.exists(new Path(statusPath))) {
         import spark.implicits._
         spark.read.parquet(statusPath).as[ProcessJob.FileStatus].collect().toSeq
       } else Seq.empty
-    val tablesDir = new java.io.File(s"$stateDir/tables")
+    // `__`-prefixed entries are swap leftovers, never tables
+    val tablesDir = new Path(s"$stateDir/tables")
     val existing: Map[String, DataFrame] =
-      if (!tablesDir.exists()) Map.empty
-      else tablesDir.listFiles().filter(_.isDirectory).map { d =>
-        d.getName -> spark.read.parquet(d.getPath)
-      }.toMap
+      if (!fs.exists(tablesDir)) Map.empty
+      else fs.listStatus(tablesDir).toSeq
+        .filter(s => s.isDirectory && !s.getPath.getName.startsWith("__"))
+        .map(s => s.getPath.getName -> spark.read.parquet(s.getPath.toString))
+        .toMap
 
     val result = ProcessJob.run(spark, center, inputDir, prior, existing)
 
     // persist merged tables THEN statuses — a crash mid-write re-runs
-    // the affected files next time (md5 status not yet recorded)
-    val conf = spark.sessionState.newHadoopConf()
+    // the affected files next time (md5 status not yet recorded). A
+    // live table is replaced by the two-rename swap, which renames it
+    // back if the new one cannot be renamed in: deleting it first would
+    // lose it for good, since the previous run's statuses md5-skip its
+    // unchanged source files.
     result.tables.foreach { case (name, df) =>
-      val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/tables/__tmp_$name")
-      val dst = new org.apache.hadoop.fs.Path(s"$stateDir/tables/$name")
-      val fs = dst.getFileSystem(conf)
+      val tmp = new Path(s"$stateDir/tables/__tmp_$name")
+      val dst = new Path(s"$stateDir/tables/$name")
       df.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(dst)) fs.delete(dst, true)
-      if (!fs.rename(tmp, dst))
+      if (fs.exists(dst))
+        graft.sources.Layout.swapDirs(fs, dst, tmp,
+          new Path(s"$stateDir/tables/__old_$name"), "table")
+      else if (!fs.rename(tmp, dst))
         throw new IllegalStateException(s"table swap failed for $name")
     }
     import spark.implicits._

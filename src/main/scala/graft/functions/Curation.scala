@@ -379,7 +379,7 @@ object Curation {
   def saveBm25Index(docs: DataFrame, idCol: String, textCol: String,
                     path: String): Unit = {
     val spark = docs.sparkSession
-    val (fs, segRoot) = hfs(spark, s"$path/segments")
+    val (fs, segRoot) = SegmentedIndex.hfs(spark, s"$path/segments")
     if (fs.exists(segRoot)) fs.delete(segRoot, true) // full rebuild
     // cached: the doclen write materializes it, the stats aggregation
     // reads it back — one corpus tokenization instead of two (the
@@ -414,16 +414,18 @@ object Curation {
     *    [[graft.operators.WindowOps.latestPerGroup]]);
     *  - a NULL `textCol` row is a DELETION: the id is tombstoned (if
     *    live) and no new version is ingested — the retraction path for
-    *    a GDPR-style purge. Deleting an id that is not live is a no-op.
+    *    a GDPR-style purge (not [[SegmentedIndex.retract]]: the stats
+    *    must shrink with the deleted docs). Deleting an id that is not
+    *    live is a no-op.
     *
     * The segment lands via write-to-temp + rename, so concurrent
     * readers never observe a partial segment. Writers are single-writer
     * by contract (see [[writeSegment]]).
     */
   def mergeBm25Delta(delta: DataFrame, idCol: String, textCol: String,
-                     path: String, trustedDelta: Boolean = false): Unit = {
+                     path: String): Unit = {
     val spark = delta.sparkSession
-    val segs = segmentDirs(spark, path)
+    val segs = SegmentedIndex.segmentDirs(spark, path)
     require(segs.nonEmpty, s"no BM25 index at $path — saveBm25Index first")
     val n = segs.map(_._1).max + 1
     // ONE delta-sized cached projection — (id, new doc length, null =
@@ -440,18 +442,13 @@ object Curation {
       TextFunctions.tokenCount(col(textCol)).cast("double").as("dl"))
       .persist()
     try {
-      // trusted deltas (the streaming sink reduces to last-per-key
-      // before calling) drop the countDistinct, leaving a pure
-      // scan-side aggregation with no shuffle at all
-      val dupCols =
-        if (trustedDelta) Seq(lit(0L).as("rows"), lit(0L).as("ids"))
-        else Seq(count(lit(1)).as("rows"), countDistinct(col("id")).as("ids"))
       // live (non-null-text) new versions only; null-text rows fall
       // out of N/sum_dl and surface solely through the tombstone
       // side = deletion
       val d = perId.agg(count(col("dl")).as("dn"),
-        coalesce(sum(col("dl")), lit(0.0)).as("ds") +: dupCols: _*).head()
-      if (!trustedDelta && d.getLong(2) != d.getLong(3)) {
+        coalesce(sum(col("dl")), lit(0.0)).as("ds"),
+        count(lit(1)).as("rows"), countDistinct(col("id")).as("ids")).head()
+      if (d.getLong(2) != d.getLong(3)) {
         val dup = perId.groupBy("id").agg(count(lit(1)).as("c"))
           .filter(col("c") > 1).limit(1).collect()
         require(dup.isEmpty, // null ids can trip rows≠ids without a dup group
@@ -461,7 +458,7 @@ object Curation {
       }
       // old versions of delta ids become dead; the probe side reads the
       // delta-sized cache, the corpus doclen streams once against it
-      val replaced = liveRows(spark, path, "doclen")
+      val replaced = SegmentedIndex.liveRows(spark, path, "doclen")
         .join(perId.select("id"), Seq("id"), "left_semi")
         .persist()
       try {
@@ -484,34 +481,23 @@ object Curation {
 
   /** Fold all live rows back into a single segment 00000 (dead
     * versions dropped, postings re-sorted by token, stats carried over
-    * unchanged — compaction never changes CURRENT answers). The new
-    * tree is written beside the old one and swapped in with the
-    * two-rename discipline of [[graft.sources.Layout.swapDirs]].
-    * Compaction collapses segment HISTORY: `asOf` snapshot reads older
-    * than the compaction stop being answerable — copy the tree first
-    * if a pinned historical read must outlive it (the usual
-    * lakehouse vacuum trade).
+    * unchanged — compaction never changes CURRENT answers), through the
+    * shared frame of [[SegmentedIndex.compactTree]]: pin guard, tmp
+    * tree, two-rename swap. Copy the tree first
+    * ([[SegmentedIndex.cloneAt]]) if a pinned historical read must
+    * outlive it.
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        path: String,
-                       pinnedBy: Option[String] = None): Unit = {
-    val segs = segmentDirs(spark, path)
-    require(segs.nonEmpty, s"no BM25 index at $path")
-    if (segs.size == 1) return // single segment is compact by construction
-    SegmentedIndex.requireNotPinned(spark, path, pinnedBy)
-    val tmpRoot = s"$path/__segments_tmp"
-    val (fs, tmpP) = hfs(spark, tmpRoot)
-    if (fs.exists(tmpP)) fs.delete(tmpP, true)
-    val dl = liveRows(spark, path, "doclen")
-    writeSegment(spark, tmpRoot, 0,
-      postings = liveRows(spark, path, "postings"),
-      doclen = dl, tombstones = dl.select("id").limit(0),
-      stats = spark.read.parquet(s"${segs.last._2}/stats")
-        .select("n_docs", "sum_dl", "avgdl"))
-    val (_, segRoot) = hfs(spark, s"$path/segments")
-    graft.sources.Layout.swapDirs(fs, segRoot, tmpP,
-      new org.apache.hadoop.fs.Path(s"$path/__segments_old"), "bm25 compact")
-  }
+                       pinnedBy: Option[String] = None): Unit =
+    SegmentedIndex.compactTree(spark, path, pinnedBy) { (tmpRoot, segs) =>
+      val dl = SegmentedIndex.liveRows(spark, path, "doclen")
+      writeSegment(spark, tmpRoot, 0,
+        postings = SegmentedIndex.liveRows(spark, path, "postings"),
+        doclen = dl, tombstones = dl.select("id").limit(0),
+        stats = spark.read.parquet(s"${segs.last._2}/stats")
+          .select("n_docs", "sum_dl", "avgdl"))
+    }
 
   /** [[bm25TopK]] answering from a persisted segmented index
     * ([[saveBm25Index]] + [[mergeBm25Delta]]): each segment's postings
@@ -529,13 +515,13 @@ object Curation {
                         asOf: Int = Int.MaxValue): DataFrame = {
     val q = queryTable(spark, queries)
     val terms = queries.flatMap(_._2).map(_.toLowerCase).distinct
-    val segs = segmentDirs(spark, path).filter(_._1 <= asOf)
+    val segs = SegmentedIndex.segmentDirs(spark, path).filter(_._1 <= asOf)
     require(segs.nonEmpty, s"no BM25 index at $path" +
       (if (asOf != Int.MaxValue) s" as of segment $asOf" else ""))
-    val tf = liveRows(spark, path, "postings", asOf)
+    val tf = SegmentedIndex.liveRows(spark, path, "postings", asOf)
       .filter(col("token").isin(terms: _*))
       .select(col("id").as("doc_id"), col("token"), col("tf"))
-    val dl = liveRows(spark, path, "doclen", asOf)
+    val dl = SegmentedIndex.liveRows(spark, path, "doclen", asOf)
       .select(col("id").as("doc_id"), col("dl"))
     // each segment carries the corpus stats AS OF its commit, so an
     // asOf read scores with exactly the n_docs/avgdl a live reader saw
@@ -545,13 +531,6 @@ object Curation {
       .select("n_docs", "avgdl")
     bm25Score(tf, dl, stats, q, "doc_id", k, k1, b)
   }
-
-  /** whether a segmented BM25 index exists at `path` (any committed
-    * segment) — the first-batch/late-batch pivot for streaming callers
-    */
-  def bm25IndexExists(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Boolean =
-    segmentDirs(spark, path).nonEmpty
 
   /** (token, id, tf) postings of one corpus slice.
     *
@@ -569,15 +548,6 @@ object Curation {
     docs.select(col(idCol).as("id"),
         explode(TextFunctions.tokens(lower(col(textCol)))).as("token"))
       .groupBy(col("token"), col("id")).agg(count(lit(1)).as("tf"))
-
-  private def hfs(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) =
-    SegmentedIndex.hfs(spark, path)
-
-  /** live (segNumber, absoluteDir) pairs under `$path/segments`, ascending */
-  private def segmentDirs(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Seq[(Int, String)] =
-    SegmentedIndex.segmentDirs(spark, path)
 
   /** One BM25 segment via [[SegmentedIndex.commitSegment]] (tmp-write +
     * guarded rename, orphan sweep, single-writer contract). Postings
@@ -600,17 +570,6 @@ object Curation {
         () => tombstones.write.mode("overwrite").parquet(s"$tmp/tombstones"),
         () => stats.write.mode("overwrite").parquet(s"$tmp/stats")))
     }
-
-  /** Tombstone-masked union of a per-segment subtable — see
-    * [[SegmentedIndex.liveRows]]. (BM25 retraction goes through
-    * [[mergeBm25Delta]] with null-text rows, NOT
-    * [[SegmentedIndex.retract]], because stats must shrink with the
-    * deleted docs.)
-    */
-  private def liveRows(spark: org.apache.spark.sql.SparkSession,
-                       path: String, sub: String,
-                       asOf: Int = Int.MaxValue): DataFrame =
-    SegmentedIndex.liveRows(spark, path, sub, asOf)
 
   /** Corpus heavy hitters: every token with frequency strictly above
     * `num/den` of all tokens, with its EXACT count — found without a

@@ -353,10 +353,9 @@ object DedupFunctions {
       digestRows(df, idCol, contentCol))
 
   def mergeDigestDelta(delta: DataFrame, idCol: String, contentCol: String,
-                       path: String, trustedDelta: Boolean = false): Unit =
+                       path: String): Unit =
     SegmentedIndex.mergeDeltaRows(delta.sparkSession, path, "digests",
-      delta.select(col(idCol)), digestRows(delta, idCol, contentCol),
-      trustedDelta)
+      delta.select(col(idCol)), digestRows(delta, idCol, contentCol))
 
   /** Exact-dup hits of a batch against the live digest index: one row
     * per (batch id, matching live corpus id). Self-matches are NOT
@@ -379,11 +378,9 @@ object DedupFunctions {
       bandIndex(df, idCol, elemsCol, k, bands))
 
   def mergeBandDelta(delta: DataFrame, idCol: String, elemsCol: Column,
-                     path: String, k: Int = 16, bands: Int = 4,
-                     trustedDelta: Boolean = false): Unit =
+                     path: String, k: Int = 16, bands: Int = 4): Unit =
     SegmentedIndex.mergeDeltaRows(delta.sparkSession, path, "bands",
-      delta.select(col(idCol)), bandIndex(delta, idCol, elemsCol, k, bands),
-      trustedDelta)
+      delta.select(col(idCol)), bandIndex(delta, idCol, elemsCol, k, bands))
 
   /** Live (band_key, id) rows — feed [[incrementalNearDupCandidates]].
     * `asOf` pins the snapshot to segments <= asOf.
@@ -399,11 +396,9 @@ object DedupFunctions {
       winnowIndex(df, idCol, textCol, k, w))
 
   def mergeWinnowDelta(delta: DataFrame, idCol: String, textCol: String,
-                       path: String, k: Int = 5, w: Int = 4,
-                       trustedDelta: Boolean = false): Unit =
+                       path: String, k: Int = 5, w: Int = 4): Unit =
     SegmentedIndex.mergeDeltaRows(delta.sparkSession, path, "hashes",
-      delta.select(col(idCol)), winnowIndex(delta, idCol, textCol, k, w),
-      trustedDelta)
+      delta.select(col(idCol)), winnowIndex(delta, idCol, textCol, k, w))
 
   /** Live (id, h) winnow rows — feed [[spanContainmentFromIndex]] or
     * [[probeSpanHits]].
@@ -480,14 +475,12 @@ object DedupFunctions {
     * index was built with.
     */
   def mergeSimhashDelta(delta: DataFrame, idCol: String, elemsCol: Column,
-                        path: String, bits: Int = 32, maxHamming: Int = 3,
-                        trustedDelta: Boolean = false): Unit = {
+                        path: String, bits: Int = 32, maxHamming: Int = 3): Unit = {
     requireSimhashParams(delta.sparkSession, path, bits, maxHamming,
       "mergeSimhashDelta")
     SegmentedIndex.mergeDeltaRows(delta.sparkSession, path, "blocks",
       delta.select(col(idCol)),
-      simhashBlockRows(delta, idCol, elemsCol, bits, maxHamming),
-      trustedDelta)
+      simhashBlockRows(delta, idCol, elemsCol, bits, maxHamming))
   }
 
   /** Live (id, sh, blk, bv) postings; `asOf` pins segments <= asOf. */
@@ -910,19 +903,18 @@ object DedupFunctions {
   }
 
   /** O(delta) refresh: tombstone replaced ids, append the delta's gram
-    * rows as segment N. One row per id per delta (asserted unless
-    * `trustedDelta`); null text = deletion. Counts are derived from
+    * rows as segment N. One row per id per delta (asserted); null
+    * text = deletion. Counts are derived from
     * the LIVE rows at query time, so a replaced document's old grams
     * stop counting the moment the segment commits — arrivals,
     * re-ingests, and deletions all shift span stats corpus-wide
     * exactly as a rebuild would.
     */
   def mergeRepeatedSpanDelta(delta: DataFrame, idCol: String, textCol: String,
-                             path: String, n: Int,
-                             trustedDelta: Boolean = false): Unit =
+                             path: String, n: Int): Unit =
     SegmentedIndex.mergeDeltaRows(delta.sparkSession, path, "grams",
       delta.select(col(idCol)),
-      shapeGrams(gramPostings(delta, idCol, textCol, n)), trustedDelta)
+      shapeGrams(gramPostings(delta, idCol, textCol, n)))
 
   /** GDPR purge: tombstone `ids` — their grams stop counting (and so
     * may un-cover OTHER documents' spans) immediately.

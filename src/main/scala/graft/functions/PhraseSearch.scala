@@ -211,16 +211,13 @@ object PhraseSearch {
 
   /** O(delta) refresh: tombstone replaced ids, append the delta's
     * postings as segment N. Same contract as the other index merges:
-    * one row per id per delta (asserted unless `trustedDelta`), null
-    * text = deletion.
+    * one row per id per delta (asserted), null text = deletion.
     */
   def mergePositionalDelta(delta: DataFrame, idCol: String, textCol: String,
-                           path: String,
-                           trustedDelta: Boolean = false): Unit =
+                           path: String): Unit =
     SegmentedIndex.mergeDeltaRows(delta.sparkSession, path, "postings",
       delta.select(col(idCol)),
-      shapePostings(positionalRows(delta, idCol, textCol)),
-      trustedDelta)
+      shapePostings(positionalRows(delta, idCol, textCol)))
 
   /** Fold accumulated segments to one (answers unchanged, token
     * clustering re-established, live snapshot pins deferred to —

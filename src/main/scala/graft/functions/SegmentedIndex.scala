@@ -303,29 +303,27 @@ object SegmentedIndex {
     */
   def mergeDeltaRows(spark: SparkSession, path: String, sub: String,
                      deltaIds: DataFrame, rows: DataFrame,
-                     trustedDelta: Boolean = false,
                      idsKnownLive: Boolean = false): Unit = {
     val segs = segmentDirs(spark, path)
     require(segs.nonEmpty, s"no segmented index at $path — createIndex first")
     val n = segs.map(_._1).max + 1
     val ids = deltaIds.select(col(deltaIds.columns.head).as("id")).persist()
     try {
-      // trusted deltas (streaming sinks whose contract is one row per
-      // id per batch) skip the dup-guard job on the upkeep hot path
-      if (!trustedDelta) {
+      // `idsKnownLive` is the repair-merge fast path: when the caller
+      // ASSERTS every delta id is currently live (a kNN-graph repair
+      // rewrites only lists it just read from the live view, one per
+      // id), both the dup guard and the live-intersection read of the
+      // whole segment tree are pure overhead — the ids ARE the replaced
+      // set. The caller owns the invariant: a non-live id here would
+      // inflate the tombstone table and break describe()'s live-count
+      // arithmetic.
+      if (!idsKnownLive) {
         val dup = ids.groupBy("id").agg(count(lit(1)).as("c"))
           .filter(col("c") > 1).limit(1).collect()
         require(dup.isEmpty,
           s"delta has multiple rows for id ${dup.head.get(0)} — a segment " +
             "holds one version per id; reduce to last-per-key first")
       }
-      // `idsKnownLive` is the repair-merge fast path: when the caller
-      // ASSERTS every delta id is currently live (a retraction repair
-      // rewrites only lists it just read from the live view), the
-      // live-intersection read of the whole segment tree is pure
-      // overhead — the ids ARE the replaced set. The caller owns the
-      // invariant: a non-live id here would inflate the tombstone
-      // table and break describe()'s live-count arithmetic.
       // (.distinct() on the fast path: the slow path's semi-join yields
       // one tombstone per id; duplicate ids from a caller must not
       // inflate describe()'s live-count arithmetic — cheap, the set is
@@ -377,7 +375,27 @@ object SegmentedIndex {
     */
   def compactIndex(spark: SparkSession, path: String, sub: String,
                    pinnedBy: Option[String] = None,
-                   shape: DataFrame => DataFrame = identity): Unit = {
+                   shape: DataFrame => DataFrame = identity): Unit =
+    compactTree(spark, path, pinnedBy) { (tmpRoot, _) =>
+      val live = liveRows(spark, path, sub)
+      commitSegment(spark, tmpRoot, 0) { tmp =>
+        shape(live).write.mode("overwrite").parquet(s"$tmp/$sub")
+        live.select("id").limit(0)
+          .write.mode("overwrite").parquet(s"$tmp/tombstones")
+      }
+    }
+
+  /** The compaction frame every index shares: a single segment is
+    * compact by construction; otherwise refuse live pins, clear a
+    * crashed compactor's tmp tree, let `fold(tmpRoot, segments)` commit
+    * the folded segment 00000 under `tmpRoot`, and swap that tree in
+    * with the two-rename discipline of [[graft.sources.Layout.swapDirs]].
+    * Compaction collapses segment HISTORY: `asOf` reads older than it
+    * stop being answerable (the lakehouse vacuum trade).
+    */
+  private[functions] def compactTree(spark: SparkSession, path: String,
+                                     pinnedBy: Option[String])
+                                    (fold: (String, Seq[(Int, String)]) => Unit): Unit = {
     val segs = segmentDirs(spark, path)
     require(segs.nonEmpty, s"no segmented index at $path")
     if (segs.size == 1) return
@@ -385,15 +403,28 @@ object SegmentedIndex {
     val tmpRoot = s"$path/__segments_tmp"
     val (fs, tmpP) = hfs(spark, tmpRoot)
     if (fs.exists(tmpP)) fs.delete(tmpP, true)
-    val live = liveRows(spark, path, sub)
-    commitSegment(spark, tmpRoot, 0) { tmp =>
-      shape(live).write.mode("overwrite").parquet(s"$tmp/$sub")
-      live.select("id").limit(0)
-        .write.mode("overwrite").parquet(s"$tmp/tombstones")
-    }
+    fold(tmpRoot, segs)
     val (_, segRoot) = hfs(spark, s"$path/segments")
     graft.sources.Layout.swapDirs(fs, segRoot, tmpP,
       new Path(s"$path/__segments_old"), "index compact")
+  }
+
+  /** Drift trigger for a re-train decision: the share of `sub` rows
+    * that arrived AFTER the base build (segments > 00000), from parquet
+    * footer row counts only — no job. Counts raw segment rows
+    * (tombstone masking ignored), which upper-bounds the live delta
+    * share; when it crosses the caller's threshold (~0.3 is customary),
+    * the frozen parameters (IVF centroids, PQ codebooks) were trained
+    * on a minority of the corpus and a rebuild is due.
+    */
+  def deltaFraction(spark: SparkSession, path: String, sub: String): Double = {
+    val segs = segmentDirs(spark, path)
+    require(segs.nonEmpty, s"no segmented index at $path")
+    val counts = segs.map { case (i, d) =>
+      (i, graft.sources.ParquetMeta.rowCount(spark, s"$d/$sub")) }
+    val total = counts.map(_._2).sum
+    if (total == 0) 0.0
+    else counts.filter(_._1 > 0).map(_._2).sum.toDouble / total
   }
 
   /** RETRACT ids from a segmented index: append a tombstone-only

@@ -304,7 +304,7 @@ object VectorFunctions {
         .join(changed.select(col("id")), Seq("id"), "left_semi")
       try
         SegmentedIndex.mergeDeltaRows(spark, path, "graph",
-          replaced, changed, trustedDelta = true, idsKnownLive = true)
+          replaced, changed, idsKnownLive = true)
       finally changed.unpersist(blocking = false)
     } finally oldLists.unpersist(blocking = false)
   }
@@ -366,7 +366,7 @@ object VectorFunctions {
         try
           SegmentedIndex.mergeDeltaRows(spark, path, "graph",
             deadLive.unionByName(repaired.select("id")), repaired,
-            trustedDelta = true, idsKnownLive = true)
+            idsKnownLive = true)
         finally repaired.unpersist(blocking = false)
       } finally pre.unpersist(blocking = false)
     } finally dead.unpersist(blocking = false)
@@ -526,16 +526,14 @@ object VectorFunctions {
         graft.plans.Int8CodesExpr.int8Codes(col(vecCol)).as("codes")))
 
   /** O(delta) int8 refresh — [[SegmentedIndex.mergeDeltaRows]] contract
-    * (one row per id, NULL vector = deletion, `trustedDelta` skips the
-    * dup guard for one-row-per-id streaming batches).
+    * (one row per id, NULL vector = deletion).
     */
   def mergeInt8Delta(delta: DataFrame, idCol: String, vecCol: String,
-                     path: String, trustedDelta: Boolean = false): Unit =
+                     path: String): Unit =
     SegmentedIndex.mergeDeltaRows(delta.sparkSession, path, "codes8",
       delta.select(col(idCol)),
       delta.filter(col(vecCol).isNotNull).select(col(idCol).as("id"),
-        graft.plans.Int8CodesExpr.int8Codes(col(vecCol)).as("codes")),
-      trustedDelta)
+        graft.plans.Int8CodesExpr.int8Codes(col(vecCol)).as("codes")))
 
   /** Tombstone-masked live (id, codes) rows of a persisted int8 index.
     * `asOf` pins the snapshot to segments <= asOf.
@@ -950,27 +948,14 @@ object VectorFunctions {
     */
   def saveIvfIndex(df: DataFrame, idCol: String, vecCol: String,
                    path: String, clusters: Int, iters: Int): Unit = {
-    val spark = df.sparkSession
     val cents = kmeansCentroids(df, idCol, vecCol, clusters, iters)
-    // full rebuild: drop any prior tree (segments, or the pre-segment
-    // flat cells/ layout of an older build at the same path)
-    val (fs, _) = SegmentedIndex.hfs(spark, path)
-    Seq("segments", "cells").foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    // the centroid table, the cell assignment and the empty tombstone
-    // schema are independent writes over distinct dirs — overlap (§2.6)
+    // the centroid table and the cell segment are independent writes
+    // over distinct dirs — overlap (§2.6)
     graft.core.Fan.overlap(Seq(
       () => cents.write.mode("overwrite").parquet(s"$path/centroids"),
-      () => SegmentedIndex.commitSegment(spark, s"$path/segments", 0) { tmp =>
-        graft.core.Fan.overlap(Seq(
-          () => kmeansAssign(df, idCol, vecCol, cents)
-            .select(col(idCol).as("id"), col("cid"))
-            .write.mode("overwrite").parquet(s"$tmp/cells"),
-          () => SegmentedIndex.noTombstones(df.select(col(idCol).as("id")))
-            .write.mode("overwrite").parquet(s"$tmp/tombstones")))
-      }))
+      () => SegmentedIndex.createIndex(df.sparkSession, path, "cells",
+        kmeansAssign(df, idCol, vecCol, cents)
+          .select(col(idCol).as("id"), col("cid")))))
   }
 
   /** O(delta) IVF refresh, mirroring [[Curation.mergeBm25Delta]]'s
@@ -986,38 +971,18 @@ object VectorFunctions {
     * fresh [[kmeansAssign]] of the latest-version corpus under the
     * frozen centroids — bit-identical, since assignment is per-row and
     * order-free. Run [[compactIvfIndex]] to fold segments, and watch
-    * [[ivfDeltaFraction]] for drift: once deltas dominate the base,
-    * the centroids no longer describe the corpus and a re-train
-    * ([[saveIvfIndex]]) is due.
+    * [[SegmentedIndex.deltaFraction]] (`"cells"`) for drift: once
+    * deltas dominate the base, the centroids no longer describe the
+    * corpus and a re-train ([[saveIvfIndex]]) is due.
     */
   def mergeIvfDelta(delta: DataFrame, idCol: String, vecCol: String,
-                    path: String, trustedDelta: Boolean = false): Unit = {
+                    path: String): Unit = {
     val spark = delta.sparkSession
-    val segs = SegmentedIndex.segmentDirs(spark, path)
-    require(segs.nonEmpty, s"no IVF index at $path — saveIvfIndex first")
-    val n = segs.map(_._1).max + 1
-    val deltaIds = delta.select(col(idCol).as("id")).persist()
-    try {
-      if (!trustedDelta) { // see SegmentedIndex.mergeDeltaRows
-        val dup = deltaIds.groupBy("id").agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"delta has multiple rows for id ${dup.head.get(0)} — a segment " +
-            "holds one version per id; reduce to last-per-key first")
-      }
-      val cents = spark.read.parquet(s"$path/centroids")
-      val replaced = SegmentedIndex.liveRows(spark, path, "cells")
-        .select("id").join(deltaIds, Seq("id"), "left_semi")
-      val newCells = kmeansAssign(delta.filter(col(vecCol).isNotNull),
-          idCol, vecCol, cents)
-        .select(col(idCol).as("id"), col("cid"))
-      SegmentedIndex.commitSegment(spark, s"$path/segments", n) { tmp =>
-        // independent writes over distinct dirs — overlap (§2.6)
-        graft.core.Fan.overlap(Seq(
-          () => newCells.write.mode("overwrite").parquet(s"$tmp/cells"),
-          () => replaced.write.mode("overwrite").parquet(s"$tmp/tombstones")))
-      }
-    } finally deltaIds.unpersist()
+    val cents = spark.read.parquet(s"$path/centroids")
+    SegmentedIndex.mergeDeltaRows(spark, path, "cells",
+      delta.select(col(idCol)),
+      kmeansAssign(delta.filter(col(vecCol).isNotNull), idCol, vecCol, cents)
+        .select(col(idCol).as("id"), col("cid")))
   }
 
   /** Fold all live cell rows back into a single segment 00000 (dead
@@ -1037,25 +1002,6 @@ object VectorFunctions {
                path: String, asOf: Int = Int.MaxValue): DataFrame =
     SegmentedIndex.liveRows(spark, path, "cells", asOf)
 
-  /** Drift trigger for the re-cluster decision: the fraction of index
-    * rows that arrived AFTER the base build (segments > 00000), from
-    * parquet footer row counts only — no job. Counts raw segment rows
-    * (tombstone masking ignored), which upper-bounds the live delta
-    * share; when it crosses the caller's threshold (~0.3 is customary),
-    * the frozen centroids were trained on a minority of the corpus and
-    * [[saveIvfIndex]] should re-train.
-    */
-  def ivfDeltaFraction(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Double = {
-    val segs = SegmentedIndex.segmentDirs(spark, path)
-    require(segs.nonEmpty, s"no IVF index at $path")
-    val counts = segs.map { case (i, d) =>
-      (i, graft.sources.ParquetMeta.rowCount(spark, s"$d/cells")) }
-    val total = counts.map(_._2).sum
-    if (total == 0) 0.0
-    else counts.filter(_._1 > 0).map(_._2).sum.toDouble / total
-  }
-
   /** Close the drift loop: when the appended-delta share of the index
     * crosses `threshold` (footer arithmetic only — deciding costs ZERO
     * jobs), re-train and re-assign from the caller's current corpus
@@ -1068,7 +1014,7 @@ object VectorFunctions {
   def retrainIvfIfDrifted(corpus: DataFrame, idCol: String, vecCol: String,
                           path: String, threshold: Double,
                           clusters: Int, iters: Int): Boolean = {
-    val drift = ivfDeltaFraction(corpus.sparkSession, path)
+    val drift = SegmentedIndex.deltaFraction(corpus.sparkSession, path, "cells")
     if (drift <= threshold) false
     else { saveIvfIndex(corpus, idCol, vecCol, path, clusters, iters); true }
   }
@@ -1325,25 +1271,14 @@ object VectorFunctions {
   def savePqIndex(df: DataFrame, idCol: String, vecCol: String, path: String,
                   m: Int, dim: Int, ksub: Int, iters: Int,
                   trainFilter: Column = lit(true)): Unit = {
-    val spark = df.sparkSession
     val books = pqCodebooks(df.filter(trainFilter), idCol, vecCol, m, dim, ksub, iters)
-    val (fs, _) = SegmentedIndex.hfs(spark, path)
-    Seq("segments", "codes").foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    // codebook table, code segment and empty tombstone schema are
-    // independent writes over distinct dirs — overlap (§2.6)
+    // codebook table and code segment are independent writes over
+    // distinct dirs — overlap (§2.6)
     graft.core.Fan.overlap(Seq(
       () => books.write.mode("overwrite").parquet(s"$path/codebooks"),
-      () => SegmentedIndex.commitSegment(spark, s"$path/segments", 0) { tmp =>
-        graft.core.Fan.overlap(Seq(
-          () => pqEncodePacked(df, idCol, vecCol, books, m, dim)
-            .select(col(idCol).as("id"), col("codes"))
-            .write.mode("overwrite").parquet(s"$tmp/codes"),
-          () => SegmentedIndex.noTombstones(df.select(col(idCol).as("id")))
-            .write.mode("overwrite").parquet(s"$tmp/tombstones")))
-      }))
+      () => SegmentedIndex.createIndex(df.sparkSession, path, "codes",
+        pqEncodePacked(df, idCol, vecCol, books, m, dim)
+          .select(col(idCol).as("id"), col("codes")))))
   }
 
   /** O(delta) PQ refresh: delta vectors encode against the EXISTING
@@ -1355,37 +1290,18 @@ object VectorFunctions {
     * chain equal one [[pqEncodePacked]] of the latest-version corpus
     * under the frozen codebooks. Compact with [[compactPqIndex]];
     * retrain ([[savePqIndex]]) when the delta share drifts —
-    * [[pqDeltaFraction]] is the footer-only trigger.
+    * [[SegmentedIndex.deltaFraction]] (`"codes"`) is the footer-only
+    * trigger.
     */
   def mergePqDelta(delta: DataFrame, idCol: String, vecCol: String,
-                   path: String, m: Int, dim: Int,
-                   trustedDelta: Boolean = false): Unit = {
+                   path: String, m: Int, dim: Int): Unit = {
     val spark = delta.sparkSession
-    val segs = SegmentedIndex.segmentDirs(spark, path)
-    require(segs.nonEmpty, s"no PQ index at $path — savePqIndex first")
-    val n = segs.map(_._1).max + 1
-    val deltaIds = delta.select(col(idCol).as("id")).persist()
-    try {
-      if (!trustedDelta) { // see SegmentedIndex.mergeDeltaRows
-        val dup = deltaIds.groupBy("id").agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"delta has multiple rows for id ${dup.head.get(0)} — a segment " +
-            "holds one version per id; reduce to last-per-key first")
-      }
-      val books = spark.read.parquet(s"$path/codebooks")
-      val replaced = SegmentedIndex.liveRows(spark, path, "codes")
-        .select("id").join(deltaIds, Seq("id"), "left_semi")
-      val newCodes = pqEncodePacked(delta.filter(col(vecCol).isNotNull),
+    val books = spark.read.parquet(s"$path/codebooks")
+    SegmentedIndex.mergeDeltaRows(spark, path, "codes",
+      delta.select(col(idCol)),
+      pqEncodePacked(delta.filter(col(vecCol).isNotNull),
           idCol, vecCol, books, m, dim)
-        .select(col(idCol).as("id"), col("codes"))
-      SegmentedIndex.commitSegment(spark, s"$path/segments", n) { tmp =>
-        // independent writes over distinct dirs — overlap (§2.6)
-        graft.core.Fan.overlap(Seq(
-          () => newCodes.write.mode("overwrite").parquet(s"$tmp/codes"),
-          () => replaced.write.mode("overwrite").parquet(s"$tmp/tombstones")))
-      }
-    } finally deltaIds.unpersist()
+        .select(col(idCol).as("id"), col("codes")))
   }
 
   /** Fold live code rows back to segment 00000 (answers unchanged). */
@@ -1400,20 +1316,6 @@ object VectorFunctions {
   def pqCodes(spark: org.apache.spark.sql.SparkSession,
               path: String, asOf: Int = Int.MaxValue): DataFrame =
     SegmentedIndex.liveRows(spark, path, "codes", asOf)
-
-  /** Appended-row share of the PQ index from parquet footers (see
-    * [[ivfDeltaFraction]] — same re-train trigger semantics).
-    */
-  def pqDeltaFraction(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Double = {
-    val segs = SegmentedIndex.segmentDirs(spark, path)
-    require(segs.nonEmpty, s"no PQ index at $path")
-    val counts = segs.map { case (i, d) =>
-      (i, graft.sources.ParquetMeta.rowCount(spark, s"$d/codes")) }
-    val total = counts.map(_._2).sum
-    if (total == 0) 0.0
-    else counts.filter(_._1 > 0).map(_._2).sum.toDouble / total
-  }
 
   /** PQ top-k against a persisted index (see [[savePqIndex]]): stored
     * live packed codes answer the ADC shortlist; only shortlist
@@ -1465,15 +1367,14 @@ object VectorFunctions {
     * [[SegmentedIndex]] tree. Query cost = nprobe/clusters of the
     * corpus scanned as CODES (never floats), shortlist-sized exact
     * re-rank. All parameters frozen at build: refresh by
-    * [[mergeIvfPqDelta]], re-train when [[pqDeltaFraction]]-style
-    * drift (same `segments/` layout, so the same footer arithmetic
-    * applies) says the sample no longer describes the corpus.
+    * [[mergeIvfPqDelta]], re-train when
+    * [[SegmentedIndex.deltaFraction]] (`"codes"`) says the sample no
+    * longer describes the corpus.
     */
   def saveIvfPqIndex(df: DataFrame, idCol: String, vecCol: String, path: String,
                      clusters: Int, citers: Int, m: Int, dim: Int,
                      ksub: Int, piters: Int,
                      trainFilter: Column = lit(true)): Unit = {
-    val spark = df.sparkSession
     val cents = kmeansCentroids(df.filter(trainFilter), idCol, vecCol, clusters, citers)
     val res = assignWithCentroid(df, idCol, vecCol, cents)
       .withColumn("__res", residual(col(vecCol), col("centroid")))
@@ -1482,9 +1383,6 @@ object VectorFunctions {
     try {
       val books = pqCodebooks(res.filter(trainFilter), idCol, "__res",
         m, dim, ksub, piters)
-      val (fs, _) = SegmentedIndex.hfs(spark, path)
-      val segRoot = new org.apache.hadoop.fs.Path(s"$path/segments")
-      if (fs.exists(segRoot)) fs.delete(segRoot, true)
       // the cell rides the encode projection (keep) — no id join-back
       val codes = pqEncodePacked(res, idCol, "__res", books, m, dim,
           keep = Seq("__cell"))
@@ -1494,12 +1392,7 @@ object VectorFunctions {
       graft.core.Fan.overlap(Seq(
         () => cents.write.mode("overwrite").parquet(s"$path/centroids"),
         () => books.write.mode("overwrite").parquet(s"$path/codebooks"),
-        () => SegmentedIndex.commitSegment(spark, s"$path/segments", 0) { tmp =>
-          graft.core.Fan.overlap(Seq(
-            () => codes.write.mode("overwrite").parquet(s"$tmp/codes"),
-            () => codes.select("id").limit(0)
-              .write.mode("overwrite").parquet(s"$tmp/tombstones")))
-        }))
+        () => SegmentedIndex.createIndex(df.sparkSession, path, "codes", codes)))
     } finally res.unpersist(blocking = false)
   }
 
@@ -1512,8 +1405,7 @@ object VectorFunctions {
     * compact with [[SegmentedIndex.compactIndex]](path, "codes").
     */
   def mergeIvfPqDelta(delta: DataFrame, idCol: String, vecCol: String,
-                      path: String, m: Int, dim: Int,
-                      trustedDelta: Boolean = false): Unit = {
+                      path: String, m: Int, dim: Int): Unit = {
     val spark = delta.sparkSession
     val cents = spark.read.parquet(s"$path/centroids")
     val books = spark.read.parquet(s"$path/codebooks")
@@ -1530,7 +1422,7 @@ object VectorFunctions {
         keep = Seq("__cell"))
       .select(col(idCol).as("id"), col("__cell").as("cell"), col("codes"))
     SegmentedIndex.mergeDeltaRows(spark, path, "codes",
-      delta.select(col(idCol)), rows, trustedDelta)
+      delta.select(col(idCol)), rows)
   }
 
   /** IVF-PQ top-k (IVFADC): per query, probe the `nprobe` nearest

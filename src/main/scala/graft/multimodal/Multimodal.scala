@@ -1161,12 +1161,11 @@ object Multimodal {
     * re-ingested ids replace their old hash.
     */
   def mergePHashDelta(deltaIds: DataFrame, hashes: DataFrame, idCol: String,
-                      hashCol: String, path: String,
-                      trustedDelta: Boolean = false): Unit =
+                      hashCol: String, path: String): Unit =
     graft.functions.SegmentedIndex.mergeDeltaRows(hashes.sparkSession, path,
       "hashes", deltaIds.select(col(idCol).cast("long").as("id")),
       hashes.select(col(idCol).cast("long").as("id"),
-        col(hashCol).cast("long").as("hash")), trustedDelta)
+        col(hashCol).cast("long").as("hash")))
 
   /** Live (id, hash) rows of a persisted perceptual-hash index.
     * `asOf` pins the snapshot to segments <= asOf.

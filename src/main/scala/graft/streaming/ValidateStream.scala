@@ -127,414 +127,307 @@ object ValidateStream {
       }
       .start()
 
-  /** Streaming BM25 index maintenance: each micro-batch lands as ONE
-    * O(batch) segment via [[graft.functions.Curation.mergeBm25Delta]]
-    * (the first non-empty batch creates the index) — re-ingested ids
-    * are tombstoned, corpus stats stay exact by integer arithmetic,
-    * and each segment commits atomically (temp-write + rename), so a
-    * concurrent [[graft.functions.Curation.bm25TopKFromIndex]] reader
-    * always sees a consistent index. The corpus is never re-tokenized;
-    * fold accumulated segments with compactBm25Index on a maintenance
-    * cadence. A replayed batch (at-least-once sink) lands as an extra
-    * segment whose tombstones retire its first copy and whose stats
-    * delta nets to zero — query answers and stats are replay-stable,
-    * only the segment count grows until the next compaction.
+  /** The upkeep loop every persisted-index sink shares: each non-empty
+    * micro-batch is `merge`d as ONE O(batch) segment when the index at
+    * `path` exists, else `create`s it — None for indexes whose
+    * parameters (IVF centroids, PQ codebooks) train offline, where a
+    * missing index fails the batch. Past `maxSegments` the tree folds
+    * inline via `compact` (answers unchanged, two-rename swap). Safe
+    * here because foreachBatch serializes the sink: the compactor IS
+    * the single writer. Live snapshot pins under `pinnedBy` defer
+    * compaction instead of crashing the stream — segments accumulate
+    * until the pins retire. A replayed batch (at-least-once sink)
+    * lands as an extra segment whose tombstones retire its first copy,
+    * so answers are replay-stable; only the segment count grows until
+    * the next compaction. Every merge asserts one row per id per batch
+    * ([[graft.functions.SegmentedIndex.mergeDeltaRows]]): a CDC source
+    * emitting two versions of an id in one batch fails the batch.
     */
-  def bm25IndexStream(docs: DataFrame, idCol: String, textCol: String,
-                      path: String, checkpoint: String,
-                      maxSegments: Int = Int.MaxValue,
-                      pinnedBy: Option[String] = None,
-                      trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val C = graft.functions.Curation
-          if (C.bm25IndexExists(batch.sparkSession, path))
-            // trustedDelta default FALSE: the stream cannot itself
-            // verify the one-row-per-id-per-micro-batch contract, and
-            // a CDC source emitting two versions of an id in one batch
-            // would double-count stats under the fast path. Opt IN
-            // with trustedDelta = true when the source provably
-            // reduces to last-per-key first — that skips the
-            // dup-guard shuffle on the hot path (see
-            // Curation.mergeBm25Delta / SegmentedIndex.mergeDeltaRows)
-            C.mergeBm25Delta(batch, idCol, textCol, path,
-              trustedDelta = trustedDelta)
-          else C.saveBm25Index(batch, idCol, textCol, path)
-          // inline auto-compaction: a long-running upkeep stream must
-          // not accumulate one segment per micro-batch forever — past
-          // `maxSegments` the accumulated tree folds to one segment
-          // (answers unchanged, two-rename swap). Safe here because
-          // foreachBatch serializes the sink: the compactor IS the
-          // single writer.
-          // live snapshot pins defer compaction instead of crashing
-          // the stream — segments accumulate until the pins retire
-          if (graft.functions.SegmentedIndex
-                .segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            C.compactBm25Index(batch.sparkSession, path)
-        }
-      }
-      .start()
-
-  /** Streaming positional-index upkeep — the phrase/proximity twin of
-    * [[bm25IndexStream]]: the first micro-batch creates the index
-    * ([[graft.functions.PhraseSearch.savePositionalIndex]]), every
-    * later one lands as an O(batch) token-sorted segment
-    * ([[graft.functions.PhraseSearch.mergePositionalDelta]] — null
-    * text deletes, re-ingested ids tombstone their old postings), and
-    * past `maxSegments` the serialized sink compacts inline unless a
-    * live snapshot pin defers it. Replay-stable: a re-delivered
-    * batch's segment tombstones its first copy and re-derives
-    * identical postings. `trustedDelta` opt-in skips the dup-guard
-    * shuffle when the source provably emits one row per id per batch.
-    */
-  def phraseIndexStream(docs: DataFrame, idCol: String, textCol: String,
-                        path: String, checkpoint: String,
-                        maxSegments: Int = Int.MaxValue,
-                        pinnedBy: Option[String] = None,
-                        trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val P = graft.functions.PhraseSearch
-          val S = graft.functions.SegmentedIndex
-          if (S.exists(batch.sparkSession, path))
-            P.mergePositionalDelta(batch, idCol, textCol, path,
-              trustedDelta = trustedDelta)
-          else P.savePositionalIndex(batch, idCol, textCol, path)
-          if (S.segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            P.compactPositionalIndex(batch.sparkSession, path)
-        }
-      }
-      .start()
-
-  /** Streaming ExactSubstr gram-index upkeep — keeps the
-    * repeated-substring audit O(delta)-refreshable under document
-    * arrivals/replacements/deletions
-    * ([[graft.functions.DedupFunctions.mergeRepeatedSpanDelta]]; null
-    * text deletes). A replaced document's old grams stop counting the
-    * moment its segment commits, so span stats shift corpus-wide
-    * exactly as a rebuild would. First non-empty batch may CREATE the
-    * index (per-row gram explosion — no trained parameters), like the
-    * int8 sink. `n` is frozen per index path.
-    */
-  def repeatedSpanIndexStream(docs: DataFrame, idCol: String, textCol: String,
-                              path: String, checkpoint: String, n: Int,
-                              maxSegments: Int = Int.MaxValue,
-                              pinnedBy: Option[String] = None,
-                              trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val D = graft.functions.DedupFunctions
-          val S = graft.functions.SegmentedIndex
-          if (S.exists(batch.sparkSession, path))
-            D.mergeRepeatedSpanDelta(batch, idCol, textCol, path, n,
-              trustedDelta = trustedDelta)
-          else D.saveRepeatedSpanIndex(batch, idCol, textCol, path, n)
-          if (S.segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            D.compactRepeatedSpanIndex(batch.sparkSession, path)
-        }
-      }
-      .start()
-
-  /** Streaming simhash pigeonhole-index upkeep — the Hamming-tier twin
-    * of [[repeatedSpanIndexStream]]: the first non-empty micro-batch
-    * creates the index ([[graft.functions.DedupFunctions.saveSimhashIndex]]),
-    * every later one lands as an O(batch) postings segment
-    * ([[graft.functions.DedupFunctions.mergeSimhashDelta]] — null
-    * token arrays delete, re-ingested ids tombstone their old
-    * fingerprints), and past `maxSegments` the serialized sink
-    * compacts inline unless a live snapshot pin defers it.
-    * Replay-stable: a re-delivered batch's segment tombstones its
-    * first copy and re-derives identical postings, so the live view —
-    * and every [[graft.functions.DedupFunctions.simhashPairsFromIndex]]
-    * answer — is unchanged; only the segment count grows until the
-    * next compaction. The post-stream table is bit-identical to a
-    * batch [[graft.functions.DedupFunctions.saveSimhashIndex]] over
-    * the same corpus (spec-gated).
-    */
-  def simhashIndexStream(docs: DataFrame, idCol: String,
-                         elemsCol: org.apache.spark.sql.Column,
-                         path: String, checkpoint: String,
-                         bits: Int = 32, maxHamming: Int = 3,
-                         maxSegments: Int = Int.MaxValue,
-                         pinnedBy: Option[String] = None,
-                         trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val D = graft.functions.DedupFunctions
-          val S = graft.functions.SegmentedIndex
-          if (S.exists(batch.sparkSession, path))
-            D.mergeSimhashDelta(batch, idCol, elemsCol, path, bits,
-              maxHamming, trustedDelta = trustedDelta)
-          else D.saveSimhashIndex(batch, idCol, elemsCol, path, bits,
-            maxHamming)
-          if (S.segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            S.compactIndex(batch.sparkSession, path, "blocks")
-        }
-      }
-      .start()
-
-  /** Streaming IVF cell-index maintenance — the write half of the
-    * ingest loop whose read half is [[nearDupProbeStream]]: each
-    * micro-batch of ACCEPTED rows folds into the persisted IVF index
-    * via [[graft.functions.VectorFunctions.mergeIvfDelta]] — delta
-    * rows assign against the FROZEN centroids (no re-train
-    * mid-stream), re-ingested ids tombstone their old cells, null
-    * vectors delete. The next micro-batch's probe plans the static
-    * index side fresh and already sees them — no republish, no
-    * restart. Replay-stable like [[bm25IndexStream]]: a re-delivered
-    * batch's segment tombstones its first copy and assigns
-    * identically, so live cells never change. The index must already
-    * exist (saveIvfIndex — streaming ingest assigns to a trained
-    * quantizer, it does not train one); watch
-    * [[graft.functions.VectorFunctions.ivfDeltaFraction]] and
-    * re-train on a maintenance cadence when deltas dominate.
-    */
-  def ivfIndexStream(docs: DataFrame, idCol: String, vecCol: String,
-                     path: String, checkpoint: String,
-                     maxSegments: Int = Int.MaxValue,
-                     pinnedBy: Option[String] = None,
-                     trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val V = graft.functions.VectorFunctions
-          // trustedDelta: see bm25IndexStream — false restores the
-          // loud dup guard for sources that cannot prove uniqueness
-          V.mergeIvfDelta(batch, idCol, vecCol, path,
-            trustedDelta = trustedDelta)
-          // see bm25IndexStream: the serialized sink is the single
-          // writer, so inline compaction past maxSegments is safe
-          if (graft.functions.SegmentedIndex
-                .segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            V.compactIvfIndex(batch.sparkSession, path)
-        }
-      }
-      .start()
-
-  /** Streaming PQ index upkeep — the code-store twin of
-    * [[ivfIndexStream]]: each micro-batch encodes against the FROZEN
-    * codebooks ([[graft.functions.VectorFunctions.mergePqDelta]] —
-    * no re-training ever happens on the hot path) and lands as one
-    * O(batch) code segment; null vectors delete, re-ingests replace,
-    * inline compaction past `maxSegments` bounds the tree. The index
-    * must exist ([[graft.functions.VectorFunctions.savePqIndex]]) —
-    * codebooks are trained offline, exactly the IVF centroid
-    * contract. Watch
-    * [[graft.functions.VectorFunctions.pqDeltaFraction]] for the
-    * re-train trigger.
-    */
-  def pqIndexStream(docs: DataFrame, idCol: String, vecCol: String,
-                    path: String, checkpoint: String, m: Int, dim: Int,
-                    maxSegments: Int = Int.MaxValue,
-                    pinnedBy: Option[String] = None,
-                    trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val V = graft.functions.VectorFunctions
-          // trustedDelta: see bm25IndexStream
-          V.mergePqDelta(batch, idCol, vecCol, path, m, dim,
-            trustedDelta = trustedDelta)
-          if (graft.functions.SegmentedIndex
-                .segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            V.compactPqIndex(batch.sparkSession, path)
-        }
-      }
-      .start()
-
-  /** Streaming IVF-PQ (IVFADC) index upkeep — completes the ANN index
-    * family's streaming symmetry: each micro-batch assigns to the
-    * FROZEN coarse centroids and residual-encodes against the FROZEN
-    * codebooks ([[graft.functions.VectorFunctions.mergeIvfPqDelta]]),
-    * landing as one O(batch) segment; null vectors delete, re-ingests
-    * replace. The index must exist ([[graft.functions.VectorFunctions
-    * .saveIvfPqIndex]] — both parameter sets train offline). Inline
-    * compaction past `maxSegments` bounds the tree and defers while
-    * `pinnedBy` manifests hold live pins.
-    */
-  def ivfPqIndexStream(docs: DataFrame, idCol: String, vecCol: String,
-                       path: String, checkpoint: String, m: Int, dim: Int,
-                       maxSegments: Int = Int.MaxValue,
-                       pinnedBy: Option[String] = None,
-                       trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val V = graft.functions.VectorFunctions
-          // trustedDelta: see bm25IndexStream
-          V.mergeIvfPqDelta(batch, idCol, vecCol, path, m, dim,
-            trustedDelta = trustedDelta)
-          if (graft.functions.SegmentedIndex
-                .segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            graft.functions.SegmentedIndex
-              .compactIndex(batch.sparkSession, path, "codes")
-        }
-      }
-      .start()
-
-  /** Streaming upkeep of the persisted kNN GRAPH
-    * ([[graft.functions.VectorFunctions.saveKnnGraph]]): each
-    * micro-batch of arriving vectors merges in O(|batch|·|corpus|)
-    * (new lists for the batch, changed-lists-only repair of the old
-    * ones) and then APPENDS itself to `corpusPath` — the stream owns
-    * both artifacts, so the pre-delta corpus every merge needs is
-    * always the previous batch's post-state. The graph tier is
-    * ARRIVALS-ONLY: a re-ingested id would corrupt the bounded lists,
-    * so unless `trustedDelta` the sink proves each batch is new ids
-    * with unique rows and fails loudly otherwise; replacements and
-    * deletes route through
-    * [[graft.functions.VectorFunctions.retractKnnGraph]] + re-ingest.
-    * Like the other index sinks, the first micro-batch BOOTSTRAPS when
-    * the graph index does not exist yet: it writes the batch as the
-    * initial corpus and builds the initial graph from it (corpus first,
-    * so a crash between the two replays back into the bootstrap branch
-    * and overwrites idempotently) — a stream may start on empty paths.
-    */
-  def knnGraphStream(docs: DataFrame, idCol: String, vecCol: String,
-                     graphPath: String, corpusPath: String,
-                     checkpoint: String, k: Int,
-                     maxSegments: Int = Int.MaxValue,
-                     pinnedBy: Option[String] = None,
-                     trustedDelta: Boolean = false)
+  private def upkeepStream(docs: DataFrame, path: String, checkpoint: String,
+                           maxSegments: Int, pinnedBy: Option[String],
+                           compact: SparkSession => Unit)
+                          (merge: DataFrame => Unit,
+                           create: Option[DataFrame => Unit])
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val V = graft.functions.VectorFunctions
-          val delta = batch.select(col(idCol), col(vecCol)).persist()
-          try {
-            if (!graft.functions.SegmentedIndex.exists(spark, graphPath)) {
-              // bootstrap: no graph yet — this batch IS the corpus.
-              // Corpus lands first so a crash before the graph build
-              // replays back into this branch (graph still absent) and
-              // overwrites both artifacts idempotently.
-              if (!trustedDelta) {
-                val dup = delta.groupBy(idCol).agg(count(lit(1)).as("c"))
-                  .filter(col("c") > 1).limit(1).collect()
-                require(dup.isEmpty,
-                  s"knnGraphStream: bootstrap batch has multiple rows for " +
-                    s"id ${dup.headOption.map(_.get(0)).orNull} — one vector per id")
-              }
-              delta.write.mode("overwrite").parquet(corpusPath)
-              V.saveKnnGraph(delta, idCol, vecCol, graphPath, k)
-            } else {
-            val corpus = spark.read.parquet(corpusPath)
-            // replay detection: a re-delivered batch whose ids ALL
-            // already reached the corpus WITH THE SAME VECTORS was
-            // fully committed — skip it (the graph merge is itself
-            // replay-stable, but skipping also avoids a duplicate
-            // corpus append). A crash BETWEEN merge and append replays
-            // with zero overlap and re-merges idempotently; a partial
-            // overlap, or same ids with different vectors, is a
-            // genuine re-ingest and fails loudly below.
-            val nDelta = delta.count()
-            val nAlready = delta.join(corpus.select(col(idCol)),
-              Seq(idCol), "left_semi").count()
-            val isReplay = nAlready == nDelta && {
-              val stored = corpus.select(col(idCol), col(vecCol).as("__stored"))
-              delta.join(stored, Seq(idCol))
-                .filter(!(col(vecCol) <=> col("__stored")))
-                .limit(1).collect().isEmpty
-            }
-            if (!isReplay) {
-              if (!trustedDelta) {
-                val dup = delta.groupBy(idCol).agg(count(lit(1)).as("c"))
-                  .filter(col("c") > 1).limit(1).collect()
-                require(dup.isEmpty,
-                  s"knnGraphStream: batch has multiple rows for id " +
-                    s"${dup.headOption.map(_.get(0)).orNull} — one vector per id")
-                require(nAlready == 0L,
-                  s"knnGraphStream: $nAlready of $nDelta batch ids already " +
-                    "in the corpus — the graph stream is arrivals-only; route " +
-                    "replacements through retractKnnGraph + re-ingest")
-              }
-              V.mergeKnnGraphDelta(spark, graphPath, corpus, delta,
-                idCol, vecCol, k)
-              delta.write.mode("append").parquet(corpusPath)
-            }
-            // see bm25IndexStream: single serialized writer, so inline
-            // compaction past maxSegments is safe; pins defer it
-            if (graft.functions.SegmentedIndex
-                  .segmentDirs(spark, graphPath).size > maxSegments &&
-                !pinned(spark, graphPath, pinnedBy))
-              graft.functions.SegmentedIndex
-                .compactIndex(spark, graphPath, "graph")
-            }
-          } finally delta.unpersist(blocking = false)
+          val S = graft.functions.SegmentedIndex
+          if (S.exists(spark, path)) merge(batch)
+          else create match {
+            case Some(build) => build(batch)
+            case None => throw new IllegalStateException(
+              s"no index at $path — build it before streaming into it")
+          }
+          if (S.segmentDirs(spark, path).size > maxSegments &&
+              !pinned(spark, path, pinnedBy))
+            compact(spark)
         }
       }
       .start()
 
-  /** Streaming int8 code-store upkeep — the simplest member of the ANN
-    * streaming family: quantization is a pure per-row function (no
-    * trained parameters at all), so the first non-empty batch may
-    * CREATE the index and every later batch lands as one O(batch)
-    * segment ([[graft.functions.VectorFunctions.mergeInt8Delta]]);
-    * null vectors delete, re-ingests replace, and the merged store is
+  /** Streaming BM25 index maintenance ([[upkeepStream]]): each
+    * micro-batch lands as one segment via
+    * [[graft.functions.Curation.mergeBm25Delta]] (the first non-empty
+    * batch creates the index) — re-ingested ids are tombstoned, corpus
+    * stats stay exact by integer arithmetic, and each segment commits
+    * atomically (temp-write + rename), so a concurrent
+    * [[graft.functions.Curation.bm25TopKFromIndex]] reader always sees
+    * a consistent index. The corpus is never re-tokenized.
+    */
+  def bm25IndexStream(docs: DataFrame, idCol: String, textCol: String,
+                      path: String, checkpoint: String,
+                      maxSegments: Int = Int.MaxValue,
+                      pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val C = graft.functions.Curation
+    upkeepStream(docs, path, checkpoint, maxSegments, pinnedBy,
+      C.compactBm25Index(_, path))(
+      C.mergeBm25Delta(_, idCol, textCol, path),
+      Some(C.saveBm25Index(_, idCol, textCol, path)))
+  }
+
+  /** Streaming positional-index upkeep ([[upkeepStream]]) — the
+    * phrase/proximity twin of [[bm25IndexStream]]: the first
+    * micro-batch creates the index
+    * ([[graft.functions.PhraseSearch.savePositionalIndex]]), every
+    * later one lands as a token-sorted segment
+    * ([[graft.functions.PhraseSearch.mergePositionalDelta]] — null
+    * text deletes, re-ingested ids tombstone their old postings).
+    */
+  def phraseIndexStream(docs: DataFrame, idCol: String, textCol: String,
+                        path: String, checkpoint: String,
+                        maxSegments: Int = Int.MaxValue,
+                        pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val P = graft.functions.PhraseSearch
+    upkeepStream(docs, path, checkpoint, maxSegments, pinnedBy,
+      P.compactPositionalIndex(_, path))(
+      P.mergePositionalDelta(_, idCol, textCol, path),
+      Some(P.savePositionalIndex(_, idCol, textCol, path)))
+  }
+
+  /** Streaming ExactSubstr gram-index upkeep ([[upkeepStream]]) — keeps
+    * the repeated-substring audit O(delta)-refreshable under document
+    * arrivals/replacements/deletions
+    * ([[graft.functions.DedupFunctions.mergeRepeatedSpanDelta]]; null
+    * text deletes). A replaced document's old grams stop counting the
+    * moment its segment commits, so span stats shift corpus-wide
+    * exactly as a rebuild would. The first non-empty batch may CREATE
+    * the index (per-row gram explosion — no trained parameters). `n`
+    * is frozen per index path.
+    */
+  def repeatedSpanIndexStream(docs: DataFrame, idCol: String, textCol: String,
+                              path: String, checkpoint: String, n: Int,
+                              maxSegments: Int = Int.MaxValue,
+                              pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val D = graft.functions.DedupFunctions
+    upkeepStream(docs, path, checkpoint, maxSegments, pinnedBy,
+      D.compactRepeatedSpanIndex(_, path))(
+      D.mergeRepeatedSpanDelta(_, idCol, textCol, path, n),
+      Some(D.saveRepeatedSpanIndex(_, idCol, textCol, path, n)))
+  }
+
+  /** Streaming simhash pigeonhole-index upkeep ([[upkeepStream]]) — the
+    * Hamming-tier twin of [[repeatedSpanIndexStream]]: the first
+    * non-empty micro-batch creates the index
+    * ([[graft.functions.DedupFunctions.saveSimhashIndex]]), every later
+    * one lands as a postings segment
+    * ([[graft.functions.DedupFunctions.mergeSimhashDelta]] — null token
+    * arrays delete, re-ingested ids tombstone their old fingerprints).
+    * The post-stream table is bit-identical to a batch
+    * [[graft.functions.DedupFunctions.saveSimhashIndex]] over the same
+    * corpus (spec-gated).
+    */
+  def simhashIndexStream(docs: DataFrame, idCol: String,
+                         elemsCol: org.apache.spark.sql.Column,
+                         path: String, checkpoint: String,
+                         bits: Int = 32, maxHamming: Int = 3,
+                         maxSegments: Int = Int.MaxValue,
+                         pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val D = graft.functions.DedupFunctions
+    upkeepStream(docs, path, checkpoint, maxSegments, pinnedBy,
+      graft.functions.SegmentedIndex.compactIndex(_, path, "blocks"))(
+      D.mergeSimhashDelta(_, idCol, elemsCol, path, bits, maxHamming),
+      Some(D.saveSimhashIndex(_, idCol, elemsCol, path, bits, maxHamming)))
+  }
+
+  /** Streaming IVF cell-index maintenance ([[upkeepStream]]) — the
+    * write half of the ingest loop whose read half is
+    * [[nearDupProbeStream]]: each micro-batch of ACCEPTED rows folds
+    * into the persisted IVF index via
+    * [[graft.functions.VectorFunctions.mergeIvfDelta]] — delta rows
+    * assign against the FROZEN centroids (no re-train mid-stream),
+    * re-ingested ids tombstone their old cells, null vectors delete.
+    * The next micro-batch's probe plans the static index side fresh
+    * and already sees them — no republish, no restart. The index must
+    * already exist (saveIvfIndex — streaming ingest assigns to a
+    * trained quantizer, it does not train one); watch
+    * [[graft.functions.SegmentedIndex.deltaFraction]] (`"cells"`) and
+    * re-train on a maintenance cadence when deltas dominate.
+    */
+  def ivfIndexStream(docs: DataFrame, idCol: String, vecCol: String,
+                     path: String, checkpoint: String,
+                     maxSegments: Int = Int.MaxValue,
+                     pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val V = graft.functions.VectorFunctions
+    upkeepStream(docs, path, checkpoint, maxSegments, pinnedBy,
+      V.compactIvfIndex(_, path))(
+      V.mergeIvfDelta(_, idCol, vecCol, path), None)
+  }
+
+  /** Streaming PQ index upkeep ([[upkeepStream]]) — the code-store twin
+    * of [[ivfIndexStream]]: each micro-batch encodes against the FROZEN
+    * codebooks ([[graft.functions.VectorFunctions.mergePqDelta]] — no
+    * re-training ever happens on the hot path) and lands as one code
+    * segment; null vectors delete, re-ingests replace. The index must
+    * exist ([[graft.functions.VectorFunctions.savePqIndex]]) — codebooks
+    * are trained offline, exactly the IVF centroid contract. Watch
+    * [[graft.functions.SegmentedIndex.deltaFraction]] (`"codes"`) for
+    * the re-train trigger.
+    */
+  def pqIndexStream(docs: DataFrame, idCol: String, vecCol: String,
+                    path: String, checkpoint: String, m: Int, dim: Int,
+                    maxSegments: Int = Int.MaxValue,
+                    pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val V = graft.functions.VectorFunctions
+    upkeepStream(docs, path, checkpoint, maxSegments, pinnedBy,
+      V.compactPqIndex(_, path))(
+      V.mergePqDelta(_, idCol, vecCol, path, m, dim), None)
+  }
+
+  /** Streaming IVF-PQ (IVFADC) index upkeep ([[upkeepStream]]) —
+    * completes the ANN index family's streaming symmetry: each
+    * micro-batch assigns to the FROZEN coarse centroids and
+    * residual-encodes against the FROZEN codebooks
+    * ([[graft.functions.VectorFunctions.mergeIvfPqDelta]]), landing as
+    * one segment; null vectors delete, re-ingests replace. The index
+    * must exist ([[graft.functions.VectorFunctions.saveIvfPqIndex]] —
+    * both parameter sets train offline).
+    */
+  def ivfPqIndexStream(docs: DataFrame, idCol: String, vecCol: String,
+                       path: String, checkpoint: String, m: Int, dim: Int,
+                       maxSegments: Int = Int.MaxValue,
+                       pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val V = graft.functions.VectorFunctions
+    upkeepStream(docs, path, checkpoint, maxSegments, pinnedBy,
+      graft.functions.SegmentedIndex.compactIndex(_, path, "codes"))(
+      V.mergeIvfPqDelta(_, idCol, vecCol, path, m, dim), None)
+  }
+
+  /** Streaming upkeep of the persisted kNN GRAPH
+    * ([[graft.functions.VectorFunctions.saveKnnGraph]]) through
+    * [[upkeepStream]]: each micro-batch of arriving vectors merges in
+    * O(|batch|·|corpus|) (new lists for the batch, changed-lists-only
+    * repair of the old ones) and then APPENDS itself to `corpusPath` —
+    * the stream owns both artifacts, so the pre-delta corpus every
+    * merge needs is always the previous batch's post-state. The graph
+    * tier is ARRIVALS-ONLY: a re-ingested id would corrupt the bounded
+    * lists, so the sink proves each batch is new ids with unique rows
+    * and fails loudly otherwise; replacements and deletes route
+    * through [[graft.functions.VectorFunctions.retractKnnGraph]] +
+    * re-ingest. The first micro-batch BOOTSTRAPS when the graph index
+    * does not exist yet: it writes the batch as the initial corpus and
+    * builds the initial graph from it (corpus first, so a crash between
+    * the two replays back into the bootstrap branch and overwrites
+    * idempotently) — a stream may start on empty paths.
+    */
+  def knnGraphStream(docs: DataFrame, idCol: String, vecCol: String,
+                     graphPath: String, corpusPath: String,
+                     checkpoint: String, k: Int,
+                     maxSegments: Int = Int.MaxValue,
+                     pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val V = graft.functions.VectorFunctions
+    def withDelta(batch: DataFrame)(f: DataFrame => Unit): Unit = {
+      val delta = batch.select(col(idCol), col(vecCol)).persist()
+      try f(delta) finally delta.unpersist(blocking = false)
+    }
+    def requireUniqueIds(delta: DataFrame, what: String): Unit = {
+      val dup = delta.groupBy(idCol).agg(count(lit(1)).as("c"))
+        .filter(col("c") > 1).limit(1).collect()
+      require(dup.isEmpty,
+        s"knnGraphStream: $what has multiple rows for id " +
+          s"${dup.headOption.map(_.get(0)).orNull} — one vector per id")
+    }
+    upkeepStream(docs, graphPath, checkpoint, maxSegments, pinnedBy,
+      graft.functions.SegmentedIndex.compactIndex(_, graphPath, "graph"))(
+      merge = withDelta(_) { delta =>
+        val corpus = delta.sparkSession.read.parquet(corpusPath)
+        // replay detection: a re-delivered batch whose ids ALL already
+        // reached the corpus WITH THE SAME VECTORS was fully committed
+        // — skip it (the graph merge is itself replay-stable, but
+        // skipping also avoids a duplicate corpus append). A crash
+        // BETWEEN merge and append replays with zero overlap and
+        // re-merges idempotently; a partial overlap, or same ids with
+        // different vectors, is a genuine re-ingest and fails loudly.
+        val nDelta = delta.count()
+        val nAlready = delta.join(corpus.select(col(idCol)),
+          Seq(idCol), "left_semi").count()
+        val isReplay = nAlready == nDelta && {
+          val stored = corpus.select(col(idCol), col(vecCol).as("__stored"))
+          delta.join(stored, Seq(idCol))
+            .filter(!(col(vecCol) <=> col("__stored")))
+            .limit(1).collect().isEmpty
+        }
+        if (!isReplay) {
+          requireUniqueIds(delta, "batch")
+          require(nAlready == 0L,
+            s"knnGraphStream: $nAlready of $nDelta batch ids already " +
+              "in the corpus — the graph stream is arrivals-only; route " +
+              "replacements through retractKnnGraph + re-ingest")
+          V.mergeKnnGraphDelta(delta.sparkSession, graphPath, corpus, delta,
+            idCol, vecCol, k)
+          delta.write.mode("append").parquet(corpusPath)
+        }
+      },
+      // bootstrap: no graph yet — this batch IS the corpus. Corpus
+      // lands first so a crash before the graph build replays back
+      // into this branch (graph still absent) and overwrites both
+      // artifacts idempotently.
+      create = Some(withDelta(_) { delta =>
+        requireUniqueIds(delta, "bootstrap batch")
+        delta.write.mode("overwrite").parquet(corpusPath)
+        V.saveKnnGraph(delta, idCol, vecCol, graphPath, k)
+      }))
+  }
+
+  /** Streaming int8 code-store upkeep ([[upkeepStream]]) — the simplest
+    * member of the ANN streaming family: quantization is a pure per-row
+    * function (no trained parameters at all), so the first non-empty
+    * batch may CREATE the index and every later batch lands as one
+    * segment ([[graft.functions.VectorFunctions.mergeInt8Delta]]); null
+    * vectors delete, re-ingests replace, and the merged store is
     * trivially identical to a fresh build over the latest corpus.
     */
   def int8IndexStream(docs: DataFrame, idCol: String, vecCol: String,
                       path: String, checkpoint: String,
                       maxSegments: Int = Int.MaxValue,
-                      pinnedBy: Option[String] = None,
-                      trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val V = graft.functions.VectorFunctions
-          val S = graft.functions.SegmentedIndex
-          if (S.exists(batch.sparkSession, path))
-            // trustedDelta: see bm25IndexStream
-            V.mergeInt8Delta(batch, idCol, vecCol, path,
-              trustedDelta = trustedDelta)
-          else V.saveInt8Index(batch, idCol, vecCol, path)
-          if (S.segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            S.compactIndex(batch.sparkSession, path, "codes8")
-        }
-      }
-      .start()
+                      pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val V = graft.functions.VectorFunctions
+    upkeepStream(docs, path, checkpoint, maxSegments, pinnedBy,
+      graft.functions.SegmentedIndex.compactIndex(_, path, "codes8"))(
+      V.mergeInt8Delta(_, idCol, vecCol, path),
+      Some(V.saveInt8Index(_, idCol, vecCol, path)))
+  }
 
-  /** Streaming perceptual-hash index upkeep — the multimodal ingest
-    * loop: each micro-batch of media payloads hashes on the executors
-    * (real decode; only (id, 8-byte hash) rows reach the sink) and
-    * lands as one O(batch) segment via
+  /** Streaming perceptual-hash index upkeep ([[upkeepStream]]) — the
+    * multimodal ingest loop: each micro-batch of media payloads hashes
+    * on the executors (real decode; only (id, 8-byte hash) rows reach
+    * the sink) and lands as one segment via
     * [[graft.multimodal.Multimodal.mergePHashDelta]]; the first
     * non-empty batch creates the index. The engine-wide deletion
-    * contract rides along (undecodable/null payload ⇒ tombstone), the
-    * serialized sink is the single writer, and inline compaction past
-    * `maxSegments` bounds the tree over unbounded uptime. A replayed
-    * batch re-lands as tombstone+replace with identical hashes —
-    * probe answers are replay-stable. Compose with
+    * contract rides along (undecodable/null payload ⇒ tombstone). A
+    * replayed batch re-lands as tombstone+replace with identical
+    * hashes — probe answers are replay-stable. Compose with
     * [[graft.multimodal.Multimodal.probePHashIndex]] on the query/gate
     * side (stream-static, no state).
     */
@@ -543,28 +436,20 @@ object ValidateStream {
                        hasher: (DataFrame, String, String) => DataFrame =
                          graft.multimodal.Multimodal.imagePHashes,
                        maxSegments: Int = Int.MaxValue,
-                       pinnedBy: Option[String] = None,
-                       trustedDelta: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val M = graft.multimodal.Multimodal
-          val S = graft.functions.SegmentedIndex
-          val hashes = hasher(batch, idCol, payloadCol)
-          val hashCol = hashes.columns.filterNot(_ == idCol).head
-          if (S.exists(batch.sparkSession, path))
-            // trustedDelta: see bm25IndexStream
-            M.mergePHashDelta(batch.select(col(idCol)), hashes,
-              idCol, hashCol, path, trustedDelta = trustedDelta)
-          else M.savePHashIndex(hashes, idCol, hashCol, path)
-          if (S.segmentDirs(batch.sparkSession, path).size > maxSegments &&
-              !pinned(batch.sparkSession, path, pinnedBy))
-            S.compactIndex(batch.sparkSession, path, "hashes")
-        }
-      }
-      .start()
+                       pinnedBy: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val M = graft.multimodal.Multimodal
+    def hashed(batch: DataFrame): (DataFrame, String) = {
+      val hashes = hasher(batch, idCol, payloadCol)
+      (hashes, hashes.columns.filterNot(_ == idCol).head)
+    }
+    upkeepStream(media, path, checkpoint, maxSegments, pinnedBy,
+      graft.functions.SegmentedIndex.compactIndex(_, path, "hashes"))(
+      batch => { val (hashes, hashCol) = hashed(batch)
+        M.mergePHashDelta(batch.select(col(idCol)), hashes, idCol, hashCol, path) },
+      Some(batch => { val (hashes, hashCol) = hashed(batch)
+        M.savePHashIndex(hashes, idCol, hashCol, path) }))
+  }
 
   /** Streaming curation: the batch curation decisions (language ID,
     * quality score, PII scrub) applied to a live document stream. All

@@ -273,4 +273,42 @@ class ProcessJobSpec extends SparkSpec {
     ProcessMain.main(Array("CTR", in, state))
     assert(spark.read.parquet(s"$state/tables/maf").count() == 1)
   }
+
+  test("ProcessMain: a failed table swap keeps the previous table and fails the run") {
+    val in = tmpDir("pm-in")
+    val state = tmpDir("pm-state")
+    stage(in)
+    ProcessMain.main(Array("CTR", in, state))
+    // a changed MAF makes run 2 rewrite the maf table, on a filesystem
+    // whose rename of the new table into place fails
+    Files.write(Paths.get(in, "data_mutations_extended_CTR.maf"),
+      ("CHROMOSOME\tSTART_POSITION\tEND_POSITION\tREFERENCE_ALLELE\tTUMOR_SAMPLE_BARCODE\tTUMOR_SEQ_ALLELE2\tT_DEPTH\n" +
+        "1\t100\t101\tA\tGENIE-CTR-p1-s1\tT\t30\n" +
+        "2\t500\t501\tG\tGENIE-CTR-p1-s1\tC\t30\n").getBytes)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.failtmprename.impl", classOf[FailTmpRenameFileSystem].getName)
+    hconf.setBoolean("fs.failtmprename.impl.disable.cache", true)
+    val e =
+      try intercept[IllegalStateException] {
+        ProcessMain.main(Array("CTR", in, s"failtmprename://$state"))
+      } finally Seq("fs.failtmprename.impl", "fs.failtmprename.impl.disable.cache")
+        .foreach(hconf.unset)
+    // the live table is the previous run's, readable and complete
+    assert(new java.io.File(s"$state/tables/maf").isDirectory,
+      s"the maf table is gone after: ${e.getMessage}")
+    assert(spark.read.parquet(s"$state/tables/maf").count() == 1)
+    assert(spark.read.parquet(s"$state/tables/clinical").count() == 1)
+    assert(e.getMessage.contains("original restored"), e.getMessage)
+  }
+}
+
+/** Local filesystem under the `failtmprename` scheme whose rename of a
+  * `__tmp_*` directory fails, as a full disk or a dying JVM would leave
+  * the second rename of a table swap.
+  */
+class FailTmpRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failtmprename:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    !src.getName.startsWith("__tmp_") && super.rename(src, dst)
 }

@@ -1400,26 +1400,6 @@ class FunctionsSpec extends SparkSpec {
       Seq("00000"))
   }
 
-  test("bm25 merge: trustedDelta skips the dup guard but lands the identical segment") {
-    // the streaming sink's fast path: caller guarantees one row per id,
-    // the merge drops the dup-guard shuffle — results must be
-    // bit-identical to the guarded path on the same delta
-    val delta = Seq((2L, "beta prime"), (3L, "zeta")).toDF("doc_id", "text")
-    val qs = Seq(0L -> Seq("beta"), 1L -> Seq("zeta"), 2L -> Seq("alpha"))
-    val got = Seq(false, true).map { trusted =>
-      val path = java.nio.file.Files.createTempDirectory("bm25trust").toString
-      Curation.saveBm25Index(
-        Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
-        "doc_id", "text", path)
-      Curation.mergeBm25Delta(delta, "doc_id", "text", path,
-        trustedDelta = trusted)
-      Curation.bm25TopKFromIndex(spark, path, qs, k = 3)
-        .as[(Long, Long, Double, Long)].collect().toSet
-    }
-    assert(got(0) == got(1))
-    assert(got(0).nonEmpty)
-  }
-
   test("bm25 merge: null-text rows are deletions — retracted doc gone, stats match a rebuild") {
     val path = java.nio.file.Files.createTempDirectory("bm25del").toString
     val base = Seq((1L, "alpha beta"), (2L, "alpha gamma"), (3L, "alpha"))

@@ -282,7 +282,7 @@ class ScaleSpec extends SparkSpec {
     assert(live == expect, "merged live cells must equal a fresh frozen-centroid assignment")
     assert(!live.exists(_._1 == 97L), "deleted id must not be live")
     // drift trigger counts appended raw rows from footers only
-    val frac = VectorFunctions.ivfDeltaFraction(spark, path)
+    val frac = SegmentedIndex.deltaFraction(spark, path, "cells")
     assert(frac > 0.3 && frac < 0.5, s"delta fraction out of range: $frac")
     // retract a live id via the generic tombstone-only segment
     VectorFunctions.mergeIvfDelta(delta, "vec_id", "embedding", path) // idempotent re-merge
@@ -464,7 +464,7 @@ class ScaleSpec extends SparkSpec {
     assert(live == expect,
       "merged live codes must equal a frozen-codebook re-encode of the latest corpus")
     assert(!live.exists(_._1 == 97L))
-    val frac = VectorFunctions.pqDeltaFraction(spark, idx)
+    val frac = SegmentedIndex.deltaFraction(spark, idx, "codes")
     assert(frac > 0.3 && frac < 0.5, s"delta fraction out of range: $frac")
     // retraction drops ids from the shortlist source; compaction folds
     SegmentedIndex.retract(spark, idx, Seq(4L, 8L).toDF("id"), Seq("codes"))

@@ -652,7 +652,7 @@ class StreamingSpec extends SparkSpec {
       s"$dir/idx", threshold = 0.1, clusters = 4, iters = 2))
     assert(SegmentedIndex.segmentDirs(spark, s"$dir/idx").map(_._1) == Seq(0))
     assert(VectorFunctions.ivfCells(spark, s"$dir/idx").count() == 120L)
-    assert(VectorFunctions.ivfDeltaFraction(spark, s"$dir/idx") == 0.0)
+    assert(SegmentedIndex.deltaFraction(spark, s"$dir/idx", "cells") == 0.0)
   }
 
   test("streaming upkeep trustedDelta=false restores the loud dup guard") {
@@ -661,7 +661,7 @@ class StreamingSpec extends SparkSpec {
     val dir = tmpDir("bm25dupguard")
     val q = ValidateStream.bm25IndexStream(
       mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      s"$dir/idx", s"$dir/ckpt", trustedDelta = false)
+      s"$dir/idx", s"$dir/ckpt")
     mem.addData((1L, "alpha"), (2L, "beta"))
     q.processAllAvailable() // clean first batch creates the index
     // a CDC source that cannot prove uniqueness: two versions of doc 1
