@@ -15,6 +15,14 @@ object ProcessMain {
   /** State layout under `stateDir`: `file_status.parquet` (name, md5,
     * status) drives the P29 md5-skip across runs; `tables/<name>` holds
     * the current table contents the upsert merges into.
+    *
+    * Concurrency contract: [[ProcessJob.run]] overlaps its independent
+    * file checks; here every table's `__tmp_<name>` write runs in one
+    * [[graft.core.Fan.overlap]]. The swaps then run on the caller
+    * thread in table order and the statuses are written last, so a
+    * failed write or swap leaves the previous statuses in place (and,
+    * for a failed write, every previous table). Stdout is printed after
+    * all of it, in the fixed STATUS, SKIPPED, ERROR order.
     */
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ProcessMain <center> <inputDir> <stateDir>")
@@ -24,8 +32,12 @@ object ProcessMain {
     // again would rewrite its runtime confs, shuffle partitions
     // included. Stop only a session this main created.
     val preExisting = SparkSession.getDefaultSession
-    val spark = preExisting.getOrElse(GraftSession.builder().getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = preExisting.getOrElse {
+      val built = GraftSession.builder().getOrCreate()
+      // the caller's session keeps the caller's log level
+      built.sparkContext.setLogLevel("WARN")
+      built
+    }
 
     // state goes through the Hadoop FileSystem API, so `stateDir` may
     // live on any filesystem Spark can write (a URI with a scheme)
@@ -48,19 +60,21 @@ object ProcessMain {
     val result = ProcessJob.run(spark, center, inputDir, prior, existing)
 
     // persist merged tables THEN statuses — a crash mid-write re-runs
-    // the affected files next time (md5 status not yet recorded). A
-    // live table is replaced by the two-rename swap, which renames it
-    // back if the new one cannot be renamed in: deleting it first would
-    // lose it for good, since the previous run's statuses md5-skip its
-    // unchanged source files.
-    result.tables.foreach { case (name, df) =>
-      val tmp = new Path(s"$stateDir/tables/__tmp_$name")
+    // the affected files next time (md5 status not yet recorded). Once
+    // every overlapped write succeeded, each live table is replaced by
+    // the two-rename swap, which renames it back if the new one cannot
+    // be renamed in: deleting it first would lose it for good, since
+    // the previous run's statuses md5-skip its unchanged source files.
+    def tmp(name: String) = new Path(s"$stateDir/tables/__tmp_$name")
+    graft.core.Fan.overlap(result.tables.toSeq.map { case (name, df) =>
+      () => df.write.mode("overwrite").parquet(tmp(name).toString)
+    })
+    result.tables.keys.foreach { name =>
       val dst = new Path(s"$stateDir/tables/$name")
-      df.write.mode("overwrite").parquet(tmp.toString)
       if (fs.exists(dst))
-        graft.sources.Layout.swapDirs(fs, dst, tmp,
+        graft.sources.Layout.swapDirs(fs, dst, tmp(name),
           new Path(s"$stateDir/tables/__old_$name"), "table")
-      else if (!fs.rename(tmp, dst))
+      else if (!fs.rename(tmp(name), dst))
         throw new IllegalStateException(s"table swap failed for $name")
     }
     import spark.implicits._

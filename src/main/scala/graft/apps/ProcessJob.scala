@@ -8,8 +8,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fan
 import graft.formats.{ClinicalFormat, MafFormat}
 import graft.operators.Upsert
+import graft.rules.ValidationResult
 import graft.sources.{Maf, Tsv}
 
 /** Center input → database orchestration (SURVEY §3.2; reference
@@ -46,6 +48,12 @@ object ProcessJob {
     (if (clin.length > 2) clin else Nil) ++ (if (seg.length > 1) seg else Nil)
   }
 
+  /** What one check found: the (name, md5) of each file it covers and,
+    * unless every one is md5-skipped, the frames it read with their
+    * validation. */
+  private final case class Checked(files: Seq[(String, String)],
+                                   validated: Option[(Seq[DataFrame], ValidationResult)])
+
   final case class RunResult(statuses: Seq[FileStatus], skipped: Seq[String],
                              tables: Map[String, DataFrame],
                              errors: Map[String, Seq[String]] = Map.empty)
@@ -57,6 +65,15 @@ object ProcessJob {
     * and table load): each VALID maf is annotated before its upsert —
     * at 100 TB the annotator runs per-partition where the data is
     * ([[graft.operators.PipeAnnotator]]), not driver-side.
+    *
+    * Concurrency contract: the clinical pair's md5 + read + validate
+    * and each MAF's md5 + read + validate are independent thunks run
+    * through [[graft.core.Fan.overlap]]; they return what they found
+    * and update no shared state. Their results then fold on the caller
+    * thread in input order — clinical first, then files in sorted-name
+    * order — into the statuses, skips, errors and tables, so each MAF
+    * still upserts against the running table in that order and the
+    * result does not depend on which check finished first.
     */
   def run(spark: SparkSession, center: String, inputDir: String,
           priorStatuses: Seq[FileStatus],
@@ -77,71 +94,80 @@ object ProcessJob {
     def record(name: String, md5: String, status: String): Unit =
       statuses :+= FileStatus(name, md5, status)
 
-    def recordErrors(name: String, res: graft.rules.ValidationResult): Unit =
+    def recordErrors(name: String, res: ValidationResult): Unit =
       if (!res.isValid) errors += name -> res.errors.map(_.message)
 
     // one filename → type decision, shared with the validator
     def typeOf(p: String): String =
       ValidateCli.fileType(Paths.get(p).getFileName.toString, center)
 
-    // clinical pair handled jointly (S2)
+    // md5 + read + validate of one unit (the clinical pair or a MAF) as
+    // an overlap thunk that touches no shared state; results are
+    // recorded below on this thread in input order
+    def check(ps: Seq[String])(validate: => (Seq[DataFrame], ValidationResult)): () => Checked =
+      () => {
+        val files = ps.map(p => Paths.get(p).getFileName.toString -> md5Of(p))
+        if (files.forall(prior.get(_).contains("VALIDATED"))) Checked(files, None)
+        else Checked(files, Some(validate))
+      }
+
     val samplePath  = paths.find(typeOf(_) == "clinical_sample")
     val patientPath = paths.find(typeOf(_) == "clinical_patient")
-
-    (samplePath, patientPath) match {
+    val clinicalCheck = (samplePath, patientPath) match {
       case (Some(sp), Some(pp)) if !dups(Paths.get(sp).getFileName.toString) =>
-        val (sn, pn) = (Paths.get(sp).getFileName.toString, Paths.get(pp).getFileName.toString)
-        val (sm, pm) = (md5Of(sp), md5Of(pp))
-        if (prior.get((sn, sm)).contains("VALIDATED") && prior.get((pn, pm)).contains("VALIDATED")) {
-          skipped ++= Seq(sn, pn)
-          record(sn, sm, "VALIDATED"); record(pn, pm, "VALIDATED")
-        } else {
+        Some(check(Seq(sp, pp)) {
           val sample  = Tsv.readAllString(spark, sp)
           val patient = Tsv.readAllString(spark, pp)
-          val res = ClinicalFormat.validate(sample, patient, center)
-          val st = if (res.isValid) "VALIDATED" else "INVALID"
-          record(sn, sm, st); record(pn, pm, st)
-          recordErrors(sn, res)
-          if (res.isValid) {
-            val processed = ClinicalFormat.process(sample, patient, Map.empty)
-            val merged = existing.get("clinical") match {
-              case Some(ex) => Upsert.merge(processed, ex, Seq("SAMPLE_ID"), allowDelete = false)
-              case None     => processed
-            }
-            tables += "clinical" -> merged
-          }
-        }
-      case _ => ()
+          (Seq(sample, patient), ClinicalFormat.validate(sample, patient, center))
+        })
+      case _ => None
     }
+    val mafPaths = paths.filter(typeOf(_) == "maf")
+    val mafChecks = mafPaths.map(p => check(Seq(p)) {
+      val maf = Maf.read(spark, p)
+      (Seq(maf), MafFormat.validate(maf, center))
+    })
+    val checked = Fan.overlap(clinicalCheck.toSeq ++ mafChecks)
+    val clinicalChecked = checked.take(clinicalCheck.size)
+    val mafChecked = mafPaths.zip(checked.drop(clinicalCheck.size)).toMap
+
+    // record a check's statuses and errors; `load` the frames of a valid one
+    def recordCheck(c: Checked)(load: Seq[DataFrame] => Unit): Unit = c.validated match {
+      case None =>
+        skipped ++= c.files.map(_._1)
+        c.files.foreach { case (n, m) => record(n, m, "VALIDATED") }
+      case Some((frames, res)) =>
+        val st = if (res.isValid) "VALIDATED" else "INVALID"
+        c.files.foreach { case (n, m) => record(n, m, st) }
+        recordErrors(c.files.head._1, res)
+        if (res.isValid) load(frames)
+    }
+
+    clinicalChecked.foreach(recordCheck(_) { case Seq(sample, patient) =>
+      val processed = ClinicalFormat.process(sample, patient, Map.empty)
+      val merged = existing.get("clinical") match {
+        case Some(ex) => Upsert.merge(processed, ex, Seq("SAMPLE_ID"), allowDelete = false)
+        case None     => processed
+      }
+      tables += "clinical" -> merged
+    })
 
     paths.foreach { p =>
       val name = Paths.get(p).getFileName.toString
       val kind = typeOf(p)
-      if (kind == "maf") {
-        val m = md5Of(p)
-        if (prior.get((name, m)).contains("VALIDATED")) {
-          skipped :+= name; record(name, m, "VALIDATED")
-        } else {
-          val maf = Maf.read(spark, p)
-          val res = MafFormat.validate(maf, center)
-          val st = if (res.isValid) "VALIDATED" else "INVALID"
-          record(name, m, st)
-          recordErrors(name, res)
-          if (res.isValid) {
-            val pk = Seq("CHROMOSOME", "START_POSITION", "REFERENCE_ALLELE",
-              "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2")
-            // annotation between validation and load, like the reference
-            val annotated = annotator.map(_.annotate(maf)).getOrElse(maf)
-            // accumulate across a center's MULTIPLE maf files: each file
-            // upserts against the running table, not the original state
-            val base = tables.get("maf").orElse(existing.get("maf"))
-            val merged = base match {
-              case Some(ex) => Upsert.merge(annotated, ex, pk, allowDelete = false)
-              case None     => annotated
-            }
-            tables += "maf" -> merged
-          }
+      if (kind == "maf") recordCheck(mafChecked(p)) { case Seq(maf) =>
+        val pk = Seq("CHROMOSOME", "START_POSITION", "REFERENCE_ALLELE",
+          "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2")
+        // annotation between validation and load, like the reference
+        val annotated = annotator.map(_.annotate(maf)).getOrElse(maf)
+        // accumulate across a center's MULTIPLE maf files: each file
+        // upserts against the running table, not the original state
+        val base = tables.get("maf").orElse(existing.get("maf"))
+        val merged = base match {
+          case Some(ex) => Upsert.merge(annotated, ex, pk, allowDelete = false)
+          case None     => annotated
         }
+        tables += "maf" -> merged
       } else if (kind == "workflow") {
         // workflow md passthrough (genie_registry/workflow.py:11-23):
         // filename pattern IS the validation; file is stored as-is

@@ -87,19 +87,44 @@ object Fan {
     * Observability + failure semantics (guide §1.5 — job groups and
     * descriptions are thread-local): every thunk runs under a shared
     * job group with an `overlap i/n` description, so the UI attributes
-    * overlapped jobs; the FIRST failure cancels the group (siblings'
-    * in-flight jobs stop scheduling instead of racing the caller's
-    * failure handling), every future is drained before returning, and
-    * the first failure is rethrown with later ones attached as
-    * suppressed.
+    * overlapped jobs; the FIRST failure, when it happens, cancels the
+    * group and its future jobs (siblings' in-flight jobs stop
+    * scheduling and their later jobs fail fast instead of racing the
+    * caller's failure handling), every future is drained before
+    * returning, and the first failure in input order is rethrown with
+    * later ones attached as suppressed; a cancelled job's error names
+    * the failure that cancelled it.
+    *
+    * Nesting: a thunk may itself call `overlap` (a per-file check whose
+    * validator overlaps its own actions), so up to `parallelism`²
+    * pool threads run at once. An inner call joins the overlap group
+    * its thread inherited instead of opening a new one, so a failure at
+    * either level cancels the jobs of both: an inner failure stops an
+    * outer sibling's running job, and the outer call's cancel stops the
+    * jobs the inner call submitted. A job group that did not come from
+    * an overlap is never joined or cancelled. Since an inner failure
+    * cancels the whole group, a thunk must not catch and recover from
+    * the failure of an `overlap` it calls.
     */
+  private val GroupPrefix = "graft-overlap-"
+
   def overlap[T](thunks: Seq[() => T], parallelism: Int = 4): Seq[T] =
     if (thunks.size <= 1) thunks.map(_.apply())
     else {
       val sc = org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .map(_.sparkContext)
-      val group = s"graft-overlap-${java.util.UUID.randomUUID().toString.take(8)}"
+      // an enclosing overlap's group, inherited through the local properties
+      val outer = sc.flatMap(c => Option(c.getLocalProperty("spark.jobGroup.id")))
+        .filter(_.startsWith(GroupPrefix))
+      val group = outer.getOrElse(s"$GroupPrefix${java.util.UUID.randomUUID().toString.take(8)}")
+      val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
+      // stop siblings' in-flight jobs as soon as a thunk fails; their
+      // later jobs then fail fast and land in suppressed below
+      def cancel(cause: Throwable): Unit =
+        if (cancelled.compareAndSet(false, true))
+          sc.foreach(_.cancelJobGroupAndFutureJobs(group,
+            s"because an overlapped thunk failed: $cause"))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(parallelism, thunks.size))
       try {
@@ -108,7 +133,9 @@ object Fan {
             def call(): T = {
               sc.foreach(_.setJobGroup(group,
                 s"overlap ${i + 1}/${thunks.size}", interruptOnCancel = false))
-              try t() finally sc.foreach(_.clearJobGroup())
+              try t()
+              catch { case e: Throwable => cancel(e); throw e }
+              finally sc.foreach(_.clearJobGroup())
             }
           })
         }
@@ -122,12 +149,9 @@ object Fan {
                   Option(ee.getCause).getOrElse(ee)
                 case other => other
               }
+              cancel(cause)
               firstFailure match {
-                case None =>
-                  firstFailure = Some(cause)
-                  // stop siblings' in-flight jobs; queued thunks then
-                  // fail fast and land in suppressed below
-                  sc.foreach(_.cancelJobGroup(group))
+                case None => firstFailure = Some(cause)
                 case Some(ff) if ff ne cause => ff.addSuppressed(cause)
                 case _ => ()
               }
@@ -138,4 +162,10 @@ object Fan {
         results.flatten
       } finally pool.shutdown()
     }
+
+  /** [[overlap]] of two independent actions with different result types. */
+  def overlap2[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(x, y) = overlap(Seq[() => Any](() => a, () => b))
+    (x.asInstanceOf[A], y.asInstanceOf[B])
+  }
 }

@@ -202,7 +202,9 @@ object ClinicalFormat {
   }
 
   /** Full validate: schema checks + one-pass row battery over the
-    * sample/patient pair.
+    * sample/patient pair. Its four Spark actions (sample battery,
+    * patient battery, duplicate SAMPLE_ID, orphan anti-join) are
+    * independent and run overlapped ([[graft.core.Fan.overlap]]).
     */
   def validate(sample: DataFrame, patient: DataFrame, center: String): ValidationResult = {
     import graft.rules.Finding
@@ -219,22 +221,21 @@ object ClinicalFormat {
       Seq("SEQ_DATE").filter(c => sample.columns.map(_.toUpperCase).contains(c)).map(c =>
         Finding(s"deprecated_col_$c", "error", 1, None,
           s"Sample Clinical File: $c is now deprecated. Please remove."))
-    val sampleRes = Rules.Battery.run(sample, sampleRules(center))
-    val patientRes = Rules.Battery.run(patient, patientRules(center))
-
     // P11: duplicated SAMPLE_ID (clinical.py:855-858)
-    val dupSamples =
-      if (!sample.columns.contains("SAMPLE_ID")) 0L
-      else sample.groupBy("SAMPLE_ID").count().filter(col("count") > 1).count()
-    val dupFinding = Finding("duplicate_sample_id", "error", dupSamples, None,
-      "Sample Clinical File: No duplicated SAMPLE_ID allowed.\n" +
-        "If there are no duplicated SAMPLE_IDs, and both sample and patient files are uploaded, " +
-        "then please check to make sure no duplicated PATIENT_IDs exist in the patient clinical file.")
+    def dupFinding: Finding = {
+      val dupSamples =
+        if (!sample.columns.contains("SAMPLE_ID")) 0L
+        else sample.groupBy("SAMPLE_ID").count().filter(col("count") > 1).count()
+      Finding("duplicate_sample_id", "error", dupSamples, None,
+        "Sample Clinical File: No duplicated SAMPLE_ID allowed.\n" +
+          "If there are no duplicated SAMPLE_IDs, and both sample and patient files are uploaded, " +
+          "then please check to make sure no duplicated PATIENT_IDs exist in the patient clinical file.")
+    }
 
     // P11 cross-frame: orphan samples (patient id absent from patient file,
     // clinical.py:909-918) — guarded on key columns, computed in ONE action
     // (count + full offending-id list like the reference)
-    val orphanFinding =
+    def orphanFinding: Finding =
       if (!sample.columns.contains("PATIENT_ID") || !patient.columns.contains("PATIENT_ID") ||
           !sample.columns.contains("SAMPLE_ID"))
         Finding("orphan_samples", "error", 0, None, "")
@@ -248,8 +249,14 @@ object ClinicalFormat {
           "Patient Clinical File: All samples must have associated patient information " +
             s"and no null patient ids allowed. These samples are missing patient data: ${ids.mkString(", ")}")
       }
-    ValidationResult(schemaFindings ++ sampleRes.findings ++ patientRes.findings
-      :+ dupFinding :+ orphanFinding)
+
+    // the four actions are independent: overlapped, findings in this order
+    val actions = graft.core.Fan.overlap(Seq[() => Seq[Finding]](
+      () => Rules.Battery.run(sample, sampleRules(center)).findings,
+      () => Rules.Battery.run(patient, patientRules(center)).findings,
+      () => Seq(dupFinding),
+      () => Seq(orphanFinding)))
+    ValidationResult(schemaFindings ++ actions.flatten)
   }
 
   /** pandas-int normalization (update_clinical clinical.py:421-448 +

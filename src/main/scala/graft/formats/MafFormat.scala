@@ -58,7 +58,9 @@ object MafFormat {
   }
 
   /** `sp` mirrors the reference's special-prep flag (maf.py:303): SP
-    * centers are exempt from the T_DEPTH/T_REF_COUNT requirement.
+    * centers are exempt from the T_DEPTH/T_REF_COUNT requirement. The
+    * two Spark actions (battery + P17 extras, duplicate-PK groups) are
+    * independent and run overlapped ([[graft.core.Fan.overlap2]]).
     */
   def validate(maf: DataFrame, center: String, sp: Boolean = false): ValidationResult = {
     import graft.rules.Finding
@@ -74,25 +76,30 @@ object MafFormat {
 
     // ONE scan: the whole row battery + the P17 cross-column bool
     // aggregates (maf.py:14-123) fold into the same aggregation
-    val (battery, extras) = Rules.Battery.runWithExtras(maf, rowRules(center), Seq(
+    def batteryWithExtras = Rules.Battery.runWithExtras(maf, rowRules(center), Seq(
       bool_and(coalesce(col("TUMOR_SEQ_ALLELE2") === col("REFERENCE_ALLELE"), lit(false))).as("tsa2_always_ref"),
       bool_or(coalesce(col("REFERENCE_ALLELE") === col("TUMOR_SEQ_ALLELE2"), lit(false))).as("any_ref_eq_tsa2")))
 
     // P14: duplicate variants on the 5-col PK (maf.py:273-299) — the one
     // unavoidable shuffle (groupBy on the key)
-    val pkCols = Seq("CHROMOSOME", "START_POSITION", "REFERENCE_ALLELE",
-      "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2")
-    val pk = pkCols.map(c => trim(col(c)).as(c))
-    val dupGroups = maf.groupBy(pk: _*).count().filter(col("count") > 1)
-    // one action: duplicate-group count + offending barcodes together
-    val dupRow = dupGroups.agg(
-      count(lit(1)).as("n"),
-      sort_array(collect_set(col("TUMOR_SAMPLE_BARCODE"))).as("samples")).head()
-    val dups = dupRow.getAs[Long]("n")
-    val dupSamples = dupRow.getAs[scala.collection.Seq[String]]("samples").toSeq
-    val dupFinding = Finding("duplicate_variants", "error", dups, dupSamples.headOption,
-      "maf: Must not have duplicated variants. Samples with duplicated variants: " +
-        dupSamples.mkString(", "))
+    def duplicateVariants: Finding = {
+      val pkCols = Seq("CHROMOSOME", "START_POSITION", "REFERENCE_ALLELE",
+        "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2")
+      val pk = pkCols.map(c => trim(col(c)).as(c))
+      val dupGroups = maf.groupBy(pk: _*).count().filter(col("count") > 1)
+      // one action: duplicate-group count + offending barcodes together
+      val dupRow = dupGroups.agg(
+        count(lit(1)).as("n"),
+        sort_array(collect_set(col("TUMOR_SAMPLE_BARCODE"))).as("samples")).head()
+      val dups = dupRow.getAs[Long]("n")
+      val dupSamples = dupRow.getAs[scala.collection.Seq[String]]("samples").toSeq
+      Finding("duplicate_variants", "error", dups, dupSamples.headOption,
+        "maf: Must not have duplicated variants. Samples with duplicated variants: " +
+          dupSamples.mkString(", "))
+    }
+
+    // the two actions are independent: overlapped
+    val ((battery, extras), dupFinding) = graft.core.Fan.overlap2(batteryWithExtras, duplicateVariants)
 
     // maf.py:301-304: without T_DEPTH there must at least be T_REF_COUNT
     val depthFindings =

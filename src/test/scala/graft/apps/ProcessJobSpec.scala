@@ -300,6 +300,108 @@ class ProcessJobSpec extends SparkSpec {
     assert(spark.read.parquet(s"$state/tables/clinical").count() == 1)
     assert(e.getMessage.contains("original restored"), e.getMessage)
   }
+
+  private val mafHeader = "CHROMOSOME\tSTART_POSITION\tEND_POSITION\tREFERENCE_ALLELE\t" +
+    "TUMOR_SAMPLE_BARCODE\tTUMOR_SEQ_ALLELE2\tT_DEPTH\n"
+
+  /** ProcessMain.main's stdout. */
+  private def processMainOut(args: String*): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(ProcessMain.main(args.toArray))
+    buf.toString("UTF-8")
+  }
+
+  test("ProcessMain: stdout is pinned, whatever order the overlapped checks finish in") {
+    val in = tmpDir("pm-out-in")
+    // invalid clinical pair (sample id prefix), one valid and one invalid MAF
+    Files.write(Paths.get(in, "data_clinical_supp_sample_CTR.txt"),
+      ("SAMPLE_ID\tPATIENT_ID\tAGE_AT_SEQ_REPORT\tONCOTREE_CODE\tSAMPLE_TYPE\tSEQ_ASSAY_ID\n" +
+        "BAD-p1-s1\tGENIE-CTR-p1\t1200\tLUAD\t1\tCTR-A1\n").getBytes)
+    Files.write(Paths.get(in, "data_clinical_supp_patient_CTR.txt"),
+      "PATIENT_ID\tSEX\tPRIMARY_RACE\tETHNICITY\tBIRTH_YEAR\nGENIE-CTR-p1\t1\t1\t1\t1950\n".getBytes)
+    Files.write(Paths.get(in, "data_mutations_a.maf"),
+      (mafHeader + "1\t100\t101\tA\tGENIE-CTR-p1-s1\tT\t30\n").getBytes)
+    Files.write(Paths.get(in, "data_mutations_b.maf"),
+      (mafHeader + "99\t200\t201\tA\tGENIE-CTR-p1-s1\tG\t30\n").getBytes)
+    // a fresh state, then a re-run on it (the valid MAF md5-skips)
+    def twoRuns(): String = {
+      val state = tmpDir("pm-out-state")
+      processMainOut("CTR", in, state) + processMainOut("CTR", in, state)
+    }
+    val statuses =
+      """STATUS data_clinical_supp_sample_CTR.txt: INVALID
+        |STATUS data_clinical_supp_patient_CTR.txt: INVALID
+        |STATUS data_mutations_a.maf: VALIDATED
+        |STATUS data_mutations_b.maf: INVALID
+        |""".stripMargin
+    val errors =
+      """ERROR data_clinical_supp_sample_CTR.txt: Sample Clinical File: SAMPLE_ID must start with GENIE-CTR
+        |ERROR data_clinical_supp_sample_CTR.txt: Sample Clinical File: PATIENT_ID's much be contained in the SAMPLE_ID's (ex. SAGE-1 <-> SAGE-1-2)
+        |ERROR data_mutations_b.maf: maf: Please double check your CHROMOSOME column.  This column must only be these values: 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18, 19, 20, 21, 22, X, Y, MT
+        |""".stripMargin
+    val want = statuses + errors + statuses + "SKIPPED data_mutations_a.maf (unchanged md5)\n" + errors
+    val first = twoRuns()
+    assert(first == want)
+    assert(twoRuns() == first)
+  }
+
+  test("two MAF files upsert in sorted-name order: the later file's row wins") {
+    val dir = tmpDir("process-order")
+    Files.write(Paths.get(dir, "data_mutations_a.maf"),
+      (mafHeader + "1\t100\t101\tA\tGENIE-CTR-p1-s1\tT\t30\n" +
+        "2\t200\t201\tG\tGENIE-CTR-p1-s1\tC\t30\n").getBytes)
+    // same primary key as a's first row, new depth
+    Files.write(Paths.get(dir, "data_mutations_b.maf"),
+      (mafHeader + "1\t100\t101\tA\tGENIE-CTR-p1-s1\tT\t99\n").getBytes)
+    val r = ProcessJob.run(spark, "CTR", dir, Nil, Map.empty)
+    assert(r.statuses.map(s => (s.name, s.status)) ==
+      Seq(("data_mutations_a.maf", "VALIDATED"), ("data_mutations_b.maf", "VALIDATED")))
+    assert(r.tables("maf").select("CHROMOSOME", "T_DEPTH").as[(String, String)].collect().toSet ==
+      Set(("1", "99"), ("2", "30")))
+  }
+
+  test("ProcessMain: a MAF check that throws fails the run before any table or status is written") {
+    val in = tmpDir("pm-throw-in")
+    val state = tmpDir("pm-throw-state")
+    stage(in)
+    // a dotted header name does not resolve as a column: the MAF's
+    // overlapped check throws
+    val unreadable = (mafHeader.replace("T_DEPTH", "T.DEPTH") +
+      "1\t100\t101\tA\tGENIE-CTR-p1-s1\tT\t1\n").getBytes
+    Files.write(Paths.get(in, "data_mutations_z.maf"), unreadable)
+    // the read error surfaces first, or suppressed behind a sibling
+    // check's job that its failure cancelled
+    def failsOnUnreadableMaf(): Unit = {
+      val e = intercept[Exception](ProcessMain.main(Array("CTR", in, state)))
+      assert((e +: e.getSuppressed.toSeq).exists(_.isInstanceOf[org.apache.spark.sql.AnalysisException]), e)
+    }
+    failsOnUnreadableMaf()
+    assert(!Files.exists(Paths.get(state, "file_status.parquet")))
+    assert(!Files.exists(Paths.get(state, "tables")))
+
+    // with state in place: the live tables and statuses stay as they were
+    Files.delete(Paths.get(in, "data_mutations_z.maf"))
+    ProcessMain.main(Array("CTR", in, state))
+    val before = spark.read.parquet(s"$state/file_status.parquet").as[ProcessJob.FileStatus]
+      .collect().toSet
+    Files.write(Paths.get(in, "data_mutations_extended_CTR.maf"),
+      (mafHeader + "1\t100\t101\tA\tGENIE-CTR-p1-s1\tT\t30\n" +
+        "2\t500\t501\tG\tGENIE-CTR-p1-s1\tC\t30\n").getBytes)
+    Files.write(Paths.get(in, "data_mutations_z.maf"), unreadable)
+    failsOnUnreadableMaf()
+    assert(spark.read.parquet(s"$state/tables/maf").count() == 1)
+    assert(spark.read.parquet(s"$state/file_status.parquet").as[ProcessJob.FileStatus]
+      .collect().toSet == before)
+  }
+
+  test("ProcessMain on the caller's session leaves the caller's log level alone") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    val in = tmpDir("pm-log-in")
+    stage(in)
+    spark.sparkContext.setLogLevel("ERROR")
+    ProcessMain.main(Array("CTR", in, tmpDir("pm-log-state")))
+    assert(LogManager.getRootLogger.getLevel == Level.ERROR)
+  }
 }
 
 /** Local filesystem under the `failtmprename` scheme whose rename of a

@@ -10,6 +10,8 @@ import graft.SparkSpec
   * thunk inline, first-failure semantics with every future drained, and
   * the caller's `Console.out` and Spark local properties visible inside
   * the pool threads (callers capture output and tag jobs through them).
+  * Nested calls share one job group, so a failure at either level
+  * cancels the running jobs of the other.
   */
 class FanOverlapSpec extends SparkSpec {
 
@@ -60,5 +62,99 @@ class FanOverlapSpec extends SparkSpec {
       assert(seen == Seq.fill(3)(("caller", Seq("caller"))))
       assert(buf.toString("UTF-8").linesIterator.toSeq.sorted == Seq("thunk 0", "thunk 1", "thunk 2"))
     } finally sc.setLocalProperty(key, null)
+  }
+
+  /** A job of 2 tasks that runs until cancelled (or `maxMs` passes). */
+  private def runUntilCancelled(maxMs: Long): Unit =
+    spark.sparkContext.parallelize(1 to 2, 2).foreach { _ =>
+      val ctx = TaskContext.get()
+      val end = System.currentTimeMillis() + maxMs
+      while (!ctx.isInterrupted() && System.currentTimeMillis() < end) Thread.sleep(10)
+    }
+
+  /** Waits until some job is running. */
+  private def awaitRunningJob(): Unit = {
+    val end = System.currentTimeMillis() + 30000
+    while (spark.sparkContext.statusTracker.getActiveJobIds().isEmpty) {
+      if (System.currentTimeMillis() > end) fail("no job started")
+      Thread.sleep(10)
+    }
+  }
+
+  test("a failure cancels an earlier sibling's running job without waiting for it") {
+    val boom = new IllegalStateException("later boom")
+    val t0 = System.nanoTime()
+    val thrown = intercept[org.apache.spark.SparkException] {
+      Fan.overlap(Seq(
+        () => runUntilCancelled(60000),
+        () => { awaitRunningJob(); throw boom }))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30, s"the earlier sibling's job ran on for $secs s")
+    assert(thrown.getMessage.contains("later boom"), thrown.getMessage)
+    assert(thrown.getSuppressed.toSeq == Seq(boom))
+  }
+
+  test("nested overlaps return results in input order at both levels, in one job group") {
+    val sc = spark.sparkContext
+    val got = Fan.overlap((0 until 3).map { i => () =>
+      Fan.overlap((0 until 3).map { j => () =>
+        Thread.sleep((3 - j) * 30L)
+        (i, j, sc.getLocalProperty("spark.jobGroup.id"))
+      })
+    })
+    assert(got.map(_.map(t => (t._1, t._2))) ==
+      (0 until 3).map(i => (0 until 3).map(j => (i, j))))
+    val groups = got.flatten.map(_._3).distinct
+    assert(groups.size == 1 && groups.head.startsWith("graft-overlap-"), groups)
+    // the pool threads clear their group; the caller never had one
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+  }
+
+  test("an inner failure cancels a sibling outer thunk's running job") {
+    val boom = new IllegalStateException("inner boom")
+    val t0 = System.nanoTime()
+    // the outer drains in input order, so it waits on thunk 0 first:
+    // only the inner overlap's cancel can stop that job early
+    val thrown = intercept[org.apache.spark.SparkException] {
+      Fan.overlap(Seq(
+        () => runUntilCancelled(60000),
+        () => Fan.overlap(Seq(
+          () => 1,
+          () => { awaitRunningJob(); throw boom }))))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30, s"the sibling's job ran on for $secs s")
+    // the cancelled job's error comes first (input order) and names its cause
+    assert(thrown.getMessage.contains("cancelled because an overlapped thunk failed: " +
+      "java.lang.IllegalStateException: inner boom"), thrown.getMessage)
+    assert(thrown.getSuppressed.toSeq == Seq(boom))
+  }
+
+  test("an outer failure cancels the jobs an inner overlap submitted") {
+    val boom = new IllegalStateException("outer boom")
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      Fan.overlap(Seq(
+        () => { awaitRunningJob(); throw boom },
+        () => Fan.overlap(Seq(() => 1, () => runUntilCancelled(60000)))))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(thrown eq boom)
+    assert(secs < 30, s"the inner overlap's job ran on for $secs s")
+    assert(thrown.getSuppressed.toSeq.map(_.getClass) ==
+      Seq(classOf[org.apache.spark.SparkException]))
+  }
+
+  test("a job group that did not come from an overlap is neither joined nor cancelled") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller", interruptOnCancel = false)
+    try {
+      val groups = Fan.overlap(Seq.fill(2)(() => sc.getLocalProperty("spark.jobGroup.id")))
+      assert(groups.forall(_.startsWith("graft-overlap-")), groups)
+      intercept[IllegalStateException](Fan.overlap(Seq(() => 1, () => throw new IllegalStateException)))
+      // the caller's own group still runs jobs
+      assert(sc.parallelize(1 to 3).count() == 3)
+    } finally sc.clearJobGroup()
   }
 }

@@ -96,4 +96,45 @@ class FormatsSpec extends SparkSpec {
       .as[String].collect().toSet
     assert(centers == Set("CTR", "XYZ"))
   }
+
+  test("clinical and MAF validators find the same defects on every overlapped run") {
+    // driver-local frames: each validator plans them from several pool
+    // threads at once, the pattern behind the PQ-code race (ROADMAP 7)
+    val sample = Seq(
+      ("GENIE-CTR-p1-s1", "GENIE-CTR-p1", "1200", "LUAD", "1", "CTR-A1"),
+      ("GENIE-CTR-p1-s1", "GENIE-CTR-p1", "1200", "LUAD", "1", "CTR-A1"),     // duplicate id
+      ("BAD-p2-s2", "GENIE-CTR-p2", "abc", "luad", "1", "XYZ-A1"),            // five row defects
+      ("GENIE-CTR-p9-s9", "GENIE-CTR-p9", "900", "LUAD", "1", "CTR-A1")       // orphan
+    ).toDF("SAMPLE_ID", "PATIENT_ID", "AGE_AT_SEQ_REPORT", "ONCOTREE_CODE", "SAMPLE_TYPE", "SEQ_ASSAY_ID")
+    val patient = Seq(
+      ("GENIE-CTR-p1", "1", "1", "1", "1950"),
+      ("GENIE-CTR-p2", "2", "1", "1", "3000"),                                // future birth year
+      ("OTHER-p3", "1", "1", "1", "1960")                                     // bad prefix
+    ).toDF("PATIENT_ID", "SEX", "PRIMARY_RACE", "ETHNICITY", "BIRTH_YEAR")
+    val maf = Seq(
+      ("1", "100", "101", "A", "GENIE-CTR-p1-s1", "T", "30"),
+      ("1", "100", "101", "A", "GENIE-CTR-p1-s1", "T", "30"),                 // duplicate variant
+      ("99", "200", "201", "A", "GENIE-CTR-p1-s1", "G", "30"),                // bad chromosome
+      ("2", "300", "299", "QQ", "WRONG-1", "C", "x")                          // four row defects
+    ).toDF("CHROMOSOME", "START_POSITION", "END_POSITION", "REFERENCE_ALLELE",
+      "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2", "T_DEPTH")
+
+    def fired(res: graft.rules.ValidationResult) =
+      res.findings.filter(_.count > 0).map(f => (f.rule, f.count, f.example))
+    val clinicalWant = Seq(
+      ("sample_id_prefix", 1L, Some("BAD-p2-s2")), ("patient_in_sample", 1L, Some("BAD-p2-s2")),
+      ("age_at_seq_report", 1L, Some("BAD-p2-s2")), ("oncotree_code_case", 1L, Some("BAD-p2-s2")),
+      ("seq_assay_id_prefix", 1L, Some("BAD-p2-s2")), ("patient_id_prefix", 1L, Some("OTHER-p3")),
+      ("birth_year", 1L, Some("GENIE-CTR-p2")), ("duplicate_sample_id", 1L, None),
+      ("orphan_samples", 1L, Some("GENIE-CTR-p9-s9")))
+    val bad = Some("2 300 QQ WRONG-1 C")
+    val mafWant = Seq(
+      ("chromosome_domain", 1L, Some("99 200 A GENIE-CTR-p1-s1 G")), ("start_le_end", 1L, bad),
+      ("ref_allele", 1L, bad), ("barcode_prefix", 1L, bad), ("numeric_t_depth", 1L, bad),
+      ("duplicate_variants", 1L, Some("GENIE-CTR-p1-s1")))
+    (1 to 30).foreach { i =>
+      assert(fired(ClinicalFormat.validate(sample, patient, "CTR")) == clinicalWant, s"clinical run $i")
+      assert(fired(MafFormat.validate(maf, "CTR")) == mafWant, s"maf run $i")
+    }
+  }
 }
