@@ -582,42 +582,11 @@ object SparkEntry {
            FROM ex
            QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) <= 5"""
 
-  /** per-(query,sf) scratch dir for sink round-trips. Salted with a
-    * per-JVM nonce: two concurrent JVMs on the same sf dir (e.g. a
-    * Bench run alongside `sbt test`) must never mode("overwrite") the
-    * same in-flight artifact, and a fresh JVM must never read a stale
-    * artifact left by a previous run over regenerated inputs. The
-    * nonce makes every scratch dir this JVM writes an orphan once it
-    * exits, so a shutdown hook deletes the whole nonce-prefixed family
-    * — without it, repeated bench/sweep runs would accumulate dead
-    * parquet in java.io.tmpdir until the disk fills.
+  /** per-(query,sf) scratch dir for sink round-trips, in this JVM's
+    * scratch ([[graft.core.GraftSession.scratch]]).
     */
-  private val jvmNonce: String = {
-    val nonce = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    // startup sweep: the shutdown hook only covers THIS JVM's nonce
-    // family — a SIGKILLed/timed-out run leaks its dirs forever (and
-    // pre-nonce graft_<tag>_ dirs had no reaper at all). Any graft_*
-    // dir untouched for >6h belongs to no live run (suite + bench
-    // complete well inside that) and is reclaimed here; a concurrent
-    // live JVM's dirs have fresh mtimes and are left alone.
-    val staleMs = 6L * 3600 * 1000
-    val now = System.currentTimeMillis
-    Option(tmp.listFiles).foreach(_.filter(f =>
-      f.isDirectory && f.getName.startsWith("graft_") &&
-        now - f.lastModified > staleMs).foreach(rm))
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      Option(tmp.listFiles).foreach(_.filter(
-        _.getName.startsWith(s"graft_${nonce}_")).foreach(rm))
-    }, s"graft-scratch-cleanup-$nonce"))
-    nonce
-  }
   private def tmpPath(dir: String, tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${jvmNonce}_${tag}_${dir.replaceAll("[^a-z0-9.]", "_")}"
+    graft.core.GraftSession.scratch(s"${tag}_${dir.replaceAll("[^a-z0-9.]", "_")}")
 
   /** Eager index build/merge steps report their cost to the bench's
     * per-phase channel (graft.tools.PhaseTimer) so BENCH json splits
@@ -4576,8 +4545,7 @@ object SparkEntry {
       // decoder command is configured. Payloads never shuffle; the
       // oracle replays the per-keyframe slice lengths from the box math.
       import s.implicits._
-      val script = new java.io.File(
-        s"${sys.props("java.io.tmpdir")}/graft_frame_decoder.sh")
+      val script = new java.io.File(graft.core.GraftSession.scratch("frame_decoder.sh"))
       val w = new java.io.PrintWriter(script)
       // decoded length from the base64 line: 3·len/4 minus '=' padding
       try w.println(

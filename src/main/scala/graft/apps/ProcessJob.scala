@@ -3,16 +3,15 @@ package graft.apps
 import java.io.OutputStream
 import java.nio.file.{Files, Paths}
 import java.security.{DigestInputStream, MessageDigest}
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Fan
-import graft.formats.{ClinicalFormat, MafFormat}
+import graft.formats.{Checked, ClinicalFormat, FileType, MafFormat}
 import graft.operators.Upsert
-import graft.rules.ValidationResult
-import graft.sources.{Maf, Tsv}
 
 /** Center input → database orchestration (SURVEY §3.2; reference
   * bin/input_to_database.py).
@@ -41,22 +40,25 @@ object ProcessJob {
     in.getMessageDigest.digest().map("%02x".format(_)).mkString
   }
 
-  /** P30: duplicate-filename detection. */
+  /** P30: duplicate-filename detection — more than 2 clinical files or
+    * more than 1 seg file.
+    */
   def duplicatedFiles(names: Seq[String]): Seq[String] = {
-    val clin = names.filter(n => n.startsWith("data_clinical_supp"))
-    val seg  = names.filter(n => n.endsWith(".seg"))
+    def ofTypes(ts: FileType*) = names.filter(FileType.of(_).exists(ts.contains))
+    val clin = ofTypes(FileType.ClinicalSample, FileType.ClinicalPatient)
+    val seg  = ofTypes(FileType.Seg)
     (if (clin.length > 2) clin else Nil) ++ (if (seg.length > 1) seg else Nil)
   }
 
   /** What one check found: the (name, md5) of each file it covers and,
-    * unless every one is md5-skipped, the frames it read with their
-    * validation. */
-  private final case class Checked(files: Seq[(String, String)],
-                                   validated: Option[(Seq[DataFrame], ValidationResult)])
+    * unless every one is md5-skipped, what the registry check read and
+    * found. */
+  private final case class Outcome(files: Seq[(String, String)], checked: Option[Checked])
 
+  /** `errors` holds each invalid file's error messages in input order. */
   final case class RunResult(statuses: Seq[FileStatus], skipped: Seq[String],
                              tables: Map[String, DataFrame],
-                             errors: Map[String, Seq[String]] = Map.empty)
+                             errors: VectorMap[String, Seq[String]] = VectorMap.empty)
 
   /** One center run. `priorStatuses` drives the md5 skip; `existing`
     * holds current table contents for the upsert. `annotator` is the
@@ -65,6 +67,10 @@ object ProcessJob {
     * and table load): each VALID maf is annotated before its upsert —
     * at 100 TB the annotator runs per-partition where the data is
     * ([[graft.operators.PipeAnnotator]]), not driver-side.
+    *
+    * Files are typed, read and validated through the [[FileType]]
+    * registry; the MAF and retraction tables are named by their type's
+    * key.
     *
     * Concurrency contract: the clinical pair's md5 + read + validate
     * and each MAF's md5 + read + validate are independent thunks run
@@ -82,68 +88,50 @@ object ProcessJob {
           errorReportDir: Option[String] = None): RunResult = {
     val paths = Files.list(Paths.get(inputDir)).iterator().asScala
       .map(_.toString).toSeq.sorted
-    val names = paths.map(p => Paths.get(p).getFileName.toString)
+    def nameOf(p: String) = Paths.get(p).getFileName.toString
     val prior = priorStatuses.map(s => (s.name, s.md5) -> s.status).toMap
-    val dups  = duplicatedFiles(names).toSet
+    val dups  = duplicatedFiles(paths.map(nameOf)).toSet
+    val typeOf = paths.map(p => p -> FileType.of(p, center)).toMap
 
     var statuses = Vector.empty[FileStatus]
     var skipped  = Vector.empty[String]
     var tables   = Map.empty[String, DataFrame]
-    var errors   = Map.empty[String, Seq[String]]
+    var errors   = VectorMap.empty[String, Seq[String]]
 
     def record(name: String, md5: String, status: String): Unit =
       statuses :+= FileStatus(name, md5, status)
 
-    def recordErrors(name: String, res: ValidationResult): Unit =
-      if (!res.isValid) errors += name -> res.errors.map(_.message)
-
-    // one filename → type decision, shared with the validator
-    def typeOf(p: String): String =
-      ValidateCli.fileType(Paths.get(p).getFileName.toString, center)
-
-    // md5 + read + validate of one unit (the clinical pair or a MAF) as
+    // md5 + registry check of one unit (the clinical pair or a MAF) as
     // an overlap thunk that touches no shared state; results are
     // recorded below on this thread in input order
-    def check(ps: Seq[String])(validate: => (Seq[DataFrame], ValidationResult)): () => Checked =
-      () => {
-        val files = ps.map(p => Paths.get(p).getFileName.toString -> md5Of(p))
-        if (files.forall(prior.get(_).contains("VALIDATED"))) Checked(files, None)
-        else Checked(files, Some(validate))
-      }
-
-    val samplePath  = paths.find(typeOf(_) == "clinical_sample")
-    val patientPath = paths.find(typeOf(_) == "clinical_patient")
-    val clinicalCheck = (samplePath, patientPath) match {
-      case (Some(sp), Some(pp)) if !dups(Paths.get(sp).getFileName.toString) =>
-        Some(check(Seq(sp, pp)) {
-          val sample  = Tsv.readAllString(spark, sp)
-          val patient = Tsv.readAllString(spark, pp)
-          (Seq(sample, patient), ClinicalFormat.validate(sample, patient, center))
-        })
-      case _ => None
+    def check(t: FileType, unit: Seq[String]): () => Outcome = () => {
+      val files = unit.map(p => nameOf(p) -> md5Of(p))
+      if (files.forall(prior.get(_).contains("VALIDATED"))) Outcome(files, None)
+      else Outcome(files, Some(t.check(spark, center, unit)))
     }
-    val mafPaths = paths.filter(typeOf(_) == "maf")
-    val mafChecks = mafPaths.map(p => check(Seq(p)) {
-      val maf = Maf.read(spark, p)
-      (Seq(maf), MafFormat.validate(maf, center))
-    })
-    val checked = Fan.overlap(clinicalCheck.toSeq ++ mafChecks)
-    val clinicalChecked = checked.take(clinicalCheck.size)
-    val mafChecked = mafPaths.zip(checked.drop(clinicalCheck.size)).toMap
 
-    // record a check's statuses and errors; `load` the frames of a valid one
-    def recordCheck(c: Checked)(load: Seq[DataFrame] => Unit): Unit = c.validated match {
+    // a sample file without its patient file gets no status
+    val clinicalCheck = FileType.clinicalUnit(paths).collect {
+      case unit @ Seq(sp, _) if !dups(nameOf(sp)) => check(FileType.ClinicalSample, unit)
+    }
+    val mafPaths = paths.filter(typeOf(_).contains(FileType.Maf))
+    val outcomes = Fan.overlap(clinicalCheck.toSeq ++ mafPaths.map(p => check(FileType.Maf, Seq(p))))
+    val clinicalOutcome = outcomes.take(clinicalCheck.size)
+    val mafOutcome = mafPaths.zip(outcomes.drop(clinicalCheck.size)).toMap
+
+    // record an outcome's statuses and errors; `load` the frames of a valid one
+    def recordOutcome(o: Outcome)(load: Seq[DataFrame] => Unit): Unit = o.checked match {
       case None =>
-        skipped ++= c.files.map(_._1)
-        c.files.foreach { case (n, m) => record(n, m, "VALIDATED") }
-      case Some((frames, res)) =>
+        skipped ++= o.files.map(_._1)
+        o.files.foreach { case (n, m) => record(n, m, "VALIDATED") }
+      case Some(Checked(frames, res)) =>
         val st = if (res.isValid) "VALIDATED" else "INVALID"
-        c.files.foreach { case (n, m) => record(n, m, st) }
-        recordErrors(c.files.head._1, res)
+        o.files.foreach { case (n, m) => record(n, m, st) }
         if (res.isValid) load(frames)
+        else errors += o.files.head._1 -> res.errors.map(_.message)
     }
 
-    clinicalChecked.foreach(recordCheck(_) { case Seq(sample, patient) =>
+    clinicalOutcome.foreach(recordOutcome(_) { case Seq(sample, patient) =>
       val processed = ClinicalFormat.process(sample, patient, Map.empty)
       val merged = existing.get("clinical") match {
         case Some(ex) => Upsert.merge(processed, ex, Seq("SAMPLE_ID"), allowDelete = false)
@@ -152,28 +140,26 @@ object ProcessJob {
       tables += "clinical" -> merged
     })
 
+    val mafTable = FileType.Maf.key
     paths.foreach { p =>
-      val name = Paths.get(p).getFileName.toString
-      val kind = typeOf(p)
-      if (kind == "maf") recordCheck(mafChecked(p)) { case Seq(maf) =>
-        val pk = Seq("CHROMOSOME", "START_POSITION", "REFERENCE_ALLELE",
-          "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2")
-        // annotation between validation and load, like the reference
-        val annotated = annotator.map(_.annotate(maf)).getOrElse(maf)
-        // accumulate across a center's MULTIPLE maf files: each file
-        // upserts against the running table, not the original state
-        val base = tables.get("maf").orElse(existing.get("maf"))
-        val merged = base match {
-          case Some(ex) => Upsert.merge(annotated, ex, pk, allowDelete = false)
-          case None     => annotated
+      val name = nameOf(p)
+      typeOf(p) match {
+        case Some(FileType.Maf) => recordOutcome(mafOutcome(p)) { case Seq(maf) =>
+          // annotation between validation and load, like the reference
+          val annotated = annotator.map(_.annotate(maf)).getOrElse(maf)
+          // accumulate across a center's MULTIPLE maf files: each file
+          // upserts against the running table, not the original state
+          val base = tables.get(mafTable).orElse(existing.get(mafTable))
+          val merged = base match {
+            case Some(ex) => Upsert.merge(annotated, ex, MafFormat.primaryKey, allowDelete = false)
+            case None     => annotated
+          }
+          tables += mafTable -> merged
         }
-        tables += "maf" -> merged
-      } else if (kind == "workflow") {
-        // workflow md passthrough (genie_registry/workflow.py:11-23):
-        // filename pattern IS the validation; file is stored as-is
-        record(name, md5Of(p), "VALIDATED")
-      } else if (dups(name)) {
-        record(name, md5Of(p), "DUPLICATE")
+        // workflow md passthrough (genie_registry/workflow.py:11-23)
+        case Some(FileType.Workflow) => record(name, md5Of(p), "VALIDATED")
+        case _ if dups(name) => record(name, md5Of(p), "DUPLICATE")
+        case _ => ()
       }
     }
 
@@ -181,25 +167,15 @@ object ProcessJob {
     // (genie_registry/sampleRetraction.py:19-41, patientRetraction.py:8-9,
     // toRetract.py:37-90: samples of retracted patients cascade)
     import graft.release.Filters
-    import org.apache.spark.sql.functions.{col, lit}
-    def readRetraction(p: String, idCol: String): DataFrame =
-      spark.read.option("header", "false").csv(p).toDF(idCol)
-        .withColumn("retractionDate",
-          lit(Files.getLastModifiedTime(Paths.get(p)).toMillis))
-        .withColumn("center", lit(center))
-
-    paths.find(typeOf(_) == "sampleRetraction").foreach { p =>
-      record("sampleRetraction.csv", md5Of(p), "VALIDATED")
-      tables += "sampleRetraction" -> readRetraction(p, "genieSampleId")
-    }
-    paths.find(typeOf(_) == "patientRetraction").foreach { p =>
-      record("patientRetraction.csv", md5Of(p), "VALIDATED")
-      tables += "patientRetraction" -> readRetraction(p, "geniePatientId")
-    }
-    val sRet = tables.get("sampleRetraction")
-      .map(_.select(col("genieSampleId").as("SAMPLE_ID")))
-    val pRet = tables.get("patientRetraction")
-      .map(_.select(col("geniePatientId").as("PATIENT_ID")))
+    def retraction(t: FileType.Retraction, idAs: String): Option[DataFrame] =
+      paths.find(typeOf(_).contains(t)).map { p =>
+        record(nameOf(p), md5Of(p), "VALIDATED")
+        val ids = t.read(spark, p, center)
+        tables += t.key -> ids
+        ids.select(col(t.idCol).as(idAs))
+      }
+    val sRet = retraction(FileType.SampleRetraction, "SAMPLE_ID")
+    val pRet = retraction(FileType.PatientRetraction, "PATIENT_ID")
     // patient cascade: the retracted patients' sample ids, captured from
     // clinical BEFORE the clinical delete
     val cascade = for { c <- tables.get("clinical"); r <- pRet }
@@ -210,13 +186,13 @@ object ProcessJob {
       pRet.foreach(r => c = Filters.retract(c, r, "PATIENT_ID"))
       tables += "clinical" -> c
     }
-    tables.get("maf").foreach { m0 =>
+    tables.get(mafTable).foreach { m0 =>
       var m = m0
       (sRet.toSeq ++ cascade.toSeq).foreach { r =>
         m = Filters.retract(m,
           r.withColumnRenamed("SAMPLE_ID", "TUMOR_SAMPLE_BARCODE"), "TUMOR_SAMPLE_BARCODE")
       }
-      tables += "maf" -> m
+      tables += mafTable -> m
     }
 
     // failed-annotation error report (process_mutation.py:309-363:
@@ -228,7 +204,7 @@ object ProcessJob {
     // sink; the report is failure-sized, not corpus-sized.
     for {
       dir <- errorReportDir
-      maf <- tables.get("maf")
+      maf <- tables.get(mafTable)
       statusCol <- maf.columns.find(_.equalsIgnoreCase("Annotation_Status"))
     } {
       val failed = maf.filter(col(statusCol) === "FAILED")

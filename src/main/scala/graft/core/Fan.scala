@@ -90,10 +90,11 @@ object Fan {
     * overlapped jobs; the FIRST failure, when it happens, cancels the
     * group and its future jobs (siblings' in-flight jobs stop
     * scheduling and their later jobs fail fast instead of racing the
-    * caller's failure handling), every future is drained before
-    * returning, and the first failure in input order is rethrown with
-    * later ones attached as suppressed; a cancelled job's error names
-    * the failure that cancelled it.
+    * caller's failure handling) and every future is drained before
+    * returning. The failure that cancelled the group is rethrown when
+    * the cancel stopped a sibling's job (its `SPARK_JOB_CANCELLED`
+    * error names that failure); otherwise the first failure in input
+    * order is. Every other failure is attached as suppressed.
     *
     * Nesting: a thunk may itself call `overlap` (a per-file check whose
     * validator overlaps its own actions), so up to `parallelism`²
@@ -101,12 +102,26 @@ object Fan {
     * its thread inherited instead of opening a new one, so a failure at
     * either level cancels the jobs of both: an inner failure stops an
     * outer sibling's running job, and the outer call's cancel stops the
-    * jobs the inner call submitted. A job group that did not come from
-    * an overlap is never joined or cancelled. Since an inner failure
-    * cancels the whole group, a thunk must not catch and recover from
-    * the failure of an `overlap` it calls.
+    * jobs the inner call submitted. The cancelling failure is shared by
+    * the nested calls and found by identity, so the outer call rethrows
+    * an inner failure, not the cancellation it caused in an outer
+    * sibling. A job group that did not come from an overlap is never
+    * joined or cancelled. Since an inner failure cancels the whole
+    * group, a thunk must not catch and recover from the failure of an
+    * `overlap` it calls.
     */
   private val GroupPrefix = "graft-overlap-"
+
+  /** The failure that cancelled each live overlap group. */
+  private val cancellers = new java.util.concurrent.ConcurrentHashMap[String, Throwable]()
+
+  /** Whether `e`, or an exception it wraps, is a Spark job's cancellation. */
+  @annotation.tailrec
+  private def isCancellation(e: Throwable): Boolean = e match {
+    case null => false
+    case se: org.apache.spark.SparkException if se.getCondition == "SPARK_JOB_CANCELLED" => true
+    case _ => isCancellation(e.getCause)
+  }
 
   def overlap[T](thunks: Seq[() => T], parallelism: Int = 4): Seq[T] =
     if (thunks.size <= 1) thunks.map(_.apply())
@@ -118,11 +133,10 @@ object Fan {
       val outer = sc.flatMap(c => Option(c.getLocalProperty("spark.jobGroup.id")))
         .filter(_.startsWith(GroupPrefix))
       val group = outer.getOrElse(s"$GroupPrefix${java.util.UUID.randomUUID().toString.take(8)}")
-      val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
       // stop siblings' in-flight jobs as soon as a thunk fails; their
       // later jobs then fail fast and land in suppressed below
       def cancel(cause: Throwable): Unit =
-        if (cancelled.compareAndSet(false, true))
+        if (cancellers.putIfAbsent(group, cause) == null)
           sc.foreach(_.cancelJobGroupAndFutureJobs(group,
             s"because an overlapped thunk failed: $cause"))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -139,9 +153,8 @@ object Fan {
             }
           })
         }
-        var firstFailure: Option[Throwable] = None
-        val results = futs.map { f =>
-          try Some(f.get())
+        val outcomes = futs.map { f =>
+          try Right(f.get())
           catch {
             case e: Throwable =>
               val cause = e match {
@@ -150,17 +163,24 @@ object Fan {
                 case other => other
               }
               cancel(cause)
-              firstFailure match {
-                case None => firstFailure = Some(cause)
-                case Some(ff) if ff ne cause => ff.addSuppressed(cause)
-                case _ => ()
-              }
-              None
+              Left(cause)
           }
         }
-        firstFailure.foreach(throw _)
-        results.flatten
-      } finally pool.shutdown()
+        val failures = outcomes.collect { case Left(e) => e }.distinct
+        if (failures.nonEmpty) {
+          // with no cancellation among them, the first real failure is
+          // the first in input order
+          val canceller = cancellers.get(group)
+          val first = failures.find(_ eq canceller).filter(_ => failures.exists(isCancellation))
+            .orElse(failures.find(!isCancellation(_))).getOrElse(failures.head)
+          failures.filter(_ ne first).foreach(first.addSuppressed)
+          throw first
+        }
+        outcomes.collect { case Right(r) => r }
+      } finally {
+        pool.shutdown()
+        if (outer.isEmpty) cancellers.remove(group)
+      }
     }
 
   /** [[overlap]] of two independent actions with different result types. */

@@ -20,17 +20,38 @@ object GraftSession {
   private lazy val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  // managed tables (bucketed staging) land in tmp, never the cwd — a
-  // library must not scatter spark-warehouse/ dirs into user repos.
-  // One dir per JVM: Upsert.stageBucketed clears a table's location
-  // before it writes, so a dir shared between JVMs would let one run
-  // delete another's staged table. Created once, not per builder call:
-  // a builder that meets a live session never uses its warehouse.
-  private lazy val warehouse: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-wh").toFile
-    sys.addShutdownHook(org.apache.spark.network.util.JavaUtils.deleteQuietly(dir))
-    dir.toString
+  /** A per-JVM scratch path, `<java.io.tmpdir>/graft_<nonce>_<name>`.
+    * The nonce keeps two JVMs on the same inputs (a Bench run beside
+    * `sbt test`) from overwriting each other's in-flight scratch, and
+    * keeps a fresh JVM from reading a stale artifact. A shutdown hook
+    * deletes this JVM's paths; a killed JVM never runs it, so the first
+    * call also deletes every `graft_*` entry untouched for over 6 h — it
+    * belongs to no live run (suite and bench finish well inside that),
+    * and a concurrent live JVM's entries have fresh mtimes.
+    */
+  def scratch(name: String): String = s"$tmpDir/graft_${nonce}_$name"
+
+  private val tmpDir = sys.props("java.io.tmpdir")
+
+  private lazy val nonce: String = {
+    val nonce = java.util.UUID.randomUUID.toString.take(8)
+    def entries(keep: java.io.File => Boolean): Seq[java.io.File] =
+      Option(new java.io.File(tmpDir).listFiles).toSeq.flatten.filter(keep)
+    val staleMs = 6L * 3600 * 1000
+    val now = System.currentTimeMillis
+    entries(f => f.getName.startsWith("graft_") && now - f.lastModified > staleMs)
+      .foreach(org.apache.spark.network.util.JavaUtils.deleteQuietly)
+    sys.addShutdownHook(entries(_.getName.startsWith(s"graft_${nonce}_"))
+      .foreach(org.apache.spark.network.util.JavaUtils.deleteQuietly))
+    nonce
   }
+
+  // managed tables (bucketed staging) land in this JVM's scratch, never
+  // the cwd — a library must not scatter spark-warehouse/ dirs into user
+  // repos — and never in a dir shared between JVMs: Upsert.stageBucketed
+  // clears a table's location before it writes, so a shared dir would
+  // let one run delete another's staged table.
+  private lazy val warehouse: String = scratch("warehouse")
 
   def builder(master: String = s"local[$cores]", cpus: Int = cores): SparkSession.Builder =
     SparkSession.builder()

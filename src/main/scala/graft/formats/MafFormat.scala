@@ -15,13 +15,16 @@ object MafFormat {
     "CHROMOSOME", "START_POSITION", "END_POSITION", "REFERENCE_ALLELE",
     "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2")
 
+  /** The variant primary key: duplicate check (P14) and table upsert. */
+  val primaryKey: Seq[String] = Seq(
+    "CHROMOSOME", "START_POSITION", "REFERENCE_ALLELE", "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2")
+
   val numericColumns: Seq[String] = Seq(
     "START_POSITION", "END_POSITION", "T_DEPTH", "T_REF_COUNT",
     "T_ALT_COUNT", "N_DEPTH", "N_REF_COUNT", "N_ALT_COUNT")
 
   def rowRules(center: String): Seq[RowRule] = {
-    val key = concat_ws(" ", col("CHROMOSOME"), col("START_POSITION"),
-      col("REFERENCE_ALLELE"), col("TUMOR_SAMPLE_BARCODE"), col("TUMOR_SEQ_ALLELE2"))
+    val key = concat_ws(" ", primaryKey.map(col): _*)
     Seq(
       RowRule("chromosome_domain", "error",
         Rules.badChromosome(col("CHROMOSOME"), allowChrPrefix = false), key,
@@ -83,9 +86,7 @@ object MafFormat {
     // P14: duplicate variants on the 5-col PK (maf.py:273-299) — the one
     // unavoidable shuffle (groupBy on the key)
     def duplicateVariants: Finding = {
-      val pkCols = Seq("CHROMOSOME", "START_POSITION", "REFERENCE_ALLELE",
-        "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2")
-      val pk = pkCols.map(c => trim(col(c)).as(c))
+      val pk = primaryKey.map(c => trim(col(c)).as(c))
       val dupGroups = maf.groupBy(pk: _*).count().filter(col("count") > 1)
       // one action: duplicate-group count + offending barcodes together
       val dupRow = dupGroups.agg(

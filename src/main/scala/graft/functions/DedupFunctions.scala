@@ -1116,9 +1116,10 @@ object DedupFunctions {
                          mBits: Int): DataFrame = {
     val words = bloomBitsetFromEval(eval, textCol, n, seeds, mBits)
     // native fused pass: tokenize → distinct grams → md5 probe, one
-    // codegen'd call per row (the composed HOF chain below interprets
-    // its lambdas per element — isolated sf0.1 timing 4.5 s composed
-    // vs 0.8 s fused, bitset build job included in both)
+    // codegen'd call per row (the composed HOF chain, kept as the
+    // reference form in BloomDecontamSpec, interprets its lambdas per
+    // element — isolated sf0.1 timing 4.5 s composed vs 0.8 s fused,
+    // bitset build job included in both)
     val st = graft.plans.BloomShingleStatsExpr
       .stats(col(textCol), n, seeds, mBits, words)
     train
@@ -1126,27 +1127,6 @@ object DedupFunctions {
       .select(col(idCol),
         col("__st.n_shingles").as("n_shingles"),
         col("__st.n_hit").as("n_hit"))
-      .withColumn("flagged", col("n_hit") > 0L)
-  }
-
-  /** The composed-HOF reference form of [[bloomDecontaminate]] (shingle
-    * array → digest array → literal-bitset membership filter): the
-    * spec's equivalence anchor for the native expression, and the
-    * shape to read for the semantics. Same output, interpreted lambdas.
-    */
-  def bloomDecontaminateComposed(train: DataFrame, eval: DataFrame,
-                                 idCol: String, textCol: String, n: Int,
-                                 seeds: Int, mBits: Int): DataFrame = {
-    val words = bloomBitsetFromEval(eval, textCol, n, seeds, mBits)
-    val bits = typedLit(words.toIndexedSeq)
-    val shs = textShingles(col(textCol), n)
-    train
-      .select(col(idCol), shs.as("__shs"))
-      .select(col(idCol),
-        size(col("__shs")).cast("long").as("n_shingles"),
-        size(filter(transform(col("__shs"), sh => md5(sh)),
-          d => bloomContainsDigest(bits, d, seeds, mBits))).cast("long")
-          .as("n_hit"))
       .withColumn("flagged", col("n_hit") > 0L)
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Embedding / similarity-search primitives over `array<float>` columns.
@@ -1113,30 +1112,6 @@ object VectorFunctions {
     } finally v.unpersist(blocking = false)
   }
 
-  /** PQ-encode a corpus: each vector becomes m small codes (nearest
-    * codebook centroid per subspace). One row per (id, sub) with the
-    * code — 100 TB of float vectors compress to m bytes-ish per vector;
-    * the encode is a broadcast join + per-(id,sub) argmin (rewritten by
-    * Spark into a map-side WindowGroupLimit — see [[kmeansAssign]]'s
-    * shape note for why this beats a literal-centroid expression),
-    * vectors never shuffle. Distance = ||v||²−2v·c+||c||² with
-    * sequential folds; ties break on cid, so codes are deterministic.
-    */
-  def pqEncode(df: DataFrame, idCol: String, vecCol: String,
-               codebooks: DataFrame, m: Int, dim: Int): DataFrame = {
-    val subs = df.select(col(idCol), posexplode(
-      array((0 until m).map(subVec(col(vecCol), _, m, dim)): _*)).as(Seq("sub", "__sv")))
-    val joined = subs.join(broadcast(codebooks), Seq("sub"))
-      .withColumn("__dist",
-        dot(col("__sv"), col("__sv")) - lit(2.0) * dot(col("__sv"), col("centroid")) +
-          dot(col("centroid"), col("centroid")))
-    val w = Window.partitionBy(col(idCol), col("sub"))
-      .orderBy(col("__dist").asc, col("cid").asc)
-    joined.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col(idCol), col("sub"), col("cid").as("code"))
-  }
-
   /** Collect a codebook table to the driver for [[graft.plans.PqCodesExpr]]:
     * (sub, cid, centroid) rows, required dense over [0,m)×[0,ksub)
     * (what [[pqCodebooks]] produces and every persisted index stores),
@@ -1168,7 +1143,8 @@ object VectorFunctions {
     * one codegen'd per-row pass over the broadcastable codebooks, with
     * NO explode, NO join, NO window and NO pack shuffle (the r12 shape
     * paid a per-(id,sub) window exchange plus a groupBy pack exchange;
-    * codes are bit-identical — spec-pinned against [[pqEncode]]).
+    * codes are bit-identical — spec-pinned against that join+window
+    * form, kept in CentroidExpressionsSpec).
     */
   def pqEncodePacked(df: DataFrame, idCol: String, vecCol: String,
                      codebooks: DataFrame, m: Int, dim: Int,
@@ -1282,7 +1258,7 @@ object VectorFunctions {
   }
 
   /** O(delta) PQ refresh: delta vectors encode against the EXISTING
-    * codebooks ([[pqEncode]] is per-row and order-free, so the new
+    * codebooks (the encode is per-row and order-free, so the new
     * codes are bit-identical to what a full re-encode would assign
     * them), land as code segment N, and re-ingested ids are
     * tombstoned. Same delta contract as [[mergeIvfDelta]]: one row per

@@ -273,7 +273,7 @@ object ScaleSmoke {
 
     // 16b. the operational split: index construction once (train +
     // encode + persist), then the query path answers from stored codes
-    val pqIdxPath = s"${sys.props("java.io.tmpdir")}/graft_smoke_pq_index"
+    val pqIdxPath = GraftSession.scratch("smoke_pq_index")
     time("pq_index_build", nEmb) {
       V.savePqIndex(embN, "vec_id", "embedding", pqIdxPath,
         m = 4, dim = 64, ksub = 16, iters = 2,
@@ -298,7 +298,7 @@ object ScaleSmoke {
     // Query scans nprobe/clusters of the corpus as m-byte codes with
     // per-(query, cell) residual distance tables broadcast — the
     // billion-scale layout; build once, delta-merge O(delta)
-    val ivfpqIdx = s"${sys.props("java.io.tmpdir")}/graft_smoke_ivfpq"
+    val ivfpqIdx = GraftSession.scratch("smoke_ivfpq")
     time("ivfpq_index_build", nEmb) {
       V.saveIvfPqIndex(embN.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
         ivfpqIdx, clusters = 16, citers = 2, m = 4, dim = 64, ksub = 16,
@@ -333,7 +333,7 @@ object ScaleSmoke {
         (x, i) => x.cast("double") +
           sin(col("vec_id") * (i + lit(1))) * lit(0.05))).as("embedding"))
       .persist()
-    val realIdx = s"${sys.props("java.io.tmpdir")}/graft_smoke_ivfpq_real"
+    val realIdx = GraftSession.scratch("smoke_ivfpq_real")
     time("ivfpq_real_build_256c", nEmb) {
       V.saveIvfPqIndex(embR, "vec_id", "embedding", realIdx,
         clusters = 256, citers = 2, m = 8, dim = 64, ksub = 16,
@@ -367,7 +367,7 @@ object ScaleSmoke {
     // 4×-smaller codes + exact re-rank of the shortlist — recall
     // should sit at ~1.0, and its probe latency is the number the
     // sub-linear tiers must beat as the corpus grows.
-    val int8RealIdx = s"${sys.props("java.io.tmpdir")}/graft_smoke_int8_real"
+    val int8RealIdx = GraftSession.scratch("smoke_int8_real")
     time("int8_real_build", nEmb) {
       V.saveInt8Index(embR, "vec_id", "embedding", int8RealIdx)
       V.int8Codes(spark, int8RealIdx).count()
@@ -386,7 +386,7 @@ object ScaleSmoke {
     // shortlist + exact re-rank) on the SAME corpus/queries complete
     // the four-tier comparison table: every tier's probe latency and
     // recall@10 measured under identical conditions.
-    val ivfRealIdx = s"${sys.props("java.io.tmpdir")}/graft_smoke_ivf_real"
+    val ivfRealIdx = GraftSession.scratch("smoke_ivf_real")
     time("ivf_real_build_256c", nEmb) {
       V.saveIvfIndex(embR, "vec_id", "embedding", ivfRealIdx,
         clusters = 256, iters = 2)
@@ -404,7 +404,7 @@ object ScaleSmoke {
       println(f"SMOKE ivf_real_recall_np$nprobe recall@10=" +
         f"${hitsI.toDouble / exactReal.size}%.3f")
     }
-    val pqRealIdx = s"${sys.props("java.io.tmpdir")}/graft_smoke_pq_real"
+    val pqRealIdx = GraftSession.scratch("smoke_pq_real")
     time("pq_real_build_m8", nEmb) {
       V.savePqIndex(embR, "vec_id", "embedding", pqRealIdx,
         m = 8, dim = 64, ksub = 16, iters = 2,
@@ -449,7 +449,7 @@ object ScaleSmoke {
     // (no trained parameters — per-row quantization), probes answer
     // from the stored 4×-smaller scan, O(delta) merge is just code
     // rows + tombstones (the cheapest index maintenance in the family)
-    val int8Idx = s"${sys.props("java.io.tmpdir")}/graft_smoke_int8"
+    val int8Idx = GraftSession.scratch("smoke_int8")
     time("int8_index_build", nEmb) {
       V.saveInt8Index(embN.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", int8Idx)
@@ -483,7 +483,7 @@ object ScaleSmoke {
     // 16d. ingest-time ANN probe: the 40× corpus "arrives" against the
     // persisted index of the base corpus — per-row literal-centroid
     // argmin (the streaming-legal form, no window) + cid equi-join
-    val ingestIdx = s"${sys.props("java.io.tmpdir")}/graft_smoke_ingest_idx"
+    val ingestIdx = GraftSession.scratch("smoke_ingest_idx")
     val baseEmb = emb0.select(col("vec_id"), col("embedding"))
     time("ingest_probe", nEmb) {
       V.saveIvfIndex(baseEmb, "vec_id", "embedding", ingestIdx,
@@ -498,7 +498,7 @@ object ScaleSmoke {
     // query answering from the segmented tree. Build vs merge vs query
     // are separate rows so the operational cost (merge+query) is
     // visible against the one-time build.
-    val ivfIncIdx = s"${sys.props("java.io.tmpdir")}/graft_smoke_ivf_inc"
+    val ivfIncIdx = GraftSession.scratch("smoke_ivf_inc")
     time("ivf_index_build", nEmb) {
       V.saveIvfIndex(emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
         ivfIncIdx, clusters = 16, iters = 2)
@@ -541,7 +541,7 @@ object ScaleSmoke {
 
     // 18. z-order write + 2-D pruned readback over 6M events
     time("zorder_write_read", nEv) {
-      val out = s"${sys.props("java.io.tmpdir")}/graft_smoke_zorder"
+      val out = GraftSession.scratch("smoke_zorder")
       val e = ev.select(col("event_id"), col("user_id"),
         floor(col("value") * 10).cast("long").as("vbucket"))
       graft.sources.Layout.writeZOrdered(e, out, "user_id", "vbucket", nFiles = 64)
@@ -551,7 +551,7 @@ object ScaleSmoke {
     }
 
     // 19. segmented BM25: full build vs O(delta) refresh at 600k docs
-    val bmPath = s"${sys.props("java.io.tmpdir")}/graft_smoke_bm25"
+    val bmPath = GraftSession.scratch("smoke_bm25")
     time("bm25_index_build", nDocs) {
       graft.functions.Curation.saveBm25Index(docs, "doc_id", "text", bmPath)
       graft.sources.ParquetMeta.rowCount(spark, s"$bmPath/segments/00000/doclen")
@@ -579,11 +579,9 @@ object ScaleSmoke {
     // footer-only introspection + cross-index pin: zero Spark jobs
     time("bm25_describe_and_pin", 2L) {
       val d = graft.functions.SegmentedIndex.describe(spark, bmPath, "doclen")
-      graft.functions.CorpusSnapshot.write(spark,
-        s"${sys.props("java.io.tmpdir")}/graft_smoke_pin.json",
-        Map("bm25" -> bmPath))
-      graft.functions.CorpusSnapshot.verify(spark,
-        s"${sys.props("java.io.tmpdir")}/graft_smoke_pin.json")
+      val pin = GraftSession.scratch("smoke_pin.json")
+      graft.functions.CorpusSnapshot.write(spark, pin, Map("bm25" -> bmPath))
+      graft.functions.CorpusSnapshot.verify(spark, pin)
       d.size.toLong
     }
     // DSIR selection at the full doc multiple: one token pass for the

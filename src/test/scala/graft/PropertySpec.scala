@@ -417,7 +417,7 @@ class PropertySpec extends SparkSpec {
     forSamples(Gen.listOfN(3, hostile), n = 12) { labels0 =>
       val labels = labels0.distinct.filter(_.nonEmpty)
       if (labels.nonEmpty) {
-        val root = java.nio.file.Files.createTempDirectory("snapprop").toString
+        val root = tmpDir("snapprop")
         // one real index reused under every label (identity comes from
         // the manifest entries, not the tree)
         graft.functions.DedupFunctions.saveDigestIndex(

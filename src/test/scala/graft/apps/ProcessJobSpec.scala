@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.formats.FileType
 
 class ProcessJobSpec extends SparkSpec {
   import spark.implicits._
@@ -231,10 +232,10 @@ class ProcessJobSpec extends SparkSpec {
   }
 
   test("file-type registry recognizes workflow and retraction patterns") {
-    assert(ValidateCli.fileType("sampleRetraction.csv") == "sampleRetraction")
-    assert(ValidateCli.fileType("patientRetraction.csv") == "patientRetraction")
-    assert(ValidateCli.fileType("CTR_workflow.md", "CTR") == "workflow")
-    assert(ValidateCli.fileType("OTHER_workflow.md", "CTR") == "unknown")
+    assert(FileType.of("sampleRetraction.csv") == Some(FileType.SampleRetraction))
+    assert(FileType.of("patientRetraction.csv") == Some(FileType.PatientRetraction))
+    assert(FileType.of("CTR_workflow.md", "CTR") == Some(FileType.Workflow))
+    assert(FileType.of("OTHER_workflow.md", "CTR").isEmpty)
   }
 
   test("md5Of streams a multi-MB upload to the digest of its bytes") {
@@ -345,6 +346,18 @@ class ProcessJobSpec extends SparkSpec {
     assert(twoRuns() == first)
   }
 
+  test("ProcessMain: ERROR lines of 5 invalid MAFs come in sorted-name order") {
+    val in = tmpDir("pm-errors-in")
+    val names = ('a' to 'e').map(c => s"data_mutations_$c.maf")
+    // each file fails the chromosome domain check; a scala.Map of 5
+    // keys would iterate them in hash order
+    names.foreach(n => Files.write(Paths.get(in, n),
+      (mafHeader + "99\t100\t101\tA\tGENIE-CTR-p1-s1\tT\t30\n").getBytes))
+    val errors = processMainOut("CTR", in, tmpDir("pm-errors-state")).linesIterator
+      .filter(_.startsWith("ERROR ")).map(_.stripPrefix("ERROR ").takeWhile(_ != ':')).toSeq
+    assert(errors == names)
+  }
+
   test("two MAF files upsert in sorted-name order: the later file's row wins") {
     val dir = tmpDir("process-order")
     Files.write(Paths.get(dir, "data_mutations_a.maf"),
@@ -369,12 +382,10 @@ class ProcessJobSpec extends SparkSpec {
     val unreadable = (mafHeader.replace("T_DEPTH", "T.DEPTH") +
       "1\t100\t101\tA\tGENIE-CTR-p1-s1\tT\t1\n").getBytes
     Files.write(Paths.get(in, "data_mutations_z.maf"), unreadable)
-    // the read error surfaces first, or suppressed behind a sibling
-    // check's job that its failure cancelled
-    def failsOnUnreadableMaf(): Unit = {
-      val e = intercept[Exception](ProcessMain.main(Array("CTR", in, state)))
-      assert((e +: e.getSuppressed.toSeq).exists(_.isInstanceOf[org.apache.spark.sql.AnalysisException]), e)
-    }
+    // the read error surfaces, not a sibling check's job that its
+    // failure cancelled
+    def failsOnUnreadableMaf(): Unit =
+      intercept[org.apache.spark.sql.AnalysisException](ProcessMain.main(Array("CTR", in, state)))
     failsOnUnreadableMaf()
     assert(!Files.exists(Paths.get(state, "file_status.parquet")))
     assert(!Files.exists(Paths.get(state, "tables")))

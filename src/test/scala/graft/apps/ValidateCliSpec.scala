@@ -3,10 +3,11 @@ package graft.apps
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
+import graft.formats.FileType
 
 /** End-to-end dispatcher coverage for the `genie validate` analog: every
   * file type in the reference registry (genie_registry/__init__.py:28-42)
-  * must resolve through ValidateCli.fileType and run its validator.
+  * must resolve through the [[FileType]] registry and run its validator.
   */
 class ValidateCliSpec extends SparkSpec {
 
@@ -26,12 +27,14 @@ class ValidateCliSpec extends SparkSpec {
       "patientRetraction.csv"              -> "patientRetraction",
       "C_workflow.md"                      -> "workflow")
     expected.foreach { case (name, tpe) =>
-      assert(ValidateCli.fileType(name, "C") == tpe, s"$name → expected $tpe")
+      assert(FileType.of(name, "C").map(_.key) == Some(tpe), s"$name → expected $tpe")
     }
+    // the registry holds exactly these types, one key each
+    assert(FileType.all.map(_.key).sorted == expected.values.toSeq.sorted)
     // wrong-center CNA file must NOT dispatch as cna (cna.py:120-121
     // asserts the exact data_CNA_{center}.txt name)
-    assert(ValidateCli.fileType("data_CNA_OTHER.txt", "C") == "unknown")
-    assert(ValidateCli.fileType("random.bin", "C") == "unknown")
+    assert(FileType.of("data_CNA_OTHER.txt", "C").isEmpty)
+    assert(FileType.of("random.bin", "C").isEmpty)
   }
 
   private def write(dir: String, name: String, text: String): Unit =

@@ -7,9 +7,11 @@ import org.apache.spark.TaskContext
 import graft.SparkSpec
 
 /** Pins the contract of [[Fan.overlap]]: results in input order, a lone
-  * thunk inline, first-failure semantics with every future drained, and
-  * the caller's `Console.out` and Spark local properties visible inside
-  * the pool threads (callers capture output and tag jobs through them).
+  * thunk inline, first-failure semantics with every future drained (the
+  * failure that cancelled the group before the cancellations it
+  * caused), and the caller's `Console.out` and Spark local properties
+  * visible inside the pool threads (callers capture output and tag jobs
+  * through them).
   * Nested calls share one job group, so a failure at either level
   * cancels the running jobs of the other.
   */
@@ -72,10 +74,17 @@ class FanOverlapSpec extends SparkSpec {
       while (!ctx.isInterrupted() && System.currentTimeMillis() < end) Thread.sleep(10)
     }
 
-  /** Waits until some job is running. */
+  /** Waits until a job of the calling thunk's overlap group is running.
+    * (The status tracker lags the scheduler, so any-active-job could
+    * still see an earlier test's finished job.)
+    */
   private def awaitRunningJob(): Unit = {
+    val tracker = spark.sparkContext.statusTracker
+    val group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+    def running = tracker.getJobIdsForGroup(group).exists(
+      tracker.getJobInfo(_).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
     val end = System.currentTimeMillis() + 30000
-    while (spark.sparkContext.statusTracker.getActiveJobIds().isEmpty) {
+    while (!running) {
       if (System.currentTimeMillis() > end) fail("no job started")
       Thread.sleep(10)
     }
@@ -84,15 +93,25 @@ class FanOverlapSpec extends SparkSpec {
   test("a failure cancels an earlier sibling's running job without waiting for it") {
     val boom = new IllegalStateException("later boom")
     val t0 = System.nanoTime()
-    val thrown = intercept[org.apache.spark.SparkException] {
+    val thrown = intercept[IllegalStateException] {
       Fan.overlap(Seq(
         () => runUntilCancelled(60000),
         () => { awaitRunningJob(); throw boom }))
     }
     val secs = (System.nanoTime() - t0) / 1e9
     assert(secs < 30, s"the earlier sibling's job ran on for $secs s")
-    assert(thrown.getMessage.contains("later boom"), thrown.getMessage)
-    assert(thrown.getSuppressed.toSeq == Seq(boom))
+    // the real failure comes first; the sibling's cancellation, which
+    // names it, is suppressed
+    assert(thrown eq boom)
+    assertCancelledBy(thrown, "later boom")
+  }
+
+  /** `thrown`'s one suppressed error is a job cancellation naming `cause`. */
+  private def assertCancelledBy(thrown: Throwable, cause: String): Unit = {
+    val suppressed = thrown.getSuppressed.toSeq
+    assert(suppressed.map(_.getClass) == Seq(classOf[org.apache.spark.SparkException]), suppressed)
+    assert(suppressed.head.getMessage.contains("cancelled because an overlapped thunk failed: " +
+      s"java.lang.IllegalStateException: $cause"), suppressed.head.getMessage)
   }
 
   test("nested overlaps return results in input order at both levels, in one job group") {
@@ -116,7 +135,7 @@ class FanOverlapSpec extends SparkSpec {
     val t0 = System.nanoTime()
     // the outer drains in input order, so it waits on thunk 0 first:
     // only the inner overlap's cancel can stop that job early
-    val thrown = intercept[org.apache.spark.SparkException] {
+    val thrown = intercept[IllegalStateException] {
       Fan.overlap(Seq(
         () => runUntilCancelled(60000),
         () => Fan.overlap(Seq(
@@ -125,10 +144,10 @@ class FanOverlapSpec extends SparkSpec {
     }
     val secs = (System.nanoTime() - t0) / 1e9
     assert(secs < 30, s"the sibling's job ran on for $secs s")
-    // the cancelled job's error comes first (input order) and names its cause
-    assert(thrown.getMessage.contains("cancelled because an overlapped thunk failed: " +
-      "java.lang.IllegalStateException: inner boom"), thrown.getMessage)
-    assert(thrown.getSuppressed.toSeq == Seq(boom))
+    // the inner failure cancelled the group: it comes first at the outer
+    // level too, ahead of the earlier sibling's cancellation
+    assert(thrown eq boom)
+    assertCancelledBy(thrown, "inner boom")
   }
 
   test("an outer failure cancels the jobs an inner overlap submitted") {

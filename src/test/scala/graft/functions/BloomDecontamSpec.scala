@@ -97,7 +97,7 @@ class BloomDecontamSpec extends SparkSpec {
     for (mBits <- Seq(64, 1 << 14); seeds <- Seq(1, 3)) {
       val native = DedupFunctions.bloomDecontaminate(
         docs, eval, "doc_id", "text", n = 5, seeds = seeds, mBits = mBits)
-      val composed = DedupFunctions.bloomDecontaminateComposed(
+      val composed = BloomDecontamSpec.bloomDecontaminateComposed(
         docs, eval, "doc_id", "text", n = 5, seeds = seeds, mBits = mBits)
       assert(native.collect().toSet == composed.collect().toSet,
         s"native != composed at mBits=$mBits seeds=$seeds")
@@ -122,5 +122,32 @@ class BloomDecontamSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       DedupFunctions.bloomBitsetFromEval(eval, "text", 5, 0, 64)
     }
+  }
+}
+
+object BloomDecontamSpec {
+
+  /** The composed-HOF reference form of
+    * [[DedupFunctions.bloomDecontaminate]] (shingle array → digest array
+    * → literal-bitset membership filter): the spec's equivalence anchor
+    * for the native expression, and the shape to read for the
+    * semantics. Same output, interpreted lambdas.
+    */
+  def bloomDecontaminateComposed(train: org.apache.spark.sql.DataFrame,
+                                 eval: org.apache.spark.sql.DataFrame,
+                                 idCol: String, textCol: String, n: Int,
+                                 seeds: Int, mBits: Int): org.apache.spark.sql.DataFrame = {
+    import DedupFunctions.{bloomBitsetFromEval, bloomContainsDigest, textShingles}
+    val words = bloomBitsetFromEval(eval, textCol, n, seeds, mBits)
+    val bits = typedLit(words.toIndexedSeq)
+    val shs = textShingles(col(textCol), n)
+    train
+      .select(col(idCol), shs.as("__shs"))
+      .select(col(idCol),
+        size(col("__shs")).cast("long").as("n_shingles"),
+        size(filter(transform(col("__shs"), sh => md5(sh)),
+          d => bloomContainsDigest(bits, d, seeds, mBits))).cast("long")
+          .as("n_hit"))
+      .withColumn("flagged", col("n_hit") > 0L)
   }
 }

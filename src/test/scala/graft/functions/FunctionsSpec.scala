@@ -264,8 +264,7 @@ class FunctionsSpec extends SparkSpec {
       (2L, "e f g p q r s t h"),   // shares "p q r s t" with doc 1
       (3L, "k1 k2 k3 k4 k5 k6")
     ).toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("repspan_idx_spec").toString + "/idx"
+    val path = tmpDir("repspan_idx_spec") + "/idx"
     DedupFunctions.saveRepeatedSpanIndex(v1, "doc_id", "text", path, n = 3)
     val s1 = stats(DedupFunctions.repeatedSpanStatsFromIndex(
       spark, path, n = 3))
@@ -308,8 +307,7 @@ class FunctionsSpec extends SparkSpec {
     ).toDF("id", "vec")
     val corpus = all.filter($"id" <= 3)
     val delta = all.filter($"id" >= 4)
-    val path = java.nio.file.Files
-      .createTempDirectory("knn_graph_spec").toString + "/idx"
+    val path = tmpDir("knn_graph_spec") + "/idx"
 
     VectorFunctions.saveKnnGraph(corpus, "id", "vec", path, k = 2)
     VectorFunctions.mergeKnnGraphDelta(spark, path, corpus, delta,
@@ -1027,7 +1025,7 @@ class FunctionsSpec extends SparkSpec {
       .map(i => (i, s"w${i % 11} w${i % 5} w${i % 11} filler common text"))
       .toDF("doc_id", "text")
     val qs = Seq(0L -> Seq("w1", "w10"), 1L -> Seq("common", "w4"))
-    val path = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val path = tmpDir("bm25idx")
     Curation.saveBm25Index(docs, "doc_id", "text", path)
     val fromIdx = Curation.bm25TopKFromIndex(spark, path, qs, k = 6)
     val direct = Curation.bm25TopK(docs, "doc_id", "text", qs, k = 6)
@@ -1044,7 +1042,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("corpus snapshot manifest pins every index; asOf reads replay the pinned instant") {
     import graft.functions.{CorpusSnapshot, SegmentedIndex}
-    val root = java.nio.file.Files.createTempDirectory("snap").toString
+    val root = tmpDir("snap")
     val docs = (1L to 60L).map(i => (i, s"tok${i % 7} body $i"))
       .toDF("doc_id", "text")
     Curation.saveBm25Index(docs, "doc_id", "text", s"$root/bm25")
@@ -1118,7 +1116,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("compaction retention guard: a live snapshot pin blocks compaction until retired") {
     import graft.functions.{CorpusSnapshot, SegmentedIndex}
-    val root = java.nio.file.Files.createTempDirectory("pinguard").toString
+    val root = tmpDir("pinguard")
     val docs = (1L to 40L).map(i => (i, s"tok${i % 5} body $i"))
       .toDF("doc_id", "text")
     Curation.saveBm25Index(docs, "doc_id", "text", s"$root/bm25")
@@ -1178,7 +1176,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("snapshot preserve: clone pinned history aside, then compact the live tree") {
     import graft.functions.{CorpusSnapshot, SegmentedIndex}
-    val root = java.nio.file.Files.createTempDirectory("snappres").toString
+    val root = tmpDir("snappres")
     val docs = (1L to 40L).map(i => (i, s"tok${i % 5} body $i"))
       .toDF("doc_id", "text")
     Curation.saveBm25Index(docs, "doc_id", "text", s"$root/bm25")
@@ -1216,7 +1214,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("snapshot preserve clones sibling parameter tables (IVF centroids)") {
     import graft.functions.{CorpusSnapshot, SegmentedIndex, VectorFunctions => V}
-    val root = java.nio.file.Files.createTempDirectory("snapivf").toString
+    val root = tmpDir("snapivf")
     def vec(i: Int) = Array.tabulate(8) { d =>
       (if (d == (i % 4) * 2) 10.0f else 0.0f) + ((i * 31 + d * 7) % 5) * 0.1f
     }
@@ -1252,7 +1250,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("changedBetween: net add/replace/delete across merge chains; transients omitted") {
     import graft.functions.{DedupFunctions => DD, SegmentedIndex}
-    val root = java.nio.file.Files.createTempDirectory("chlog").toString + "/idx"
+    val root = tmpDir("chlog") + "/idx"
     def docsOf(rows: (Long, String)*) = rows.toSeq.toDF("id", "t")
     DD.saveDigestIndex(
       docsOf((1L to 10L).map(i => i -> s"v0-$i"): _*), "id", "t", root)
@@ -1295,7 +1293,7 @@ class FunctionsSpec extends SparkSpec {
     val base = (1L to 200L).filterNot(_ % 3 == 0)
       .map(i => (i, baseText(i))).toDF("doc_id", "text")
     val qs = Seq(0L -> Seq("w1", "base"), 1L -> Seq("w4", "w10"))
-    val path = java.nio.file.Files.createTempDirectory("bm25asof").toString
+    val path = tmpDir("bm25asof")
     Curation.saveBm25Index(base, "doc_id", "text", path)
     // the answer a live reader saw at v0, captured BEFORE any merge
     val v0Live = Curation.bm25TopKFromIndex(spark, path, qs, k = 8)
@@ -1342,7 +1340,7 @@ class FunctionsSpec extends SparkSpec {
     val delta = eff.filter { case (i, _) => i % 3 == 0 || i % 5 == 0 }
       .toDF("doc_id", "text")
     val qs = Seq(0L -> Seq("zzmerged", "w4"), 1L -> Seq("w1", "base"))
-    val path = java.nio.file.Files.createTempDirectory("bm25seg").toString
+    val path = tmpDir("bm25seg")
     Curation.saveBm25Index(base, "doc_id", "text", path)
     Curation.mergeBm25Delta(delta, "doc_id", "text", path)
     val fresh = Curation.bm25TopK(eff.toDF("doc_id", "text"),
@@ -1362,7 +1360,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("bm25 merge chain: a twice re-ingested id serves only its latest version") {
-    val path = java.nio.file.Files.createTempDirectory("bm25chain").toString
+    val path = tmpDir("bm25chain")
     Curation.saveBm25Index(
       Seq((1L, "alpha alpha"), (2L, "beta")).toDF("doc_id", "text"),
       "doc_id", "text", path)
@@ -1382,7 +1380,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("bm25 merge: two versions of one id inside a single delta are rejected") {
-    val path = java.nio.file.Files.createTempDirectory("bm25dup").toString
+    val path = tmpDir("bm25dup")
     Curation.saveBm25Index(
       Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
       "doc_id", "text", path)
@@ -1401,7 +1399,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("bm25 merge: null-text rows are deletions — retracted doc gone, stats match a rebuild") {
-    val path = java.nio.file.Files.createTempDirectory("bm25del").toString
+    val path = tmpDir("bm25del")
     val base = Seq((1L, "alpha beta"), (2L, "alpha gamma"), (3L, "alpha"))
       .toDF("doc_id", "text")
     Curation.saveBm25Index(base, "doc_id", "text", path)
@@ -1426,7 +1424,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("bm25 commit: rename onto an existing segment fails loudly, orphan tmp swept") {
-    val path = java.nio.file.Files.createTempDirectory("bm25race").toString
+    val path = tmpDir("bm25race")
     Curation.saveBm25Index(
       Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
       "doc_id", "text", path)
@@ -1461,7 +1459,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("bm25 readers see a committed tree during merge/compaction — old or new, never partial") {
-    val path = java.nio.file.Files.createTempDirectory("bm25concur").toString
+    val path = tmpDir("bm25concur")
     val base = (1L to 60L).map(i => (i, s"w${i % 7} base")).toDF("doc_id", "text")
     Curation.saveBm25Index(base, "doc_id", "text", path)
     val qs = Seq(0L -> Seq("base"))

@@ -212,7 +212,7 @@ class ScaleSpec extends SparkSpec {
       clusters = 4, iters = 3, tau = 0.99, maxCell = 50)
     assert(capped.count() == n.toLong)
     // persisted-index path answers identically to train-per-call
-    val idx = java.nio.file.Files.createTempDirectory("sem_idx").toString
+    val idx = tmpDir("sem_idx")
     VectorFunctions.saveIvfIndex(df, "vec_id", "embedding", idx, clusters = 4, iters = 3)
     val fromIdx = VectorFunctions.semanticDedupFromIndex(idx, df, "vec_id", "embedding",
       tau = 0.99).select("vec_id").as[Long].collect().toSet
@@ -383,8 +383,8 @@ class ScaleSpec extends SparkSpec {
     assert(fused == perSub, "fused PQ trainer diverged from the per-subspace formulation")
 
     // codes are deterministic: re-encoding yields the identical table
-    val codes1 = VectorFunctions.pqEncode(df, "vec_id", "embedding", books, 4, dim)
-    val codes2 = VectorFunctions.pqEncode(df, "vec_id", "embedding", books, 4, dim)
+    val codes1 = graft.plans.CentroidExpressionsSpec.pqEncode(df, "vec_id", "embedding", books, 4, dim)
+    val codes2 = graft.plans.CentroidExpressionsSpec.pqEncode(df, "vec_id", "embedding", books, 4, dim)
     assert(codes1.except(codes2).isEmpty && codes2.except(codes1).isEmpty)
     assert(codes1.count() == n * 4L)
 

@@ -121,7 +121,7 @@ class CentroidExpressionsSpec extends SparkSpec {
       val books = graft.functions.VectorFunctions.pqCodebooks(
         corpus(150, 12, float = false), "id", "vec",
         m = 3, dim = 12, ksub = 4, iters = 2)
-      val expected = graft.functions.VectorFunctions
+      val expected = CentroidExpressionsSpec
         .pqEncode(df, "id", "vec", books, m = 3, dim = 12)
         .groupBy(col("id"))
         .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
@@ -145,5 +145,32 @@ class CentroidExpressionsSpec extends SparkSpec {
     val recheck = viaCodegen.withColumn("cid2",
       CentroidOps.nearestCell(col("vec"), cs))
     assert(recheck.filter(col("cid") =!= col("cid2")).count() == 0)
+  }
+}
+
+object CentroidExpressionsSpec {
+
+  /** The r12 join+window PQ encode that [[graft.plans.PqCodesExpr]]
+    * replaced, kept as the reference the specs compare against: each
+    * vector's m subspaces explode, broadcast-join the codebooks, and a
+    * per-(id, sub) `row_number()` picks the nearest centroid. Distance =
+    * ||v||²−2v·c+||c||² with sequential folds; ties break on cid. One
+    * row per (id, sub) with the code.
+    */
+  def pqEncode(df: DataFrame, idCol: String, vecCol: String,
+               codebooks: DataFrame, m: Int, dim: Int): DataFrame = {
+    import graft.functions.VectorFunctions.dot
+    val subs = df.select(col(idCol), posexplode(array((0 until m).map(sub =>
+      slice(col(vecCol).cast("array<double>"), sub * (dim / m) + 1, dim / m)): _*))
+      .as(Seq("sub", "__sv")))
+    val joined = subs.join(broadcast(codebooks), Seq("sub"))
+      .withColumn("__dist",
+        dot(col("__sv"), col("__sv")) - lit(2.0) * dot(col("__sv"), col("centroid")) +
+          dot(col("centroid"), col("centroid")))
+    val w = Window.partitionBy(col(idCol), col("sub"))
+      .orderBy(col("__dist").asc, col("cid").asc)
+    joined.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .select(col(idCol), col("sub"), col("cid").as("code"))
   }
 }
