@@ -823,13 +823,12 @@ object SparkEntry {
     }),
 
     "scd2_stream_replay" -> ((s, dir) => {
-      // batch twin of streaming/ValidateStream.scd2Stream: replay three
-      // full-snapshot micro-batches (ts 0, 100, 200) through the SAME
-      // per-batch code the stream runs (scd2ApplyBatch: first-batch
-      // init, then Scd2.merge per batch) — close-and-reopen across
-      // batches, retirement at ts 200, unchanged rows keeping their
-      // original valid_from. DuckDB replays the full three-step history.
-      val V = graft.streaming.ValidateStream
+      // replay three full snapshots (ts 0, 100, 200) through
+      // Scd2.scd2ApplyBatch (first-snapshot init, then Scd2.merge per
+      // snapshot) — close-and-reopen across snapshots, retirement at
+      // ts 200, unchanged rows keeping their original valid_from.
+      // DuckDB replays the full three-step history.
+      import graft.operators.Scd2.scd2ApplyBatch
       val c = t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
       val b1 = c.select(col("c_custkey"),
         when(col("c_custkey") % 3 === 0, lit("B1"))
@@ -841,22 +840,21 @@ object SparkEntry {
             .otherwise(col("c_mktsegment")).as("c_mktsegment"))
       val pk = Seq("c_custkey")
       val at = Seq("c_mktsegment")
-      val t0 = V.scd2ApplyBatch(None, c, pk, at, ts = 0L)
-      val t1 = V.scd2ApplyBatch(Some(t0), b1, pk, at, ts = 100L)
-      V.scd2ApplyBatch(Some(t1), b2, pk, at, ts = 200L)
+      val t0 = scd2ApplyBatch(None, c, pk, at, ts = 0L)
+      val t1 = scd2ApplyBatch(Some(t0), b1, pk, at, ts = 100L)
+      scd2ApplyBatch(Some(t1), b2, pk, at, ts = 200L)
     }),
 
     "dedup_stream_corpus" -> ((s, dir) => {
-      // batch twin of streaming/ValidateStream.dedupAgainstCorpus (the
-      // stream-static anti-join is the same plan on a batch frame): a
-      // batch of genuinely-new docs plus re-ingested corpus docs keeps
-      // only content whose digest the corpus index does not hold.
+      // D.dedupAgainstCorpus: a batch of genuinely-new docs plus
+      // re-ingested corpus docs keeps only content whose digest the
+      // corpus index does not hold.
       val docs = t(s, dir, "documents")
       val digests = docs.filter(col("doc_id") % 10 =!= 7)
         .select(md5(col("text")).as("digest")).distinct()
       val batch = docs.filter(col("doc_id") % 10 === 7)
         .unionByName(docs.filter(col("doc_id") % 20 === 0))
-      graft.streaming.ValidateStream.dedupAgainstCorpus(batch, "text", digests)
+      D.dedupAgainstCorpus(batch, "text", digests)
         .select(col("doc_id"))
     }),
 
@@ -2346,7 +2344,7 @@ object SparkEntry {
 
     "sessionize_batch" -> ((s, dir) => {
       // gap-based sessionization (30-min gap): per-user session index →
-      // per-session event count + bounds. Batch twin of SessionizeStream.
+      // per-session event count + bounds.
       val e = events(s, dir).select("user_id", "event_id", "ts_ms")
       WindowOps.sessionize(e, Seq("user_id"), "ts_ms",
           Seq("ts_ms", "event_id"), gap = 1800000L)
@@ -3713,8 +3711,7 @@ object SparkEntry {
       // windows (its 5-min-floor start and the one before). The window
       // memberships are a scan-side explode of 2 arithmetic starts —
       // no window function, no single-partition risk; the groupBy is
-      // the only shuffle, map-side combined. Batch twin of the
-      // streaming sliding-window rate monitor.
+      // the only shuffle, map-side combined.
       val slide = 300000L
       val win = 600000L
       events(s, dir)
@@ -3742,8 +3739,8 @@ object SparkEntry {
     }),
 
     "stream_tumbling_counts" -> ((s, dir) => {
-      // tumbling 1h window counts — same aggregation the streaming module
-      // (graft.streaming) runs via readStream+watermark; batch-equivalent
+      // tumbling 1h window counts: each event's window start is its
+      // ts floored to the hour
       events(s, dir)
         .withColumn("win_start_ms", (col("ts_ms") - pmod(col("ts_ms"), lit(3600000L))))
         .groupBy("win_start_ms", "event_type")
@@ -4042,9 +4039,8 @@ object SparkEntry {
     "dedup_ingest_probe" -> ((s, dir) => {
       // ingest-time near-dup gate: index built over the existing corpus
       // (vec_id < 490), the 10 "arriving" rows probe it — per-row
-      // literal-centroid cell assignment (the streaming-legal form; no
-      // window) + equi-join on cid. The same function runs as the
-      // stream-static join in ValidateStream.nearDupProbeStream.
+      // literal-centroid cell assignment (a per-row expression; no
+      // window) + equi-join on cid.
       val emb = t(s, dir, "embeddings")
       val corpus = emb.filter(col("vec_id") < 490)
       val incoming = emb.filter(col("vec_id") >= 490)
@@ -5184,9 +5180,14 @@ object SparkEntry {
         when(col("p_partkey") % 300 === 0, lit("data_clinical_supp_sample.txt"))
           .when(col("p_partkey") % 200 === 0, concat(lit("batch_"), col("p_partkey"), lit(".seg")))
           .otherwise(concat(lit("maf_"), col("p_partkey"), lit(".txt"))).as("name"))
-      val p30 = uploads.agg(
-        sum(when(col("name").startsWith("data_clinical_supp"), 1L).otherwise(0L)).as("nc"),
-        sum(when(col("name").endsWith(".seg"), 1L).otherwise(0L)).as("ns"))
+      // P30 types each name through the upload registry, as
+      // ProcessJob.duplicatedFiles does
+      import graft.formats.FileType
+      val typeOf = udf((name: String) => FileType.of(name).map(_.key).orNull)
+      val p30 = uploads.withColumn("__type", typeOf(col("name"))).agg(
+        sum(when(col("__type").isin(FileType.ClinicalSample.key, FileType.ClinicalPatient.key), 1L)
+          .otherwise(0L)).as("nc"),
+        sum(when(col("__type") === FileType.Seg.key, 1L).otherwise(0L)).as("ns"))
         .select((col("nc") > 2).cast("long").as("clinical_dup_flag"),
           (col("ns") > 1).cast("long").as("seg_dup_flag"))
       skip.agg(count(lit(1)).as("n_skip"))

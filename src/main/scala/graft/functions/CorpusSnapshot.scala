@@ -137,8 +137,7 @@ object CorpusSnapshot {
     * an index nobody snapshotted. A MALFORMED manifest under the
     * source throws (via [[read]]'s count cross-check): a truncated
     * manifest may hold a real pin, so it must never silently read as
-    * "no pins" — batch compaction then refuses loudly, and the
-    * streaming sinks catch and DEFER (`ValidateStream.pinned`).
+    * "no pins" — compaction then refuses loudly.
     */
   def pinsOn(spark: SparkSession, indexPath: String,
              manifestSource: String): Seq[(String, String, Int)] = {

@@ -299,6 +299,23 @@ object DedupFunctions {
       .select(col(idCol), col("__hit").isNotNull.as("dup_in_corpus"))
   }
 
+  /** Batch-vs-corpus incremental dedup: drop `docs` whose content
+    * digest already exists in the persisted corpus digest index (the
+    * table [[incrementalExactDup]]'s corpus side reduces to). One
+    * left-anti join on the digest: text never shuffles, and the
+    * corpus text is never re-read once the index exists. This guards
+    * only against re-ingesting what the corpus already holds, not
+    * against duplicates within `docs`.
+    */
+  def dedupAgainstCorpus(docs: DataFrame, contentCol: String,
+                         corpusDigests: DataFrame,
+                         digestCol: String = "digest"): DataFrame =
+    docs
+      .withColumn("__digest", md5(col(contentCol)))
+      .join(corpusDigests.select(col(digestCol).as("__digest")).distinct(),
+        Seq("__digest"), "left_anti")
+      .drop("__digest")
+
   /** Incremental NEAR-dup candidates: batch docs that share a MinHash
     * band bucket with any corpus doc. `corpusBandIndex` is the
     * persisted (band_key, id) table from [[bandIndex]] — built once per
@@ -922,14 +939,6 @@ object DedupFunctions {
   def retractRepeatedSpanIndex(spark: org.apache.spark.sql.SparkSession,
                                path: String, ids: DataFrame): Unit =
     SegmentedIndex.retract(spark, path, ids, Seq("grams"))
-
-  /** Fold accumulated segments to one (answers unchanged, h-range
-    * clustering re-established, live pins deferred to).
-    */
-  def compactRepeatedSpanIndex(spark: org.apache.spark.sql.SparkSession,
-                               path: String,
-                               pinnedBy: Option[String] = None): Unit =
-    SegmentedIndex.compactIndex(spark, path, "grams", pinnedBy, shapeGrams)
 
   /** The audit table from the LIVE index (tombstone-masked, optional
     * `asOf` pin) — same output as [[repeatedSpanStats]] over the

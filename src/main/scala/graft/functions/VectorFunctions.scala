@@ -272,8 +272,8 @@ object VectorFunctions {
     // union + tombstone-mask scan once per consumer at run time.
     val oldLists = SegmentedIndex.liveRows(spark, path, "graph").persist()
     try {
-      // REPLAY-STABLE: a re-delivered batch (streaming crash between the
-      // graph merge and the corpus append) arrives with its ids already
+      // REPLAY-STABLE: a re-delivered delta (a crash between the graph
+      // merge and the caller's corpus append) arrives with its ids already
       // in the stored graph — drop those rows from the base before
       // merging, so the delta path recomputes them identically and the
       // old-list path re-ranks lists that may already contain delta
@@ -696,9 +696,7 @@ object VectorFunctions {
     * incoming row is assigned to its cell per-row ([[assignCellLiteral]],
     * no window, no shuffle), then an equi-join on `cid` against the
     * index cells (corpus vectors re-joined by id) flags pairs at
-    * cos ≥ tau. Runs unchanged on a batch DataFrame (the oracle-gated
-    * twin) and as the static side of a stream-static join on a
-    * readStream micro-batch — the streaming corpus-refresh gate.
+    * cos ≥ tau.
     */
   def nearDupProbeIndex(path: String, incoming: DataFrame, id: String, vec: String,
                         corpus: DataFrame, tau: Double, roundScale: Int = 6,
@@ -1005,8 +1003,8 @@ object VectorFunctions {
     * crosses `threshold` (footer arithmetic only — deciding costs ZERO
     * jobs), re-train and re-assign from the caller's current corpus
     * via [[saveIvfIndex]]; below it, no-op. Returns whether a re-train
-    * ran. The streaming upkeep sinks call the merge path every batch;
-    * an operator (or a scheduled job) calls this between batches —
+    * ran. [[mergeIvfDelta]] folds each delta in; an operator (or a
+    * scheduled job) calls this between merges —
     * the re-train is the ONLY corpus-sized pass in the lifecycle, and
     * this is the documented hook that decides when to pay it.
     */

@@ -64,4 +64,19 @@ object Scd2 {
 
     closedHist.unionByName(mergedCurrent)
   }
+
+  /** Apply one full snapshot taken at `ts` to the history: the first
+    * snapshot (no `existing`) initializes it — every row opens at `ts`
+    * — and every later one is a [[merge]].
+    */
+  def scd2ApplyBatch(existing: Option[DataFrame], batch: DataFrame,
+                     pkCols: Seq[String], attrCols: Seq[String],
+                     ts: Long): DataFrame =
+    existing match {
+      case Some(ex) =>
+        merge(ex, batch, pkCols, attrCols, ts)
+      case None => batch
+        .withColumn("valid_from", lit(ts))
+        .withColumn("valid_to", lit(null).cast("long"))
+    }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Primary-key table upsert (SURVEY §2.1 S12; reference:
@@ -158,8 +158,4 @@ object Upsert {
           "left_anti")
       incoming.unionByName(kept.select(incoming.columns.toIndexedSeq.map(col): _*))
     }
-
-  /** Write a merged table back as parquet (full overwrite). */
-  def overwrite(spark: SparkSession, df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 }

@@ -39,10 +39,10 @@ object WindowOps {
       abs(vafDelta) < maxVafDelta &&
       (codonDelta.isNull || codonDelta === 1)
 
-  /** Batch sessionization: gap-based session assignment per key — the
-    * batch twin of `streaming/SessionizeStream`. A session breaks when
-    * the gap to the previous event exceeds `gap` (same ts units as
-    * `tsCol`). Adds `session_idx` (1-based per key, in ts order).
+  /** Batch sessionization: gap-based session assignment per key. A
+    * session breaks when the gap to the previous event exceeds `gap`
+    * (same ts units as `tsCol`). Adds `session_idx` (1-based per key,
+    * in ts order).
     *
     * One shuffle on the key; the lag + running-sum pair runs in a
     * single Window pass per partition — no self-join, no iteration,

@@ -7,7 +7,6 @@ import graft.operators.RowIndex
 import graft.release.PublicRelease
 import graft.rules.CrossFileChecks
 import graft.sources.Oncotree
-import graft.streaming.SessionizeStream
 
 class CoverageExtrasSpec extends SparkSpec {
   import spark.implicits._
@@ -162,19 +161,6 @@ class CoverageExtrasSpec extends SparkSpec {
     assert(idx1.keySet == Set(0L, 1L, 2L, 3L)) // dense 0..n-1
   }
 
-  test("stateful sessionization logic closes sessions on gaps") {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    // drive the update function directly (batch semantics of the op)
-    val events = Iterator(
-      SessionizeStream.Event(1L, 0L, 1.0),
-      SessionizeStream.Event(1L, 1000L, 2.0),
-      SessionizeStream.Event(1L, 100000L, 3.0)) // > gap → closes first session
-    val state = new TestGroupState[SessionizeStream.SessionState]
-    val closed = SessionizeStream.update(gapMs = 30000L)(1L, events, state).toList
-    assert(closed == List(SessionizeStream.Session(1L, 0L, 1000L, 2, 3.0)))
-    assert(state.getOption.exists(s => s.start_ms == 100000L && s.n_events == 1))
-  }
-
   test("registry hygiene: no silently-shadowed duplicate query/oracle names") {
     // Map literals dedupe duplicate keys without a warning — a second
     // registration of an existing name silently drops one definition
@@ -194,24 +180,4 @@ class CoverageExtrasSpec extends SparkSpec {
         (SparkEntry.queries.keySet diff SparkEntry.oracleSql.keySet) ++
           (SparkEntry.oracleSql.keySet diff SparkEntry.queries.keySet)}")
   }
-}
-
-/** Minimal GroupState stub for driving flatMapGroupsWithState logic. */
-class TestGroupState[S] extends org.apache.spark.sql.streaming.GroupState[S] {
-  private var v: Option[S] = None
-  private var removed = false
-  override def exists: Boolean = v.isDefined
-  override def get: S = v.get
-  override def getOption: Option[S] = v
-  override def update(newState: S): Unit = { v = Some(newState) }
-  override def remove(): Unit = { v = None; removed = true }
-  override def hasTimedOut: Boolean = false
-  override def setTimeoutDuration(durationMs: Long): Unit = ()
-  override def setTimeoutDuration(duration: String): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long, additionalDuration: String): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date, additionalDuration: String): Unit = ()
-  override def getCurrentWatermarkMs(): Long = 0L
-  override def getCurrentProcessingTimeMs(): Long = 0L
 }

@@ -45,6 +45,8 @@ import graft.tools.PlanMetrics
   *    graft.tools.ShuffleBaseline after INTENTIONAL plan changes): a
   *    lost broadcast, broken pushdown or dropped partial aggregation
   *    multiplies shuffle volume long before toy-scale wall clock shows.
+  *    A violation prints the query's executed (AQE final) plan, so a
+  *    run-to-run join strategy flip shows in the failure itself.
   */
 class QuerySweepSpec extends SparkSpec {
   import QuerySweepSpec._
@@ -121,7 +123,8 @@ class QuerySweepSpec extends SparkSpec {
             val budget = 2L * c + 4096L
             if (bytes > budget)
               shuffle += f"$name: shuffled $bytes%,d bytes > budget $budget%,d " +
-                f"(committed ceiling $c%,d) — plan regression or regenerate ceilings"
+                f"(committed ceiling $c%,d) — plan regression or regenerate ceilings" +
+                s"\nexecuted (AQE final) plan:\n${PlanMetrics.finalPlan(df).treeString}"
           }
         } catch {
           case e: Throwable =>

@@ -830,6 +830,46 @@ class FunctionsSpec extends SparkSpec {
     assert(!cands.exists(_._1 == 21L), s"fresh doc must not collide: $cands")
   }
 
+  test("corpus dedup: docs already in the corpus digest index are dropped") {
+    val docs = Seq((1L, "already ingested content"), (2L, "genuinely new content"),
+      (3L, "also already present"), (4L, "fresh again")).toDF("doc_id", "text")
+    val corpus = Seq("already ingested content", "also already present")
+      .toDF("text").select(md5(col("text")).as("digest"))
+    val kept = DedupFunctions.dedupAgainstCorpus(docs, "text", corpus)
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(2L, 4L), s"expected corpus dups dropped, got $kept")
+  }
+
+  test("IVF drift retrain hook: no-op below threshold, corpus-pass retrain above") {
+    import graft.functions.{SegmentedIndex, VectorFunctions}
+    def vec(i: Int) = Array.tabulate(8) { d =>
+      val base = if (d == (i % 4) * 2) 10.0f else 0.0f
+      base + ((i * 31 + d * 7) % 5) * 0.1f
+    }
+    val base = (0 until 100).map(i => (i.toLong, vec(i)))
+      .toDF("vec_id", "embedding")
+    val dir = tmpDir("ivfdrift")
+    VectorFunctions.saveIvfIndex(base, "vec_id", "embedding", s"$dir/idx",
+      clusters = 4, iters = 2)
+    val delta = (100 until 120).map(i => (i.toLong, vec(i)))
+      .toDF("vec_id", "embedding")
+    VectorFunctions.mergeIvfDelta(delta, "vec_id", "embedding", s"$dir/idx")
+    val corpus = (0 until 120).map(i => (i.toLong, vec(i)))
+      .toDF("vec_id", "embedding")
+    // ~17% delta share: below a 0.3 threshold the decision is footer
+    // arithmetic only and the tree is untouched
+    assert(!VectorFunctions.retrainIvfIfDrifted(corpus, "vec_id", "embedding",
+      s"$dir/idx", threshold = 0.3, clusters = 4, iters = 2))
+    assert(SegmentedIndex.segmentDirs(spark, s"$dir/idx").map(_._1) == Seq(0, 1))
+    // above it (threshold 0.1) the index re-trains to one fresh segment
+    // covering the whole corpus
+    assert(VectorFunctions.retrainIvfIfDrifted(corpus, "vec_id", "embedding",
+      s"$dir/idx", threshold = 0.1, clusters = 4, iters = 2))
+    assert(SegmentedIndex.segmentDirs(spark, s"$dir/idx").map(_._1) == Seq(0))
+    assert(VectorFunctions.ivfCells(spark, s"$dir/idx").count() == 120L)
+    assert(SegmentedIndex.deltaFraction(spark, s"$dir/idx", "cells") == 0.0)
+  }
+
   test("trainHashedLinearWeights separates a planted vocabulary, deterministically") {
     import graft.functions.{TextFunctions => T}
     // class-1 docs draw from vocab A, class-0 from vocab B; a linear

@@ -124,6 +124,23 @@ class OperatorsSpec extends SparkSpec {
     assert(plan.contains("Union"), "closed history must union through, not join")
   }
 
+  test("scd2ApplyBatch: dimension history accumulates across snapshots") {
+    // snapshot at ts 10 initializes; at ts 11 pk 2 changes, pk 3
+    // retires, pk 4 is new
+    val t0 = Scd2.scd2ApplyBatch(None, Seq((1L, "a"), (2L, "b"), (3L, "c"))
+      .toDF("pk", "attr"), Seq("pk"), Seq("attr"), ts = 10L)
+    val hist = Scd2.scd2ApplyBatch(Some(t0), Seq((1L, "a"), (2L, "b2"), (4L, "d"))
+      .toDF("pk", "attr"), Seq("pk"), Seq("attr"), ts = 11L)
+      .select("pk", "attr", "valid_from", "valid_to")
+      .as[(Long, String, Long, Option[Long])].collect().toSet
+    assert(hist == Set(
+      (1L, "a", 10L, None),                    // unchanged, still open
+      (2L, "b", 10L, Some(11L)),               // closed at the second ts
+      (2L, "b2", 11L, None),                   // reopened with new attr
+      (3L, "c", 10L, Some(11L)),               // retired
+      (4L, "d", 11L, None)))                   // new key
+  }
+
   test("aggmaintain: merged partials equal from-scratch aggregate; negative delta retracts") {
     val base  = Seq(("x", 1.0), ("x", 2.0), ("y", 5.0)).toDF("k", "v")
     val delta = Seq(("x", 3.0), ("z", 1.5)).toDF("k", "v")
