@@ -5009,13 +5009,9 @@ object SparkEntry {
       val patient = t(s, dir, "customer").select(col("c_custkey").as("PATIENT_ID"),
         when(col("c_custkey") % 5 === 0, lit(""))
           .otherwise((col("c_custkey") % 3).cast("string")).as("SEX"))
-      val male   = Seq("TESTIS", "PROSTATE", "PENIS")
-      val female = Seq("CERVIX", "VULVA", "UTERUS", "OVARY")
-      val sexD   = expr("try_cast(SEX as double)")
       sample.join(broadcast(tree.select("ONCOTREE_CODE", "PRIMARY_CODE")), Seq("ONCOTREE_CODE"))
         .join(patient, Seq("PATIENT_ID"))
-        .filter((col("PRIMARY_CODE").isInCollection(male) && !(sexD <=> 1.0)) ||
-          (col("PRIMARY_CODE").isInCollection(female) && !(sexD <=> 2.0)))
+        .filter(graft.formats.ClinicalFormat.sexConflict)
         .groupBy(col("PRIMARY_CODE").as("primary_code"))
         .agg(count(lit(1)).as("n_conflicts"), min(col("SAMPLE_ID")).as("example"))
     }),
@@ -5180,16 +5176,16 @@ object SparkEntry {
         when(col("p_partkey") % 300 === 0, lit("data_clinical_supp_sample.txt"))
           .when(col("p_partkey") % 200 === 0, concat(lit("batch_"), col("p_partkey"), lit(".seg")))
           .otherwise(concat(lit("maf_"), col("p_partkey"), lit(".txt"))).as("name"))
-      // P30 types each name through the upload registry, as
-      // ProcessJob.duplicatedFiles does
+      // P30 types each name through the upload registry and compares
+      // with ProcessJob's limits, as ProcessJob.duplicatedFiles does
       import graft.formats.FileType
       val typeOf = udf((name: String) => FileType.of(name).map(_.key).orNull)
       val p30 = uploads.withColumn("__type", typeOf(col("name"))).agg(
         sum(when(col("__type").isin(FileType.ClinicalSample.key, FileType.ClinicalPatient.key), 1L)
           .otherwise(0L)).as("nc"),
         sum(when(col("__type") === FileType.Seg.key, 1L).otherwise(0L)).as("ns"))
-        .select((col("nc") > 2).cast("long").as("clinical_dup_flag"),
-          (col("ns") > 1).cast("long").as("seg_dup_flag"))
+        .select((col("nc") > graft.apps.ProcessJob.MaxClinicalFiles).cast("long").as("clinical_dup_flag"),
+          (col("ns") > graft.apps.ProcessJob.MaxSegFiles).cast("long").as("seg_dup_flag"))
       skip.agg(count(lit(1)).as("n_skip"))
         .crossJoin(reval.agg(count(lit(1)).as("n_revalidate")))
         .crossJoin(withErr.agg(count(lit(1)).as("n_with_errors")))

@@ -40,14 +40,20 @@ object ProcessJob {
     in.getMessageDigest.digest().map("%02x".format(_)).mkString
   }
 
-  /** P30: duplicate-filename detection — more than 2 clinical files or
-    * more than 1 seg file.
+  /** P30 limits: the clinical (sample + patient) and seg files one
+    * upload may hold.
+    */
+  val MaxClinicalFiles = 2
+  val MaxSegFiles = 1
+
+  /** P30: duplicate-filename detection — more than [[MaxClinicalFiles]]
+    * clinical files or more than [[MaxSegFiles]] seg files.
     */
   def duplicatedFiles(names: Seq[String]): Seq[String] = {
     def ofTypes(ts: FileType*) = names.filter(FileType.of(_).exists(ts.contains))
     val clin = ofTypes(FileType.ClinicalSample, FileType.ClinicalPatient)
     val seg  = ofTypes(FileType.Seg)
-    (if (clin.length > 2) clin else Nil) ++ (if (seg.length > 1) seg else Nil)
+    (if (clin.length > MaxClinicalFiles) clin else Nil) ++ (if (seg.length > MaxSegFiles) seg else Nil)
   }
 
   /** What one check found: the (name, md5) of each file it covers and,

@@ -97,8 +97,9 @@ object Fan {
     * order is. Every other failure is attached as suppressed.
     *
     * Nesting: a thunk may itself call `overlap` (a per-file check whose
-    * validator overlaps its own actions), so up to `parallelism`²
-    * pool threads run at once. An inner call joins the overlap group
+    * validator overlaps its own actions, each a rule battery that
+    * overlaps its rule and key aggregations), so every level multiplies
+    * the pool threads that run at once by up to `parallelism`. An inner call joins the overlap group
     * its thread inherited instead of opening a new one, so a failure at
     * either level cancels the jobs of both: an inner failure stops an
     * outer sibling's running job, and the outer call's cancel stops the
@@ -182,10 +183,4 @@ object Fan {
         if (outer.isEmpty) cancellers.remove(group)
       }
     }
-
-  /** [[overlap]] of two independent actions with different result types. */
-  def overlap2[A, B](a: => A, b: => B): (A, B) = {
-    val Seq(x, y) = overlap(Seq[() => Any](() => a, () => b))
-    (x.asInstanceOf[A], y.asInstanceOf[B])
-  }
 }

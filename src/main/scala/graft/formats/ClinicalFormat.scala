@@ -3,7 +3,7 @@ package graft.formats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.rules.{RowRule, Rules, ValidationResult}
+import graft.rules.{DuplicateKey, RowRule, Rules, ValidationResult}
 
 /** Clinical (sample + patient) format: validator + processor
   * (SURVEY §2.2 P1-P12, §2.1 S2; reference clinical.py).
@@ -151,6 +151,23 @@ object ClinicalFormat {
         requires = Seq("INT_CONTACT", "YEAR_CONTACT")))
   }
 
+  /** P10 gendered primaries (clinical.py:969-970): a sample whose
+    * oncotree PRIMARY node is one of these needs SEX 1 (male) or 2
+    * (female).
+    */
+  val maleOncoCodes: Seq[String]  = Seq("TESTIS", "PROSTATE", "PENIS")
+  val womenOncoCodes: Seq[String] = Seq("CERVIX", "VULVA", "UTERUS", "OVARY")
+
+  /** P10 SEX-vs-cancer conflict (clinical.py:985-1016) over a row with
+    * the oncotree PRIMARY_CODE (not the sample's own code) and SEX: an
+    * empty or non-numeric SEX conflicts (pandas NaN != 1.0 is True).
+    */
+  val sexConflict: Column = {
+    val sexD = expr("try_cast(SEX as double)")
+    (col("PRIMARY_CODE").isInCollection(maleOncoCodes) && !(sexD <=> 1.0)) ||
+      (col("PRIMARY_CODE").isInCollection(womenOncoCodes) && !(sexD <=> 2.0))
+  }
+
   /** P10 (clinical.py:630-691): oncotree membership (case-insensitive)
     * + SEX vs gendered-cancer-type conflicts, via the broadcast map.
     */
@@ -168,23 +185,14 @@ object ClinicalFormat {
     val nUnmapped = unmappedRow.getAs[Long]("n")
     val unmappedCodes = unmappedRow.getAs[scala.collection.Seq[String]]("codes").toSeq
 
-    // SEX-vs-cancer check (clinical.py:969-970, 985-1016): match the
-    // oncotree PRIMARY node (not the sample's own code) against the
-    // reference's gendered-primary lists; a SEX that is empty / non-numeric
-    // counts as a conflict (pandas NaN != 1.0 is True).
-    val maleOncoCodes  = Seq("TESTIS", "PROSTATE", "PENIS")      // SEX must be 1
-    val womenOncoCodes = Seq("CERVIX", "VULVA", "UTERUS", "OVARY") // SEX must be 2
     val (conflicts, conflictIds) =
       if (!patient.columns.contains("SEX")) (0L, Seq.empty[String])
       else {
-        val sexD = expr("try_cast(SEX as double)")
         val row = sample
           .select(col("SAMPLE_ID"), col("PATIENT_ID"), upper(col("ONCOTREE_CODE")).as("ONCOTREE_CODE"))
           .join(broadcast(oncotree.select("ONCOTREE_CODE", "PRIMARY_CODE")), Seq("ONCOTREE_CODE"))
           .join(patient.select("PATIENT_ID", "SEX"), Seq("PATIENT_ID"))
-          .filter(
-            (col("PRIMARY_CODE").isInCollection(maleOncoCodes) && !(sexD <=> 1.0)) ||
-              (col("PRIMARY_CODE").isInCollection(womenOncoCodes) && !(sexD <=> 2.0)))
+          .filter(sexConflict)
           .agg(count(lit(1)).as("n"),
             sort_array(collect_set(col("SAMPLE_ID"))).as("ids")).head()
         (row.getAs[Long]("n"), row.getAs[scala.collection.Seq[String]]("ids").toSeq)
@@ -202,9 +210,9 @@ object ClinicalFormat {
   }
 
   /** Full validate: schema checks + one-pass row battery over the
-    * sample/patient pair. Its four Spark actions (sample battery,
-    * patient battery, duplicate SAMPLE_ID, orphan anti-join) are
-    * independent and run overlapped ([[graft.core.Fan.overlap]]).
+    * sample/patient pair. Its three Spark actions (sample battery keyed
+    * on SAMPLE_ID, patient battery, orphan anti-join) are independent
+    * and run overlapped ([[graft.core.Fan.overlap]]).
     */
   def validate(sample: DataFrame, patient: DataFrame, center: String): ValidationResult = {
     import graft.rules.Finding
@@ -221,12 +229,11 @@ object ClinicalFormat {
       Seq("SEQ_DATE").filter(c => sample.columns.map(_.toUpperCase).contains(c)).map(c =>
         Finding(s"deprecated_col_$c", "error", 1, None,
           s"Sample Clinical File: $c is now deprecated. Please remove."))
-    // P11: duplicated SAMPLE_ID (clinical.py:855-858)
-    def dupFinding: Finding = {
-      val dupSamples =
-        if (!sample.columns.contains("SAMPLE_ID")) 0L
-        else sample.groupBy("SAMPLE_ID").count().filter(col("count") > 1).count()
-      Finding("duplicate_sample_id", "error", dupSamples, None,
+    // the sample battery's key is P11: duplicated SAMPLE_ID (clinical.py:855-858)
+    def sampleFindings: Seq[Finding] = {
+      val key = Option.when(sample.columns.contains("SAMPLE_ID"))(DuplicateKey(Seq(col("SAMPLE_ID"))))
+      val battery = Rules.Battery.run(sample, sampleRules(center), key)
+      battery.result.findings :+ Finding("duplicate_sample_id", "error", battery.dups.groups, None,
         "Sample Clinical File: No duplicated SAMPLE_ID allowed.\n" +
           "If there are no duplicated SAMPLE_IDs, and both sample and patient files are uploaded, " +
           "then please check to make sure no duplicated PATIENT_IDs exist in the patient clinical file.")
@@ -250,13 +257,13 @@ object ClinicalFormat {
             s"and no null patient ids allowed. These samples are missing patient data: ${ids.mkString(", ")}")
       }
 
-    // the four actions are independent: overlapped, findings in this order
-    val actions = graft.core.Fan.overlap(Seq[() => Seq[Finding]](
-      () => Rules.Battery.run(sample, sampleRules(center)).findings,
+    // the three actions are independent: overlapped; the duplicate
+    // finding prints after the patient battery's
+    val Seq(sampleFs :+ dup, patientFs, orphans) = graft.core.Fan.overlap(Seq[() => Seq[Finding]](
+      () => sampleFindings,
       () => Rules.Battery.run(patient, patientRules(center)).findings,
-      () => Seq(dupFinding),
       () => Seq(orphanFinding)))
-    ValidationResult(schemaFindings ++ actions.flatten)
+    ValidationResult(schemaFindings ++ sampleFs ++ patientFs ++ (dup +: orphans))
   }
 
   /** pandas-int normalization (update_clinical clinical.py:421-448 +

@@ -3,6 +3,8 @@ package graft.formats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.rules.{DuplicateKey, RowRule, Rules}
+
 /** CNA (copy-number) matrix format (SURVEY §1.1 matrix table, §2.2 P21,
   * §2.5 A7, §2.4 J2; reference cna.py).
   *
@@ -28,12 +30,14 @@ object CnaFormat {
         s"stack(${sampleCols.length}, $stackExpr) as (SAMPLE_ID, VALUE)")
   }
 
+  /** P21: a long-form VALUE outside the domain. */
+  val invalidValue: Column =
+    col("VALUE").isNotNull && !col("VALUE").cast("double").isInCollection(allowedValues)
+
   /** P21: value-domain violations (long form — one filter, no per-column
     * loop).
     */
-  def invalidValues(long: DataFrame): DataFrame =
-    long.filter(col("VALUE").isNotNull &&
-      !col("VALUE").cast("double").isInCollection(allowedValues))
+  def invalidValues(long: DataFrame): DataFrame = long.filter(invalidValue)
 
   /** P21 (cna.py:178-279): full CNA validation — first-column name,
     * sample-column identifiers, value domain over the melted long form
@@ -63,10 +67,8 @@ object CnaFormat {
 
     if (sampleCols.nonEmpty) {
       val long = melt(wide.select((wide.columns.head +: sampleCols).toIndexedSeq.map(col): _*))
-      val nBad = invalidValues(long).count()
-      if (nBad > 0)
-        findings :+= Finding("value_domain", "error", nBad, None,
-          "All values must be NA/blank, -2, -1.5, -1, -0.5, 0, 0.5, 1, 1.5, or 2.")
+      findings ++= Rules.Battery.run(long, Seq(RowRule("value_domain", "error", invalidValue,
+        Rules.noExample, "All values must be NA/blank, -2, -1.5, -1, -0.5, 0, 0.5, 1, 1.5, or 2."))).findings
     }
 
     bedGenes.foreach { bed =>
@@ -79,15 +81,10 @@ object CnaFormat {
           col("clean") === col("__b2"), "left")
         .withColumn("remapped", coalesce(col("remapped"), col("__b2")))
         .filter(col("remapped").isNotNull)
-      val dupRow = mapped.groupBy("remapped").count().filter(col("count") > 1)
-        .agg(coalesce(sum(col("count")), lit(0L)).as("n"),
-          sort_array(collect_set(col("remapped"))).as("syms")).head()
-      val nDup = dupRow.getAs[Long]("n")
-      if (nDup > 0) {
-        val syms = dupRow.getAs[scala.collection.Seq[String]]("syms").mkString(",")
-        findings :+= Finding("duplicate_symbols_after_remap", "error", nDup, None,
-          s"Your CNA file has duplicated Hugo_Symbols (After remapping of genes): -> $syms.")
-      }
+      val dups = Rules.Battery.run(mapped, Nil,
+        Some(DuplicateKey(Seq(col("remapped")), Some(col("remapped"))))).dups
+      findings :+= Finding("duplicate_symbols_after_remap", "error", dups.rowsInGroups, None,
+        s"Your CNA file has duplicated Hugo_Symbols (After remapping of genes): -> ${dups.listed.mkString(",")}.")
     }
     graft.rules.ValidationResult(findings)
   }

@@ -3,11 +3,12 @@ package graft.formats
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.rules.{RowRule, Rules, ValidationResult}
+import graft.rules.{DuplicateKey, RowRule, Rules, ValidationResult}
 
 /** MAF format validator (SURVEY §2.2 P13-P17; reference maf.py).
-  * One-pass battery; the global cross-column allele checks (P17) are
-  * bool aggregates folded into the same aggregation.
+  * One-pass battery keyed on the primary key; the global cross-column
+  * allele check (P17) is a bool aggregate folded into the same
+  * aggregation.
   */
 object MafFormat {
 
@@ -61,9 +62,7 @@ object MafFormat {
   }
 
   /** `sp` mirrors the reference's special-prep flag (maf.py:303): SP
-    * centers are exempt from the T_DEPTH/T_REF_COUNT requirement. The
-    * two Spark actions (battery + P17 extras, duplicate-PK groups) are
-    * independent and run overlapped ([[graft.core.Fan.overlap2]]).
+    * centers are exempt from the T_DEPTH/T_REF_COUNT requirement.
     */
   def validate(maf: DataFrame, center: String, sp: Boolean = false): ValidationResult = {
     import graft.rules.Finding
@@ -78,29 +77,16 @@ object MafFormat {
     if (missing.nonEmpty) return ValidationResult(schemaFindings)
 
     // ONE scan: the whole row battery + the P17 cross-column bool
-    // aggregates (maf.py:14-123) fold into the same aggregation
-    def batteryWithExtras = Rules.Battery.runWithExtras(maf, rowRules(center), Seq(
-      bool_and(coalesce(col("TUMOR_SEQ_ALLELE2") === col("REFERENCE_ALLELE"), lit(false))).as("tsa2_always_ref"),
-      bool_or(coalesce(col("REFERENCE_ALLELE") === col("TUMOR_SEQ_ALLELE2"), lit(false))).as("any_ref_eq_tsa2")))
-
-    // P14: duplicate variants on the 5-col PK (maf.py:273-299) — the one
-    // unavoidable shuffle (groupBy on the key)
-    def duplicateVariants: Finding = {
-      val pk = primaryKey.map(c => trim(col(c)).as(c))
-      val dupGroups = maf.groupBy(pk: _*).count().filter(col("count") > 1)
-      // one action: duplicate-group count + offending barcodes together
-      val dupRow = dupGroups.agg(
-        count(lit(1)).as("n"),
-        sort_array(collect_set(col("TUMOR_SAMPLE_BARCODE"))).as("samples")).head()
-      val dups = dupRow.getAs[Long]("n")
-      val dupSamples = dupRow.getAs[scala.collection.Seq[String]]("samples").toSeq
-      Finding("duplicate_variants", "error", dups, dupSamples.headOption,
-        "maf: Must not have duplicated variants. Samples with duplicated variants: " +
-          dupSamples.mkString(", "))
-    }
-
-    // the two actions are independent: overlapped
-    val ((battery, extras), dupFinding) = graft.core.Fan.overlap2(batteryWithExtras, duplicateVariants)
+    // aggregate (maf.py:14-123); P14: duplicate variants on the trimmed
+    // 5-col PK (maf.py:273-299), the offending barcodes listed
+    val battery = Rules.Battery.run(maf, rowRules(center),
+      Some(DuplicateKey(primaryKey.map(c => trim(col(c)).as(c)), Some(col("TUMOR_SAMPLE_BARCODE")))),
+      Seq(bool_and(coalesce(col("TUMOR_SEQ_ALLELE2") === col("REFERENCE_ALLELE"), lit(false)))
+        .as("tsa2_always_ref")))
+    val dupSamples = battery.dups.listed
+    val dupFinding = Finding("duplicate_variants", "error", battery.dups.groups, dupSamples.headOption,
+      "maf: Must not have duplicated variants. Samples with duplicated variants: " +
+        dupSamples.mkString(", "))
 
     // maf.py:301-304: without T_DEPTH there must at least be T_REF_COUNT
     val depthFindings =
@@ -109,12 +95,12 @@ object MafFormat {
           "maf: If missing T_DEPTH, must have T_REF_COUNT!"))
       else Nil
 
-    val tsa2AlwaysRef = extras.get("tsa2_always_ref")
+    val tsa2AlwaysRef = battery.extras.get("tsa2_always_ref")
       .collect { case b: Boolean => b }.getOrElse(false)
     val p17 = Finding("tsa2_equals_ref_everywhere", "error",
       if (tsa2AlwaysRef) 1 else 0, None,
       "Mutation: TUMOR_SEQ_ALLELE2 equals REFERENCE_ALLELE on every row — wrong column mapping")
 
-    ValidationResult(schemaFindings ++ battery.findings ++ depthFindings :+ dupFinding :+ p17)
+    ValidationResult(schemaFindings ++ battery.result.findings ++ depthFindings :+ dupFinding :+ p17)
   }
 }

@@ -3,7 +3,7 @@ package graft.formats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.rules.{CrossFileChecks, Finding, ValidationResult}
+import graft.rules.{CrossFileChecks, Finding, RowRule, Rules, ValidationResult}
 
 /** Validator for the mutations-in-cis filter file
   * (`mutationsInCis_filtered_samples.csv`, genie_registry/
@@ -16,7 +16,7 @@ import graft.rules.{CrossFileChecks, Finding, ValidationResult}
   *    [[CrossFileChecks.unknownCisVariants]] so the comparison is a
   *    distributed anti-join on the concatenated key, never a collect;
   *  - GENIE identifier prefix/length on Tumor_Sample_Barcode
-  *    (process_functions.py:199-222), evaluated in ONE aggregation pass.
+  *    (process_functions.py:199-222), a one-pass rule battery.
   */
 object MutationsInCisFormat {
 
@@ -46,18 +46,13 @@ object MutationsInCisFormat {
 
     if (df.columns.contains("Tumor_Sample_Barcode")) {
       val id = col("Tumor_Sample_Barcode")
-      val row = df.agg(
-        sum(when(!coalesce(id.startsWith(s"GENIE-$center"), lit(false)), 1L)
-          .otherwise(0L)).as("bad_prefix"),
-        sum(when(length(id) >= 50, 1L).otherwise(0L)).as("too_long")).head()
-      val badPrefix = Option(row.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val tooLong   = Option(row.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (badPrefix > 0)
-        findings :+= Finding("identifier_prefix", "error", badPrefix, None,
-          s"Mutations In Cis Filter File: TUMOR_SAMPLE_BARCODE must start with GENIE-$center")
-      if (tooLong > 0)
-        findings :+= Finding("identifier_length", "error", tooLong, None,
-          "Mutations In Cis Filter File: TUMOR_SAMPLE_BARCODE must have less than 50 characters.")
+      findings ++= Rules.Battery.run(df, Seq(
+        RowRule("identifier_prefix", "error",
+          !coalesce(id.startsWith(s"GENIE-$center"), lit(false)), Rules.noExample,
+          s"Mutations In Cis Filter File: TUMOR_SAMPLE_BARCODE must start with GENIE-$center"),
+        RowRule("identifier_length", "error", length(id) >= 50, Rules.noExample,
+          "Mutations In Cis Filter File: TUMOR_SAMPLE_BARCODE must have less than 50 characters."))
+      ).findings
     }
 
     ValidationResult(findings)

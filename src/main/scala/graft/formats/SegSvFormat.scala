@@ -3,7 +3,7 @@ package graft.formats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.rules.{RowRule, Rules, ValidationResult}
+import graft.rules.{DuplicateKey, RowRule, Rules, ValidationResult}
 
 /** SEG + SV format validators (SURVEY §2.2 P22, P14; reference seg.py,
   * structural_variant.py). Small rule sets; same one-pass battery.
@@ -61,12 +61,10 @@ object SegFormat {
         s"Your seg file is missing these headers: ${missing.mkString(", ")}."))
     if (missing.nonEmpty) ValidationResult(schemaFindings.toSeq)
     else {
-      // the row count rides the battery's single aggregation
-      val (battery, extras) = Rules.Battery.runWithExtras(seg, rowRules(center),
-        Seq(count(lit(1)).as("n_rows")))
-      // P14: exact duplicate rows
-      val dups = extras("n_rows").asInstanceOf[Long] - seg.dropDuplicates().count()
-      ValidationResult(battery.findings :+
+      // P14: exact duplicate rows, the battery's all-columns key
+      val battery = Rules.Battery.run(seg, rowRules(center), Some(DuplicateKey(Rules.allColumns(seg))))
+      val dups = battery.dups.excessRows
+      ValidationResult(battery.result.findings :+
         Finding("duplicate_rows", "warning", dups, None, s"Seg: $dups duplicated rows"))
     }
   }
@@ -84,14 +82,14 @@ object SvFormat {
     if (!sv.columns.map(_.toUpperCase).contains(idCol))
       return ValidationResult(Seq(Finding("missing_col_SAMPLE_ID", "error", 1, None,
         "SV: missing required column SAMPLE_ID")))
-    // the row count rides the battery's single aggregation
-    val (battery, extras) = Rules.Battery.runWithExtras(sv, Seq(
+    // full-row duplicates: the battery's all-columns key
+    val battery = Rules.Battery.run(sv, Seq(
       RowRule("sample_id_prefix", "error",
         Rules.badIdentifier(col(idCol), s"GENIE-$center"), col(idCol),
         s"SV: SAMPLE_ID must start with GENIE-$center ({count} rows, e.g. {example})")),
-      Seq(count(lit(1)).as("n_rows")))
-    val dups = extras("n_rows").asInstanceOf[Long] - sv.dropDuplicates().count()
-    ValidationResult(battery.findings :+
+      Some(DuplicateKey(Rules.allColumns(sv))))
+    val dups = battery.dups.excessRows
+    ValidationResult(battery.result.findings :+
       Finding("duplicate_rows", "error", dups, None, s"SV: $dups duplicated rows"))
   }
 

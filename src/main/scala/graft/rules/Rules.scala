@@ -1,9 +1,10 @@
 package graft.rules
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Validation-rule framework (SURVEY §2.2 P1-P30).
+/** Validation-rule framework (SURVEY §2.2 P1-P30): the one place that
+  * turns the upload validators' predicates into counts.
   *
   * Reference shape: each check scans the frame and appends to an error /
   * warning string (example_filetype_format.py:223-271). Naive translation
@@ -14,6 +15,13 @@ import org.apache.spark.sql.functions._
   * per rule. At 100 TB that is a single scan with map-side partial
   * aggregation and a 1-row result — no collect of violating rows, no
   * per-rule job.
+  *
+  * A battery may also carry one [[DuplicateKey]] (SURVEY P14/A1: MAF,
+  * VCF, SV, SEG, clinical and CNA each count rows sharing a key). The
+  * key is a grouped aggregation of its own, overlapped with the rule
+  * aggregation ([[graft.core.Fan.overlap]]): it shuffles only the key
+  * columns, where folding the rule partials into the grouping would
+  * shuffle rows × rules.
   */
 final case class Finding(rule: String, severity: String, count: Long,
                          example: Option[String], message: String)
@@ -39,7 +47,27 @@ final case class RowRule(name: String, severity: String, violation: Column,
   }
 }
 
+/** A battery's duplicate-key check: rows with equal `key` values form a
+  * group (null keys group together, as in `dropDuplicates`). `listed`,
+  * an expression over the key's named columns, is collected over the
+  * duplicated groups.
+  */
+final case class DuplicateKey(key: Seq[Column], listed: Option[Column] = None)
+
+/** What a [[DuplicateKey]] found: the duplicated groups (n > 1), the
+  * excess rows (Σ n−1 over them), the rows inside them, and the distinct
+  * non-null `listed` values over them, sorted.
+  */
+final case class Duplicates(groups: Long, excessRows: Long, rowsInGroups: Long, listed: Seq[String])
+
 object Rules {
+
+  /** The example key of a rule whose finding names no example. */
+  val noExample: Column = lit(null).cast("string")
+
+  /** Every column of `df`, quoted: the key of a whole-row duplicate check. */
+  def allColumns(df: DataFrame): Seq[Column] =
+    df.columns.toSeq.map(c => col(s"`${c.replace("`", "``")}`"))
 
   // ---- predicate builders (the P-library) -------------------------------
 
@@ -106,36 +134,59 @@ object Rules {
   // ---- the single-pass battery ------------------------------------------
 
   object Battery {
+
+    /** A keyed battery's findings, its key's duplicates (all zero without
+      * a key) and its extra aggregates by name.
+      */
+    final case class Outcome(result: ValidationResult, dups: Duplicates, extras: Map[String, Any])
+
     /** Evaluate all rules in one aggregation over `df`; rules touching
       * absent columns are skipped.
       */
     def run(df: DataFrame, allRules: Seq[RowRule]): ValidationResult =
-      runWithExtras(df, allRules, Nil)._1
+      run(df, allRules, None).result
 
-    /** Battery + caller-supplied extra aggregates (e.g. the MAF P17
-      * cross-column bool aggs) in the SAME single scan. The extras
-      * arrive back as a name→value map from the one result row.
+    /** The battery plus `key`'s duplicate count, two independent actions
+      * run overlapped. `extras` (the MAF P17 cross-column bool aggs)
+      * fold into the rule aggregation, the SAME single scan, and come
+      * back as a name→value map.
       */
-    def runWithExtras(df: DataFrame, allRules: Seq[RowRule],
-                      extras: Seq[Column]): (ValidationResult, Map[String, Any]) = {
+    def run(df: DataFrame, allRules: Seq[RowRule], key: Option[DuplicateKey],
+            extras: Seq[Column] = Nil): Outcome = {
       val rules = allRules.filter(_.applicableTo(df.columns.toSeq))
-      if (rules.isEmpty && extras.isEmpty) return (ValidationResult(Nil), Map.empty)
       val aggs = rules.zipWithIndex.flatMap { case (r, i) =>
         Seq(
           sum(when(r.violation, 1L).otherwise(0L)).as(s"c$i"),
           min(when(r.violation, r.exampleKey.cast("string"))).as(s"e$i")
         )
       } ++ extras
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      val findings = rules.zipWithIndex.map { case (r, i) =>
+      val ruleAction = if (aggs.isEmpty) None else Some(() => df.agg(aggs.head, aggs.tail: _*).head())
+      val keyAction = key.map(k => () => duplicates(df, k))
+      val rows = graft.core.Fan.overlap((ruleAction ++ keyAction).toSeq)
+      val ruleRow = ruleAction.map(_ => rows.head)
+      val findings = ruleRow.toSeq.flatMap(row => rules.zipWithIndex.map { case (r, i) =>
         val n  = Option(row.getAs[Long](s"c$i")).getOrElse(0L)
         val ex = Option(row.getAs[String](s"e$i"))
         Finding(r.name, r.severity, n, ex,
           r.messageTemplate.replace("{count}", n.toString).replace("{example}", ex.getOrElse("")))
-      }
-      val extraVals = row.schema.fieldNames.drop(rules.length * 2)
-        .map(n => n -> row.getAs[Any](n)).toMap
-      (ValidationResult(findings), extraVals)
+      })
+      val extraVals = ruleRow.toSeq.flatMap(row => row.schema.fieldNames.drop(rules.length * 2)
+        .map(n => n -> row.getAs[Any](n))).toMap
+      val dups = keyAction.map(_ => rows.last)
+        .fold(Duplicates(0, 0, 0, Nil))(r => Duplicates(r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getSeq[String](3).toSeq))
+      Outcome(ValidationResult(findings), dups, extraVals)
+    }
+
+    /** One grouped aggregation by the key, then a 1-row aggregation over
+      * its duplicated groups.
+      */
+    private def duplicates(df: DataFrame, k: DuplicateKey): Row = {
+      val n = col("__n")
+      df.groupBy(k.key: _*).agg(count(lit(1)).as("__n")).filter(n > 1)
+        .agg(count(lit(1)), coalesce(sum(n - 1), lit(0L)), coalesce(sum(n), lit(0L)),
+          sort_array(collect_set(k.listed.getOrElse(noExample).cast("string"))))
+        .head()
     }
 
     /** Battery as a DataFrame (for pipelines that persist findings):

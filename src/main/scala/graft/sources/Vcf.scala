@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.rules.{DuplicateKey, Finding, RowRule, Rules, ValidationResult}
 
 /** VCF reader (SURVEY §2.1 S4; reference vcf.py:32-91).
   *
@@ -50,48 +52,18 @@ object Vcf {
     }: _*)
   }
 
-  /** Per-row whitespace smell count (vcf.py:13-15, 166-169): number of
-    * rows where any column value contains a space.
-    */
-  def whitespaceViolations(df: DataFrame): Long = {
-    val anySpace = df.columns.map(c => coalesce(col(c).cast("string").contains(" "), lit(false)))
-      .reduce(_ || _)
-    df.filter(anySpace).count()
-  }
-
   /** P20 (vcf.py:92-275): structured validation of a read VCF frame
     * (columns as [[read]] yields them — '#' stripped from CHROM).
     * Messages verbatim from the reference, including the 10/11-column
     * tumor/normal sample rules.
     */
-  def validate(df: DataFrame, center: String): graft.rules.ValidationResult = {
-    import graft.rules.Finding
+  def validate(df: DataFrame, center: String): ValidationResult = {
     val cols = df.columns.toSeq
     var findings = Vector.empty[Finding]
-    def add(rule: String, sev: String, count: Long, msg: String): Unit =
-      findings :+= Finding(rule, sev, count, None, msg)
+    def add(rule: String, msg: String): Unit =
+      findings :+= Finding(rule, "error", 1, None, msg)
 
-    val required = Seq("CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO", "FORMAT")
-    if (!required.forall(cols.contains)) {
-      add("missing_headers", "error", 1,
-        "vcf: Must have these headers: CHROM, POS, ID, REF, ALT, QUAL, FILTER, INFO, FORMAT.")
-    } else {
-      val dupCount = df.groupBy("CHROM", "POS", "REF", "ALT").count()
-        .filter(col("count") > 1).count()
-      if (dupCount > 0)
-        add("duplicate_variants", "error", dupCount, "vcf: Must not have duplicate variants.")
-      val aggRow = df.agg(
-        sum(when(col("CHROM").isNull || col("POS").isNull, 1L).otherwise(0L)).as("n_cp"),
-        sum(when(col("FORMAT").isNull, 1L).otherwise(0L)).as("n_fmt")).head()
-      if (aggRow.getAs[Long]("n_cp") > 0)
-        add("space_delimited", "error", aggRow.getAs[Long]("n_cp"),
-          "vcf: May contain rows that are space delimited instead of tab delimited.")
-      if (aggRow.getAs[Long]("n_fmt") > 0)
-        add("format_missing_values", "error", aggRow.getAs[Long]("n_fmt"),
-          "vcf: Must not have missing values in FORMAT column.")
-    }
-
-    // tumor/normal column-count rules (vcf.py:215-275)
+    // tumor/normal column-count rules (vcf.py:215-275): column names only
     def genieIdErrs(id: String, colDesc: String): Seq[String] = {
       val prefix = if (!id.startsWith(s"GENIE-$center"))
         Seq(s"vcf: $colDesc must start with GENIE-$center") else Nil
@@ -102,41 +74,56 @@ object Vcf {
     var sampleId: Option[String] = None
     var normalId: Option[String] = None
     if (cols.length > 11)
-      add("too_many_columns", "error", 1,
+      add("too_many_columns",
         "vcf: Should not have more than 11 columns. Only single sample or " +
           "matched tumor normal vcf files are accepted.")
     else if (cols.length == 11) {
       sampleId = Some(cols(cols.length - 2)); normalId = Some(cols.last)
       genieIdErrs(sampleId.get, "tumor sample column")
-        .foreach(m => add("tumor_sample_column", "error", 1, m))
+        .foreach(m => add("tumor_sample_column", m))
       genieIdErrs(normalId.get, "normal sample column")
-        .foreach(m => add("normal_sample_column", "error", 1, m))
+        .foreach(m => add("normal_sample_column", m))
     } else if (cols.length == 10) {
       if (!cols.contains("TUMOR")) {
         sampleId = Some(cols.last)
         val errs = genieIdErrs(sampleId.get, "tumor sample column")
         if (errs.nonEmpty)
-          add("tumor_sample_column", "error", 1, errs.mkString(" ") +
+          add("tumor_sample_column", errs.mkString(" ") +
             " if vcf represents a single sample and TUMOR is not the sample column header.")
       } else sampleId = Some("TUMOR")
     } else
-      add("too_few_columns", "error", 1,
+      add("too_few_columns",
         "vcf: Must have at least 10 columns. If the vcf represents a single " +
           "sample, then it's missing a tumor sample column. If the vcf " +
           "represents a matched tumor normal, then it's missing both normal " +
           "sample and tumor sample columns.")
 
-    (sampleId.toSeq ++ normalId.toSeq).filter(cols.contains).foreach { c =>
-      val n = df.filter(col(c).isNull).count()
-      if (n > 0)
-        add(s"missing_values_${c.toLowerCase}", "error", n,
-          s"vcf: Must not have missing values in $c column.")
-    }
-
-    val ws = whitespaceViolations(df)
-    if (ws > 0)
-      add("whitespace", "warning", ws,
+    // one battery: the header-gated row rules and duplicate key, then
+    // the sample-column nulls and the whitespace smell (vcf.py:13-15,
+    // 166-169)
+    def rule(name: String, sev: String, violation: Column, msg: String) =
+      RowRule(name, sev, violation, Rules.noExample, msg)
+    val headered = Seq("CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO", "FORMAT")
+      .forall(cols.contains)
+    val headerRules = if (!headered) Nil else Seq(
+      rule("space_delimited", "error", col("CHROM").isNull || col("POS").isNull,
+        "vcf: May contain rows that are space delimited instead of tab delimited."),
+      rule("format_missing_values", "error", col("FORMAT").isNull,
+        "vcf: Must not have missing values in FORMAT column."))
+    val valueRules = (sampleId.toSeq ++ normalId.toSeq).filter(cols.contains).map(c =>
+      rule(s"missing_values_${c.toLowerCase}", "error", col(c).isNull,
+        s"vcf: Must not have missing values in $c column.")) :+
+      rule("whitespace", "warning",
+        cols.map(c => coalesce(col(c).cast("string").contains(" "), lit(false))).reduce(_ || _),
         "vcf: Should not have any white spaces in any of the columns.")
-    graft.rules.ValidationResult(findings)
+    val battery = Rules.Battery.run(df, headerRules ++ valueRules,
+      Option.when(headered)(DuplicateKey(Seq("CHROM", "POS", "REF", "ALT").map(col))))
+    val (headerFindings, valueFindings) = battery.result.findings.splitAt(headerRules.length)
+    val headerChecks =
+      if (headered) Finding("duplicate_variants", "error", battery.dups.groups, None,
+        "vcf: Must not have duplicate variants.") +: headerFindings
+      else Seq(Finding("missing_headers", "error", 1, None,
+        "vcf: Must have these headers: CHROM, POS, ID, REF, ALT, QUAL, FILTER, INFO, FORMAT."))
+    ValidationResult(headerChecks ++ findings ++ valueFindings)
   }
 }

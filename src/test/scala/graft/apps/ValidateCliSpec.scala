@@ -132,4 +132,29 @@ class ValidateCliSpec extends SparkSpec {
       "sampleRetraction.csv info retraction_ids: 1 ids to retract"))
     assert(captured() == ((anyError, out)), "two runs printed different bytes")
   }
+
+  test("run: malformed VCF, headered BED and foreign cis barcodes print their findings") {
+    val dir = tmpDir("validate-cli-malformed")
+    write(dir, "GENIE-C-0001.vcf",
+      "##fileformat=VCFv4.2\n" + "1\t100\trs1\tA\tT\t.\tPASS\tDP=4\n")
+    write(dir, "C_panel.bed",
+      "Chromosome\tStart\tEnd\tGene\tPanel\n" + "1\t10\t500\tTP53\ttrue\n")
+    write(dir, "mutationsInCis_filtered_samples.csv",
+      "Flag,Center,Tumor_Sample_Barcode,Hugo_Symbol,HGVSp_Short," +
+        "Variant_Classification,Chromosome,Start_Position,Reference_Allele," +
+        "Tumor_Seq_Allele2,t_alt_count_num,t_depth\n" +
+        "flag,C,GENIE-X-p1-s1,TP53,p.V600E,Missense,1,100,A,T,10,30\n" +
+        "flag,C,GENIE-X-p2-s1,KRAS,p.G12D,Missense,12,200,C,T,8,40\n")
+    val buf = new java.io.ByteArrayOutputStream()
+    val anyError = Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+      ValidateCli.run(spark, "C", dir)
+    }
+    assert(anyError)
+    assert(buf.toString("UTF-8").replace(dir, "<dir>").linesIterator.toSeq == Seq(
+      "C_panel.bed error bed_header: <dir>/C_panel.bed: first BED value 'Chromosome' " +
+        "looks like a header \u2014 BED files are headerless",
+      "GENIE-C-0001.vcf error not_vcf: <dir>/GENIE-C-0001.vcf: no #CHROM header line \u2014 not a VCF",
+      "mutationsInCis_filtered_samples.csv error identifier_prefix: " +
+        "Mutations In Cis Filter File: TUMOR_SAMPLE_BARCODE must start with GENIE-C"))
+  }
 }

@@ -22,6 +22,26 @@ class RulesSpec extends SparkSpec {
     assert(res.warnings.head.count == 1)
   }
 
+  test("battery duplicate key: groups, excess rows, rows in groups and listed values") {
+    // key k: b x3, a x2, null x2, c x1; whole rows: (b,1), (a,1) and (null,1) twice each
+    val df = Seq[(String, String)](("b", "1"), ("b", "1"), ("b", "2"), ("a", "1"), ("a", "1"),
+      (null, "1"), (null, "1"), ("c", "1")).toDF("k", "v")
+    val keyed = Rules.Battery.run(df,
+      Seq(RowRule("v_two", "warning", col("v") === "2", col("k"), "{count} rows, e.g. {example}")),
+      Some(DuplicateKey(Seq(col("k")), Some(col("k")))))
+    // null keys group together; the listed values are distinct, sorted, non-null
+    assert(keyed.dups == Duplicates(groups = 3, excessRows = 4, rowsInGroups = 7, listed = Seq("a", "b")))
+    assert(keyed.result.findings == Seq(Finding("v_two", "warning", 1, Some("b"), "1 rows, e.g. b")))
+
+    val whole = Rules.Battery.run(df, Nil, Some(DuplicateKey(Rules.allColumns(df)))).dups
+    assert(whole == Duplicates(3, 3, 6, Nil))
+    assert(whole.excessRows == df.count() - df.dropDuplicates().count())
+
+    val empty = Rules.Battery.run(df.limit(0), Nil, Some(DuplicateKey(Seq(col("k")), Some(col("k")))))
+    assert(empty.dups == Duplicates(0, 0, 0, Nil))
+    assert(empty.result.findings.isEmpty)
+  }
+
   test("predicates: integer / allele / chromosome / year") {
     val df = Seq("123", "-4", "1.5", "abc").toDF("x")
     assert(df.filter(Rules.notInteger(col("x"))).count() == 2)

@@ -173,6 +173,35 @@ class SourcesSpec extends SparkSpec {
     assert(Vcf.validate(ten, "CTR").isValid)
   }
 
+  test("P20: VCF row findings keep their counts and order") {
+    import graft.rules.Finding
+    // 11 columns: a well-formed tumor column and a foreign normal column
+    val vcf = Seq[(String, String, String, String, String, String, String, String, String, String, String)](
+      ("1", "100", "rs1", "A", "T", ".", "PASS", "DP=4", "GT", "0/1", "0/0"),
+      ("1", "100", "rs1", "A", "T", ".", "PASS", "DP=4", "GT", "0/1", "0/0"),    // duplicate variant
+      (null, "200", "rs2", "A", "T", ".", "PASS", "DP=5", "GT", "0/1", "0/0"),   // space delimited
+      ("1 300 rs3", null, "rs3", "A", "T", ".", "PASS", "DP=6", "GT", "0/1", "0/0"), // space delimited + whitespace
+      ("2", "400", "rs4", "G", "C", ".", "PASS", "DP=7", null, null, "0/0"),     // FORMAT + tumor missing
+      ("2", "500", "rs5", "G", "C", ".", "PASS", "DP 8", "GT", null, null)       // tumor + normal missing, whitespace
+    ).toDF("CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO", "FORMAT",
+      "GENIE-CTR-1-1", "NOTGENIE")
+    val fired = graft.sources.Vcf.validate(vcf, "CTR").findings.filter(_.count > 0)
+    assert(fired == Seq(
+      Finding("duplicate_variants", "error", 1, None, "vcf: Must not have duplicate variants."),
+      Finding("space_delimited", "error", 2, None,
+        "vcf: May contain rows that are space delimited instead of tab delimited."),
+      Finding("format_missing_values", "error", 1, None,
+        "vcf: Must not have missing values in FORMAT column."),
+      Finding("normal_sample_column", "error", 1, None,
+        "vcf: normal sample column must start with GENIE-CTR"),
+      Finding("missing_values_genie-ctr-1-1", "error", 2, None,
+        "vcf: Must not have missing values in GENIE-CTR-1-1 column."),
+      Finding("missing_values_notgenie", "error", 1, None,
+        "vcf: Must not have missing values in NOTGENIE column."),
+      Finding("whitespace", "warning", 2, None,
+        "vcf: Should not have any white spaces in any of the columns.")))
+  }
+
   test("meta sinks + versioned release folder make a structurally complete release") {
     import java.nio.file.{Files, Paths}
     val base = tmpDir("release-folder")
